@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.LongType
+import graft.sources.Tables
 
 /** Distributed global rank — the single-partition-window killer.
   *
@@ -38,12 +39,6 @@ object GlobalRank {
     * CPU — 16 µs/row). */
   private val RowsPerRankTask = 25000L
 
-  private def rangeParts(spark: org.apache.spark.sql.SparkSession,
-      n: Long): Int =
-    math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      (n + RowsPerRankTask - 1L) / RowsPerRankTask)).toInt
-
   def withRank0AndCount(df: DataFrame, rankCol: String,
       sortCols: Column*): (DataFrame, Long) = {
     val spark = df.sparkSession
@@ -63,7 +58,7 @@ object GlobalRank {
     // so the output is bit-identical at any partition count.
     val mat = df.localCheckpoint()
     val n = mat.count()
-    val np = rangeParts(spark, n)
+    val np = Tables.width(spark, n, RowsPerRankTask)
     // The checkpoint inherits its producer's AQE-coalesced layout —
     // usually ONE partition at fixture scale — and the range
     // exchange's MAP side (serialize + bound-search every row) runs
@@ -141,7 +136,7 @@ object GlobalRank {
     // withRank0 (the count is one job over the checkpoint above),
     // with the same pre-spread of the checkpoint's map side — prefix
     // sums are likewise split-point-independent
-    val npS = rangeParts(spark, tagged.count())
+    val npS = Tables.width(spark, tagged.count(), RowsPerRankTask)
     val srcS = if (npS > 1) tagged.repartition(npS) else tagged
     val parts = srcS.repartitionByRange(npS, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)

@@ -14,8 +14,12 @@ import graft.sources.Tables
   *    blocking keys (lang, source) — never N² across the corpus;
   *  - MinHash+LSH: near-dup candidates via band-bucket join — the
   *    100 TB path: cost ∝ Σ bucket², tunable via bands×rows;
-  *  - SimHash: 64-bit fingerprint, near-dups = hamming proximity via
-  *    chunk-collision join (no pairwise scan).
+  *  - SimHash: 60- or 80-bit fingerprint under a cross-engine-exact
+  *    hash family, near-dups = hamming proximity via chunk-collision
+  *    join (no pairwise scan).
+  *
+  * Every bucket self-join and Jaccard verify goes through
+  * [[PairJoin]].
   */
 object DedupOps {
 
@@ -38,9 +42,6 @@ object DedupOps {
     * round-robin. */
   private def spread(df: DataFrame): DataFrame =
     graft.sources.Tables.spread(df)
-
-  private def parallelism(df: DataFrame): Int =
-    df.sparkSession.sparkContext.defaultParallelism
 
   /** Exact duplicate summary: hash-groupBy on full text. */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
@@ -451,34 +452,14 @@ object DedupOps {
     val sigs = minhashSignaturesFromSets(spread(docs(spark, dir)),
       array_distinct(tokenHashes(col("text"))), k = 32,
       carry = Seq("lang", "source"))
-    // keyed NUMBERED repartition AFTER the checkpoint (r15): a
-    // localCheckpoint drops the plan's outputPartitioning (the
-    // executed plan re-exchanged BOTH self-join sides and AQE then
-    // byte-coalesced the pair expansion to a few tasks), so the old
-    // pre-checkpoint repartition was a wasted exchange. Placed above
-    // the checkpoint it is planned once, reused by both aliases
-    // (ReusedExchange), and — being REPARTITION_BY_NUM — is exempt
-    // from AQE coalescing, so the CPU-dense bucket join keeps full
-    // width.
-    val banded = lshBands(sigs, k = 32, bands = 16,
-      carry = Seq("lang", "source"))
-      .localCheckpoint()
-      .repartition(parallelism(sigs), col("band"), col("bh"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.lang") === col("y.lang") &&
-          col("x.source") === col("y.source") &&
-          col("x.doc_id") < col("y.doc_id"))
+    val cands = PairJoin.buckets(lshBands(sigs, k = 32, bands = 16,
+        carry = Seq("lang", "source")), "band", "bh")
+      .pairs(col("x.lang") === col("y.lang") &&
+        col("x.source") === col("y.source") &&
+        col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
       .distinct()
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("ti"), col("tj"))
-    val uni = size(col("ti")) + size(col("tj")) - inter
-    cands
-      .join(d.select(col("doc_id").as("i"), col("toks").as("ti")), Seq("i"))
-      .join(d.select(col("doc_id").as("j"), col("toks").as("tj")), Seq("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    PairJoin.jaccard(cands, "toks", d, d)
       .filter(col("jaccard") >= 0.8)
       .orderBy(col("i"), col("j"))
   }
@@ -662,30 +643,13 @@ object DedupOps {
     * Then exact shingle-Jaccard verification ≥ `threshold`. */
   def minhashPairs(d: DataFrame, k: Int = 32, bands: Int = 8,
       threshold: Double = 0.5): DataFrame = {
-    val sigs = minhashSignatures(d, k)
-    // materialized once; the NUMBERED bucket-key repartition sits
-    // ABOVE the checkpoint (r15 — a localCheckpoint drops
-    // outputPartitioning, so the r6 "no exchange" claim had silently
-    // regressed to re-exchanging both join sides and AQE coalesced
-    // the pair expansion to 3 tasks): one non-coalescible exchange,
-    // reused by both aliases, full-width join
-    val banded = lshBands(sigs, k, bands)
-      .localCheckpoint()
-      .repartition(parallelism(sigs), col("band"), col("bh"))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
+    val cands = PairJoin.buckets(lshBands(minhashSignatures(d, k), k, bands),
+        "band", "bh")
+      .pairs(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
       .distinct()
     val sh = shingleSets(d).localCheckpoint()
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("si"), col("sj"))
-    val uni = size(col("si")) + size(col("sj")) - inter
-    cands
-      .join(sh.select(col("doc_id").as("i"), col("shs").as("si")), Seq("i"))
-      .join(sh.select(col("doc_id").as("j"), col("shs").as("sj")), Seq("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    PairJoin.jaccard(cands, "shs", sh, sh)
       .filter(col("jaccard") >= threshold)
   }
 
@@ -743,55 +707,11 @@ object DedupOps {
       |SELECT i, j, jaccard FROM p WHERE jaccard >= 0.5
       |ORDER BY i, j""".stripMargin
 
-  // ---------------- SimHash ----------------------------------------
-
-  /** 64-bit SimHash over token hashes: sign-sum of each bit across
-    * token xxhash64s. Linear: explode + groupBy + bit fold. */
-  def simhash(d: DataFrame): DataFrame = {
-    val toks = d.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    // per bit: +1 if set else -1; sum > 0 → bit set in fingerprint
-    val bitSums: Seq[Column] = (0 until 64).map { b =>
-      sum(when(col("h").bitwiseAND(lit(1L << b)) =!= 0L, 1).otherwise(-1))
-        .as(s"b$b")
-    }
-    toks.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until 64).map(b =>
-          when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("simhash"))
-  }
-
-  /** Near-dup candidates: hamming distance ≤ 3 found by colliding on
-    * any of four 16-bit chunks (pigeonhole: ≤3 differing bits leave at
-    * least one chunk identical). */
-  def simhashPairs(d: DataFrame, maxHamming: Int = 3): DataFrame = {
-    val s = simhash(d)
-    val chunked = s.select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c =>
-        shiftrightunsigned(col("simhash"), c * 16)
-          .bitwiseAND(lit(0xFFFFL))): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-    val popcountDiff = {
-      val x = col("x.simhash").bitwiseXOR(col("y.simhash"))
-      bit_count(x)
-    }
-    chunked.as("x").join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        popcountDiff.as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
   // -------- SimHash under a cross-engine-exact hash family --------
   //
-  // The xxhash64 path above is the production fingerprint (one hash
-  // per token, no joins). It cannot be oracled: DuckDB has no
-  // xxhash64. This variant runs the SAME algorithm under a hash
-  // family both engines compute bit-identically — token → vocab rank
+  // A per-token xxhash64 fingerprint cannot be oracled: DuckDB has no
+  // xxhash64. This SimHash runs under a hash family both engines
+  // compute bit-identically — token → vocab rank
   // (row_number over the sorted distinct vocabulary; binary UTF-8
   // ordering on both engines) → two QUADRATIC permutation-style
   // hashes over Z_P (the affine seeded_sample family is linear, so
@@ -807,8 +727,7 @@ object DedupOps {
   // rank-offsets job ([[graft.functions.GlobalRank]], r11 — the
   // earlier global row_number window funneled the corpus-growing
   // vocabulary, ~10⁷ rows at 100 TB, through one task); everything
-  // else is the linear explode + groupBy + chunk-join shape of the
-  // production path.
+  // else is a linear explode + groupBy + chunk-join.
 
   val SimhashOracleBits = 60
   val SimhashOracleMaxHamming = 3
@@ -860,23 +779,13 @@ object DedupOps {
   /** Complete hamming-≤3 pair list: four 15-bit chunk collisions
     * (pigeonhole-complete) + exact bit_count verify. */
   def simhashOraclePairs(d: DataFrame): DataFrame = {
-    val s = simhashOracle(d)
-    // one fingerprint row per doc, materialized once and co-partitioned
-    // on the chunk-bucket key for an exchange-free self-join (r6)
-    val chunked = s.select(col("doc_id"), col("simhash"),
+    val chunked = simhashOracle(d).select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(c =>
         shiftrightunsigned(col("simhash"), c * 15)
           .bitwiseAND(lit(0x7FFFL))): _*)))
       .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-      .localCheckpoint()
-      // numbered repartition ABOVE the checkpoint (r15): checkpoints
-      // drop outputPartitioning, so the r6 co-partitioning claim had
-      // regressed to two fresh AQE-coalescible exchanges; this one is
-      // reused by both aliases and keeps the chunk join full-width
-      .repartition(parallelism(s), col("chunk"), col("cv"))
-    chunked.as("x").join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
+    PairJoin.buckets(chunked, "chunk", "cv")
+      .pairs(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
           .cast("long").as("hamming"))
@@ -971,22 +880,16 @@ object DedupOps {
     * bit_count verify. Same co-partitioned exchange-free self-join
     * shape as [[simhashOraclePairs]]. */
   def simhashWidePairs(d: DataFrame): DataFrame = {
-    val s = simhashWide(d)
     val m = (1L << SimhashWideChunkBits) - 1
-    val chunked = s.select(col("doc_id"), col("sh_lo"), col("sh_hi"),
-      posexplode(array(
+    val chunked = simhashWide(d).select(col("doc_id"), col("sh_lo"),
+      col("sh_hi"), posexplode(array(
         col("sh_lo").bitwiseAND(lit(m)),
         shiftrightunsigned(col("sh_lo"), 20).bitwiseAND(lit(m)),
         shiftrightunsigned(col("sh_lo"), 40).bitwiseAND(lit(m)),
         col("sh_hi").bitwiseAND(lit(m)))))
       .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-      .localCheckpoint()
-      // repartition above the checkpoint — same r15 fix as
-      // simhashOraclePairs (checkpoints drop outputPartitioning)
-      .repartition(parallelism(s), col("chunk"), col("cv"))
-    chunked.as("x").join(chunked.as("y"),
-        col("x.chunk") === col("y.chunk") && col("x.cv") === col("y.cv") &&
-          col("x.doc_id") < col("y.doc_id"))
+    PairJoin.buckets(chunked, "chunk", "cv")
+      .pairs(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
         (bit_count(col("x.sh_lo").bitwiseXOR(col("y.sh_lo"))) +
           bit_count(col("x.sh_hi").bitwiseXOR(col("y.sh_hi"))))
@@ -1726,17 +1629,8 @@ object DedupOps {
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh"))
       .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("live_id"))
       .distinct()
-    val shN = shingleSets(newDocs)
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("si"), col("sj"))
-    val uni = size(col("si")) + size(col("sj")) - inter
-    cands
-      .join(shN.select(col("doc_id").as("new_id"), col("shs").as("si")),
-        Seq("new_id"))
-      .join(idx.shingles.select(col("doc_id").as("live_id"),
-        col("shs").as("sj")), Seq("live_id"))
-      .select(col("new_id"), col("live_id"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    PairJoin.jaccard(cands, "shs", shingleSets(newDocs), idx.shingles,
+        "new_id", "live_id")
       .filter(col("jaccard") >= threshold)
   }
 
@@ -1894,9 +1788,9 @@ object DedupOps {
       .filter(size(col("ts")) >= 3)
     // Same duplicated-prep pathology the prefix join had (r6): grams
     // is planned under BOTH the df-filter subtree and the join's left
-    // side, and rare under THREE consumers (pair join a/b + the na
-    // agg) — each AQE stage build re-ran the shingle hashing from the
-    // scan. Materialize each once.
+    // side, and rare under THREE consumers (both pair-join sides +
+    // the na agg) — each AQE stage build re-ran the shingle hashing
+    // from the scan. Materialize each once.
     val grams = d
       .select(col("doc_id"), explode(shingleHashes64(col("ts"))).as("sh"))
       .distinct()
@@ -1905,23 +1799,14 @@ object DedupOps {
       .agg(count(lit(1)).as("df"))
       .filter(col("df") <= cap)
       .select(col("sh"))
-    // hash-partitioned by the join key AFTER the checkpoint (r15: a
-    // localCheckpoint does NOT preserve outputPartitioning as the old
-    // comment claimed — the executed plan re-exchanged both self-join
-    // sides). The NUMBERED repartition is planned once, reused by
-    // both aliases, and is exempt from AQE coalescing — left to AQE,
-    // the few-MB shuffle coalesces to a few partitions and the
-    // Σ min(df,cap)² pair expansion loses its parallelism (the r6
-    // single-thread pathology, measured then at 1.8 s of the row's
-    // 4 s).
-    val rare = grams.join(rareSh, Seq("sh"))
-      .localCheckpoint()
-      .repartition(parallelism(grams), col("sh"))
-    val na = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("na"))
-    val shared = rare.as("a")
-      .join(rare.as("b"), col("a.sh") === col("b.sh") &&
-        col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+    // bucketed by the join key at full width: left to AQE, the few-MB
+    // shuffle coalesces to a few partitions and the Σ min(df,cap)²
+    // pair expansion loses its parallelism (the r6 single-thread
+    // pathology, measured then at 1.8 s of the row's 4 s)
+    val rare = PairJoin.buckets(grams.join(rareSh, Seq("sh")), "sh")
+    val na = rare.rows.groupBy(col("doc_id")).agg(count(lit(1)).as("na"))
+    val shared = rare.pairs(col("x.doc_id") =!= col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
       .agg(count(lit(1)).as("shared"))
     shared
       .join(na.withColumnRenamed("doc_id", "a_id"), Seq("a_id"))
@@ -2008,30 +1893,15 @@ object DedupOps {
     // ksOfHist idiom: reference-tracked blocks, freed by the
     // ContextCleaner, unlike an unpaired persist) materializes each
     // ONCE and all four consumers read the cached rows.
-    val prefixC = prefix
-      .localCheckpoint()
-      // repartition above the checkpoint — same r15 fix as the other
-      // bucket self-joins (checkpoints drop outputPartitioning)
-      .repartition(parallelism(prefix), col("h"))
-    val cands = prefixC.as("a").join(prefixC.as("b"),
-        col("a.h") === col("b.h") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          col("a.s") * tauNum <= col("b.s") * tauDen &&
-          col("b.s") * tauNum <= col("a.s") * tauDen)
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
+    val cands = PairJoin.buckets(prefix, "h")
+      .pairs(col("x.doc_id") < col("y.doc_id") &&
+        col("x.s") * tauNum <= col("y.s") * tauDen &&
+        col("y.s") * tauNum <= col("x.s") * tauDen)
+      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
       .distinct()
     val sorted = base.select(col("doc_id"), sort_array(col("hs")).as("toks"))
       .localCheckpoint()
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("ti"), col("tj"))
-    val uni = size(col("ti")) + size(col("tj")) - inter
-    cands
-      .join(sorted.select(col("doc_id").as("i"), col("toks").as("ti")),
-        Seq("i"))
-      .join(sorted.select(col("doc_id").as("j"), col("toks").as("tj")),
-        Seq("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
+    PairJoin.jaccard(cands, "toks", sorted, sorted)
       .filter(col("jaccard") * tauDen >= tauNum)
       .orderBy(col("i"), col("j"))
   }

@@ -73,9 +73,7 @@ object GraphOps {
     // edge count (the count also materializes the persist, so it adds
     // no extra pass) schedules 10 × ~5 one-task stages here while a
     // 10⁹-edge corpus still gets its full defaultParallelism.
-    val loopParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      (e.count() + EdgesPerLoopTask - 1L) / EdgesPerLoopTask)).toInt
+    val loopParts = Tables.width(spark, e.count(), EdgesPerLoopTask)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("c"))
     // pre-fuse out-degree onto edges: the loop body then touches one
     // relation, shuffled once on src and reused every round

@@ -444,8 +444,6 @@ object MultimodalOps {
     * distinct() is bounded by CONTENT DIVERSITY (distinct
     * fingerprints), never by corpus size. */
   private def imageFpGraph(bmp: DataFrame): (DataFrame, DataFrame) = {
-    val spark = bmp.sparkSession
-    val np = spark.sparkContext.defaultParallelism
     // hid packs the 4×16-bit chunks into ONE bijective BIGINT (may go
     // negative via the sign bit — an arbitrary but consistent total
     // order is all the unordered-pair dedup below needs)
@@ -464,13 +462,10 @@ object MultimodalOps {
     val chunks = d.select(col("hid"), posexplode(
         array(col("c0"), col("c1"), col("c2"), col("c3"))))
       .toDF("hid", "ci", "cv")
-      .repartition(np, col("ci"), col("cv"))
-      .localCheckpoint() // both self-join sides, co-partitioned
     // ha <= hb keeps each unordered fingerprint pair once, INCLUDING
     // the A=A self-pair (identical images, hamming 0)
-    val cands = chunks.as("x").join(chunks.as("y"),
-        col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-          col("x.hid") <= col("y.hid"))
+    val cands = PairJoin.buckets(chunks, "ci", "cv")
+      .pairs(col("x.hid") <= col("y.hid"))
       .select(col("x.hid").as("ha"), col("y.hid").as("hb"))
       .distinct()
     val verified = cands
@@ -715,8 +710,6 @@ object MultimodalOps {
     * identical recordings are common in a crawl, so the audio leg gets
     * the same compaction). */
   private def audioFpGraph(wav: DataFrame): (DataFrame, DataFrame) = {
-    val spark = wav.sparkSession
-    val np = spark.sparkContext.defaultParallelism
     val hid = expr("(c0 << 16) | c1") // bijective 32-bit pack
     val h = audioFingerprint(wav)
       .filter(col("c0").isNotNull && col("c1").isNotNull)
@@ -727,11 +720,8 @@ object MultimodalOps {
     val chunks = d.select(col("hid"),
         posexplode(array(col("c0"), col("c1"))))
       .toDF("hid", "ci", "cv")
-      .repartition(np, col("ci"), col("cv"))
-      .localCheckpoint()
-    val cands = chunks.as("x").join(chunks.as("y"),
-        col("x.ci") === col("y.ci") && col("x.cv") === col("y.cv") &&
-          col("x.hid") <= col("y.hid"))
+    val cands = PairJoin.buckets(chunks, "ci", "cv")
+      .pairs(col("x.hid") <= col("y.hid"))
       .select(col("x.hid").as("ha"), col("y.hid").as("hb"))
       .distinct()
     val verified = cands
@@ -1206,10 +1196,9 @@ object MultimodalOps {
     * dedup_audio_clusters), and the gate predicate. */
   def mediaPipeline(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= 1)
-      .repartition(spark.sparkContext.defaultParallelism)
+    val base = Tables.spread(Tables.load(spark, dir, "documents")
+        .select(col("doc_id"), col("text"))
+        .filter(length(col("text")) >= 1))
       .localCheckpoint()
     val ds = base.as[(Long, String)]
     mediaPipelineOf(

@@ -126,9 +126,7 @@ object PqOps {
     // materializes `e`'s persist, which the cents init and re-rank
     // reread anyway — schedules 1-task loop stages here while a
     // 10⁹-vector corpus still gets full parallelism.
-    val esParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      (e.count() * m + RowsPerLoopTask - 1L) / RowsPerLoopTask)).toInt
+    val esParts = Tables.width(spark, e.count() * m, RowsPerLoopTask)
     val es = e.select(col("vec_id"),
         posexplode(subSlices(col("v"))).as(Seq("sm", "sv")))
       .select(col("vec_id"), col("sm").cast("long").as("m"), col("sv"))

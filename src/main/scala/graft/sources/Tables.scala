@@ -46,6 +46,12 @@ object Tables {
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
+  /** Size-adaptive task count: `n` rows at `perTask` rows a task,
+    * at least 1 and at most the session parallelism. */
+  def width(spark: SparkSession, n: Long, perTask: Long): Int =
+    math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
+      (n + perTask - 1L) / perTask)).toInt
+
   /** Projection of an events `ts` column to epoch-micros BIGINT across
     * every physical encoding the table has shipped with: TIMESTAMP /
     * TIMESTAMP_NTZ (current parquet, micros precision) and the legacy

@@ -151,22 +151,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(j01 > 0.5 && j01 < 1.0, s"near-dup jaccard was $j01")
   }
 
-  test("simhash: identical docs get identical hashes; near-dups are close") {
-    val hashes = DedupOps.simhash(plantedDocs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hashes(2L) == hashes(3L))
-    val hamming01 = java.lang.Long.bitCount(hashes(0L) ^ hashes(1L))
-    val hamming04 = java.lang.Long.bitCount(hashes(0L) ^ hashes(4L))
-    assert(hamming01 < hamming04,
-      s"near-dup hamming $hamming01 should beat unrelated $hamming04")
-  }
-
-  test("simhashPairs surfaces identical docs at hamming 0") {
-    val pairs = DedupOps.simhashPairs(plantedDocs)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
-    assert(pairs.get((2L, 3L)).contains(0))
-  }
-
   test("oracled simhash: identical docs at hamming 0, chunk candidates " +
     "equal the all-pairs hamming scan (pigeonhole completeness)") {
     val hashes = DedupOps.simhashOracle(plantedDocs)

@@ -534,6 +534,42 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("pair-join kernel: both sides of every bucket self-join read one " +
+    "numbered repartition over the checkpoint") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // the single-child chain below one join input, down to its leaf
+    def chain(p: SparkPlan): List[SparkPlan] = p match {
+      case r: ReusedExchangeExec => r :: chain(r.child)
+      case _ if p.children.size == 1 => p :: chain(p.children.head)
+      case _ => List(p)
+    }
+    def scanId(c: List[SparkPlan]) = c.last match {
+      case s: RDDScanExec => Some(s.rdd.id)
+      case _ => None
+    }
+    val bad = PlanDump.pairJoinFrames(spark, dir).flatMap { case (nm, frame) =>
+      val p = frame().queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      // a bucket self-join: both inputs are chains over ONE checkpoint
+      val sides = p.collect { case j: BaseJoinExec =>
+        Seq(chain(j.left), chain(j.right)) }
+        .filter(s => scanId(s(0)).isDefined && scanId(s(0)) == scanId(s(1)))
+        .flatten
+      val shuffles = sides.map(_.collect { case s: ShuffleExchangeExec =>
+        s.shuffleOrigin })
+      if (sides.isEmpty) Some(s"$nm: no bucket self-join in\n$p")
+      else shuffles.find(_ != Seq(REPARTITION_BY_NUM)).map(s =>
+        s"$nm: a self-join side reads $s over the checkpoint in\n$p")
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
   test("whole-stage codegen covers the word_freq pipeline") {
     val cg = operators.TextQueries.wordFreq(spark, dir)
       .queryExecution.explainString(org.apache.spark.sql.execution.CodegenMode)
