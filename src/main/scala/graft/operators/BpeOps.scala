@@ -140,18 +140,11 @@ object BpeOps {
     * unpersist it); spec paths that learn over arbitrary frames keep
     * using [[learnMerges]]/[[learnLoop]] directly. */
   private val learnerMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Int),
-      (Seq[(Int, String, String, Long)], DataFrame)]()
-
-  private[graft] def clearLearnerMemo(): Unit = learnerMemo.clear()
+    new Memo[(String, Int), (Seq[(Int, String, String, Long)], DataFrame)]
 
   private[graft] def learnedForDir(spark: SparkSession, dir: String,
-      merges: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
-    Memos.purgeStopped(learnerMemo)
-    learnerMemo.computeIfAbsent((spark, dir, merges),
-      k => learnLoop(docs(k._1, k._2), k._3))
-  }
+      merges: Int): (Seq[(Int, String, String, Long)], DataFrame) =
+    learnerMemo(spark, (dir, merges))(learnLoop(docs(spark, dir), merges))
 
   /** Registered query: the merge table as a DataFrame. Fully oracled
     * since round 7: [[bpeVocabSql]] reads the (pair, rank, count)

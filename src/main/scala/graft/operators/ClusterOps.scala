@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Embedding clustering and cluster-blocked semantic dedup (SemDeDup,
   * Abbas et al. 2023: k-means the embedding space, then near-dup only
@@ -126,24 +126,16 @@ object ClusterOps {
     * k-row-bounded — the session-scoped analog of a production
     * pipeline training its quantizer once and writing it to a table.
     * Assignment/probing stays per-query (that is the measured path). */
-  private val centroidMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Int, Int), DataFrame]()
-
-  private[graft] def clearCentroidMemo(): Unit = {
-    centroidMemo.clear(); shortlistMemo.clear(); clearAuditRefMemo()
-  }
+  private val centroidMemo = new Memo[(String, Int, Int), DataFrame]
 
   private[graft] def corpusCentroids(spark: SparkSession, dir: String,
-      k: Int, iters: Int): DataFrame = {
-    Memos.purgeStopped(centroidMemo)
-    centroidMemo.computeIfAbsent((spark, dir, k, iters), key => {
-      val e = prepared(key._1, key._2).persist()
-      val c = lloydTrain(e, key._3, key._4) // eager-checkpointed output
+      k: Int, iters: Int): DataFrame =
+    centroidMemo(spark, (dir, k, iters)) {
+      val e = prepared(spark, dir).persist()
+      val c = lloydTrain(e, k, iters) // eager-checkpointed output
       e.unpersist(blocking = false)
       c
-    })
-  }
+    }
 
   /** Lloyd k-means over quantized embeddings: [[Iters]] assignment
     * rounds with [[Iters]]−1 centroid updates between them — the
@@ -366,13 +358,11 @@ object ClusterOps {
     * shapes the probe path, so the equivalence spec's nprobe ≥ C
     * configuration shares the same index. */
   private val shortlistMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Long), (DataFrame, DataFrame)]()
+    new Memo[(String, Long), (DataFrame, DataFrame)]
 
   private[graft] def shortlistIndex(spark: SparkSession, dir: String,
-      targetClusterSize: Long): (DataFrame, DataFrame) = {
-    Memos.purgeStopped(shortlistMemo)
-    shortlistMemo.computeIfAbsent((spark, dir, targetClusterSize), key => {
+      targetClusterSize: Long): (DataFrame, DataFrame) =
+    shortlistMemo(spark, (dir, targetClusterSize)) {
       val k = scaledK(emb(spark, dir).count(), targetClusterSize)
       val fine = corpusCentroids(spark, dir, k, Iters)
       // coarse quantizer over the fine centroids themselves (k rows)
@@ -396,8 +386,7 @@ object ClusterOps {
         fineCell.select(col("ccell").as("cl")).distinct(), Seq("cl"))
         .localCheckpoint() // ≤ C rows
       (fineCell, liveCoarse)
-    })
-  }
+    }
 
   def semDedupShortlist(spark: SparkSession, dir: String,
       threshold: Double = DefaultSemDedupThreshold,
@@ -526,22 +515,12 @@ object ClusterOps {
     * what those rows measure (the [[centroidMemo]] scaladoc's
     * "assignment stays per-query" contract); only the audits consume
     * these reference memos. */
-  private val auditRefMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), DataFrame]()
-
-  private[graft] def clearAuditRefMemo(): Unit = auditRefMemo.clear()
+  private val auditRefMemo = new Memo[(String, String), DataFrame]
 
   private def auditRef(spark: SparkSession, dir: String, kind: String,
-      params: String)(build: => DataFrame): DataFrame = {
-    Memos.purgeStopped(auditRefMemo)
-    auditRefMemo.computeIfAbsent((spark, dir, kind), key =>
-      graft.sources.ArtifactStore.loadOrBuild(key._1, kind,
-        Seq(key._2,
-          graft.sources.ArtifactStore.tableFingerprint(key._1, key._2,
-            "embeddings"), params))(build)
-        .localCheckpoint())
-  }
+      params: String)(build: => DataFrame): DataFrame =
+    auditRefMemo(spark, (dir, kind))(
+      ArtifactStore.stored(spark, dir, "embeddings", kind, params)(build))
 
   /** The fully-oracled k=[[K]] reference pair set both audits check
     * against — ONE build per (corpus, params), stored. */
@@ -564,17 +543,11 @@ object ClusterOps {
     * the scaled audit's `got` and the shortlist audit's cross-
     * approximation reference. */
   private[graft] def scaledPairsFor(spark: SparkSession,
-      dir: String): DataFrame = {
-    // resolve the assignment BEFORE entering the pairs memo: the
-    // by-name build would otherwise call computeIfAbsent on the SAME
-    // ConcurrentHashMap from inside the outer computeIfAbsent's
-    // mapping function — JDK 9+ throws IllegalStateException
-    // ("Recursive update") whenever the two keys land in one hash bin
-    val asg = scaledAssignFor(spark, dir)
+      dir: String): DataFrame =
     auditRef(spark, dir, "semdedup_scaled_pairs",
       s"tcs=$TargetClusterSize,iters=$Iters,tau=$DefaultSemDedupThreshold")(
-      withinClusterPairs(spark, dir, asg, DefaultSemDedupThreshold))
-  }
+      withinClusterPairs(spark, dir, scaledAssignFor(spark, dir),
+        DefaultSemDedupThreshold))
 
   /** Registered audit row for the rows-only [[semDedupScaled]]
     * (round-7 verdict #5; r11 scale-invariant form): k is

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Document deduplication family (BASELINE.json extension surface):
   * exact, fingerprint, blocked n-gram Jaccard, MinHash+LSH, SimHash.
@@ -23,7 +23,7 @@ import graft.sources.Tables
   */
 object DedupOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
 
   /** Spread an UNSPLITTABLE input across the executors before
@@ -421,17 +421,10 @@ object DedupOps {
     * what the label chain had just materialized. The pair list is
     * output-bounded by the candidate-generation contract, so holding
     * its checkpoint is cheap at any scale. */
-  private val jaccardMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
+  private[graft] val jaccardMemo = new Memo[String, DataFrame]
 
-  private[graft] def clearJaccardMemo(): Unit = jaccardMemo.clear()
-
-  def dedupJaccard(spark: SparkSession, dir: String): DataFrame = {
-    Memos.purgeStopped(jaccardMemo)
-    jaccardMemo.computeIfAbsent((spark, dir),
-      k => dedupJaccardCompute(k._1, k._2).localCheckpoint())
-  }
+  def dedupJaccard(spark: SparkSession, dir: String): DataFrame =
+    jaccardMemo(spark, dir)(dedupJaccardCompute(spark, dir).localCheckpoint())
 
   private[graft] def dedupJaccardCompute(spark: SparkSession,
       dir: String): DataFrame = {
@@ -460,28 +453,6 @@ object DedupOps {
       .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
       .distinct()
     PairJoin.jaccard(cands, "toks", d, d)
-      .filter(col("jaccard") >= 0.8)
-      .orderBy(col("i"), col("j"))
-  }
-
-  /** The all-pairs-within-block form of [[dedupJaccard]] — kept ONLY as
-    * the spec-side ground truth (DedupSpec asserts the LSH path returns
-    * the identical pair set); block × block products do not survive a
-    * 100× scale-up, so this is never a registered driver query. */
-  def dedupJaccardAllPairs(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"), col("lang"), col("source"),
-      array_distinct(transform(split(col("text"), " "), t => xxhash64(t)))
-        .as("toks"))
-    val a = d.select(col("lang"), col("source"), col("doc_id").as("i"),
-      col("toks").as("ti"))
-    val b = d.select(col("lang"), col("source"), col("doc_id").as("j"),
-      col("toks").as("tj"))
-    val inter = size(array_intersect(col("ti"), col("tj")))
-    val uni = size(col("ti")) + size(col("tj")) - inter
-    a.join(b, Seq("lang", "source"))
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
       .orderBy(col("i"), col("j"))
   }
@@ -651,24 +622,6 @@ object DedupOps {
     val sh = shingleSets(d).localCheckpoint()
     PairJoin.jaccard(cands, "shs", sh, sh)
       .filter(col("jaccard") >= threshold)
-  }
-
-  /** SPEC-ONLY ground truth for [[dedupMinhash]]: the unbounded
-    * all-pairs 3-shingle Jaccard scan (mirrors [[dedupJaccardAllPairs]]
-    * — never registered; a corpus-wide pair scan dies at 100×). */
-  def shingleJaccardAllPairs(spark: SparkSession, dir: String,
-      threshold: Double = 0.5): DataFrame = {
-    val sh = shingleSets(docs(spark, dir))
-    val inter = graft.functions.SortedIntersectCount.count(
-      col("si"), col("sj"))
-    val uni = size(col("si")) + size(col("sj")) - inter
-    sh.select(col("doc_id").as("i"), col("shs").as("si"))
-      .join(sh.select(col("doc_id").as("j"), col("shs").as("sj")),
-        col("i") < col("j"))
-      .select(col("i"), col("j"),
-        (inter.cast("double") / uni.cast("double")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .orderBy(col("i"), col("j"))
   }
 
   /** Driver-facing MinHash query — the full corpus-wide near-dup pair
@@ -1131,13 +1084,9 @@ object DedupOps {
     * and join it from every downstream stage. Keyed by
     * (SparkSession, dir) so concurrent sessions and different
     * fixtures never share state (DedupMemoSpec pins per-directory
-    * isolation); entries hold localCheckpoint blocks, so tests that
-    * stop their session should [[clearClusterLabelMemo]]. */
-  private val labelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-
-  private[graft] def clearClusterLabelMemo(): Unit = labelMemo.clear()
+    * isolation); entries hold localCheckpoint blocks, dropped on the
+    * first access after their session stops ([[Memo]]). */
+  private[graft] val labelMemo = new Memo[String, DataFrame]
 
   /** The memoized labels relation; see [[labelMemo]]. Since round 8
     * the session memo fronts a PERSISTED parquet artifact
@@ -1149,22 +1098,10 @@ object DedupOps {
     * once shape the r7 scaladoc promised but only delivered
     * within-session). The memoized value IS the parquet-backed
     * relation, so warm and cold consumers run the same scan plan. */
-  def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    Memos.purgeStopped(labelMemo)
-    // the artifact read is localCheckpoint'd so consumers see the
-    // same materialized-relation plan whether the labels were built
-    // this session or loaded (pretrain_pipeline's zero-rescan PlanSpec
-    // pin counts parquet scans in the FINAL plan; the artifact scan
-    // belongs to prep, not to the per-query plan)
-    labelMemo.computeIfAbsent((spark, dir), k =>
-      graft.sources.ArtifactStore.loadOrBuild(k._1, "cluster_labels",
-        Seq(k._2,
-          graft.sources.ArtifactStore.tableFingerprint(k._1, k._2,
-            "documents"),
-          "jaccard=0.8"))(
-        resolveDupClusters(dedupJaccard(k._1, k._2)))
-        .localCheckpoint())
-  }
+  def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    labelMemo(spark, dir)(
+      ArtifactStore.stored(spark, dir, "documents", "cluster_labels",
+        "jaccard=0.8")(resolveDupClusters(dedupJaccard(spark, dir))))
 
   /** Driver-facing cluster resolution: near-dup pairs from the
     * (oracled) [[dedupJaccard]] contract resolved into per-doc

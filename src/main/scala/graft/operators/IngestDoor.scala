@@ -173,20 +173,15 @@ object IngestDoor {
     * built once at 100 TB); the training cost is the bench's untimed,
     * separately-reported `door_index` prep line, exactly the
     * media_fp_graphs discipline. */
-  private val sidesMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DoorIndex)]()
-
-  private[graft] def clearDoorMemo(): Unit = sidesMemo.clear()
+  private val sidesMemo = new Memo[String, (DataFrame, DoorIndex)]
 
   private[graft] def doorSidesFor(spark: SparkSession,
-      dir: String): (DataFrame, DoorIndex) = {
-    Memos.purgeStopped(sidesMemo)
-    sidesMemo.computeIfAbsent((spark, dir), key => {
+      dir: String): (DataFrame, DoorIndex) =
+    sidesMemo(spark, dir) {
       // ONE corpus scan (the media_pipeline discipline): every gate
       // reads only (doc_id, text, source), and the un-checkpointed
       // composition re-scanned the table 15× — once per stage leg
-      val d = Tables.load(key._1, key._2, "documents")
+      val d = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("text"), col("source"))
         .localCheckpoint()
       val live = d.filter(
@@ -198,8 +193,7 @@ object IngestDoor {
       Seq(idx.liveCanon, idx.liveChunks, idx.bench,
         idx.nearDup.bands, idx.nearDup.shingles).foreach(_.count())
       (d, idx)
-    })
-  }
+    }
 
   /** Re-persist + re-materialize the memoized static sides after an
     * external CacheManager flush: `spark.catalog.clearCache()` (the
@@ -212,7 +206,7 @@ object IngestDoor {
     * never prepped in this session. */
   private[graft] def rematerializeSides(spark: SparkSession,
       dir: String): Unit =
-    Option(sidesMemo.get((spark, dir))).foreach { case (_, idx) =>
+    sidesMemo.get(spark, dir).foreach { case (_, idx) =>
       Seq(idx.liveCanon, idx.liveChunks, idx.bench,
         idx.nearDup.bands, idx.nearDup.shingles).foreach { s =>
         s.persist(StorageLevel.DISK_ONLY); s.count()

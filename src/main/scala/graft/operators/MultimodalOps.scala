@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Multimodal-column plumbing (BASELINE.json extension surface):
   * image/audio/video as opaque `binary` payloads with typed metadata,
@@ -539,36 +539,22 @@ object MultimodalOps {
     * checkpointed here since [[imageFpGraph]] returns it as a plan
     * over its internal checkpoints. Frame-level APIs
     * ([[imageDedupPairs]] etc.) stay memo-free for spec fixtures. */
-  private val imageGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (DataFrame, DataFrame)]()
-  private val audioGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (DataFrame, DataFrame)]()
-
-  private[graft] def clearMediaGraphMemos(): Unit = {
-    imageGraphMemo.clear(); audioGraphMemo.clear()
-  }
+  private[graft] val imageGraphMemo = new Memo[String, (DataFrame, DataFrame)]
+  private[graft] val audioGraphMemo = new Memo[String, (DataFrame, DataFrame)]
 
   private[graft] def imageFpGraphFor(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    Memos.purgeStopped(imageGraphMemo)
-    imageGraphMemo.computeIfAbsent((spark, dir), k => {
-      val (h, v) = imageFpGraph(asBmpTable(k._1, k._2)
-        .toDF("id", "payload"))
+      dir: String): (DataFrame, DataFrame) =
+    imageGraphMemo(spark, dir) {
+      val (h, v) = imageFpGraph(asBmpTable(spark, dir).toDF("id", "payload"))
       (h, v.localCheckpoint())
-    })
-  }
+    }
 
   private[graft] def audioFpGraphFor(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    Memos.purgeStopped(audioGraphMemo)
-    audioGraphMemo.computeIfAbsent((spark, dir), k => {
-      val (h, v) = audioFpGraph(asWavTable(k._1, k._2)
-        .toDF("id", "payload"))
+      dir: String): (DataFrame, DataFrame) =
+    audioGraphMemo(spark, dir) {
+      val (h, v) = audioFpGraph(asWavTable(spark, dir).toDF("id", "payload"))
       (h, v.localCheckpoint())
-    })
-  }
+    }
 
   /** Registered query: perceptual near-dup pairs over the planted
     * corpus BMPs — multimodal columns DEDUPED, not just parsed (the
@@ -587,42 +573,22 @@ object MultimodalOps {
     * parameters; the artifact read is localCheckpoint'd so consumer
     * plans are materialized-relation-shaped whether built or loaded
     * (media_pipeline's zero-parquet-scan PlanSpec pin). */
-  private val imageLabelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-  private val audioLabelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-
-  private[graft] def clearMediaLabelMemos(): Unit = {
-    imageLabelMemo.clear(); audioLabelMemo.clear()
-  }
+  private[graft] val imageLabelMemo = new Memo[String, DataFrame]
+  private[graft] val audioLabelMemo = new Memo[String, DataFrame]
 
   private[graft] def imageClusterLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    Memos.purgeStopped(imageLabelMemo)
-    imageLabelMemo.computeIfAbsent((spark, dir), k =>
-      graft.sources.ArtifactStore.loadOrBuild(k._1, "media_labels_image",
-        Seq(k._2,
-          graft.sources.ArtifactStore.tableFingerprint(k._1, k._2,
-            "documents"),
-          s"dhash=${DHashRows}x$DHashCols,ham=$DHashMaxHamming"))(
-        (fpClusters _).tupled(imageFpGraphFor(k._1, k._2)))
-        .localCheckpoint())
-  }
+      dir: String): DataFrame =
+    imageLabelMemo(spark, dir)(
+      ArtifactStore.stored(spark, dir, "documents", "media_labels_image",
+        s"dhash=${DHashRows}x$DHashCols,ham=$DHashMaxHamming")(
+        (fpClusters _).tupled(imageFpGraphFor(spark, dir))))
 
   private[graft] def audioClusterLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    Memos.purgeStopped(audioLabelMemo)
-    audioLabelMemo.computeIfAbsent((spark, dir), k =>
-      graft.sources.ArtifactStore.loadOrBuild(k._1, "media_labels_audio",
-        Seq(k._2,
-          graft.sources.ArtifactStore.tableFingerprint(k._1, k._2,
-            "documents"),
-          s"win=$AudioWindows,ham=$AudioMaxHamming"))(
-        (fpClusters _).tupled(audioFpGraphFor(k._1, k._2)))
-        .localCheckpoint())
-  }
+      dir: String): DataFrame =
+    audioLabelMemo(spark, dir)(
+      ArtifactStore.stored(spark, dir, "documents", "media_labels_audio",
+        s"win=$AudioWindows,ham=$AudioMaxHamming")(
+        (fpClusters _).tupled(audioFpGraphFor(spark, dir))))
 
   /** Registered query: per-image near-dup CLUSTER LABELS
     * (id, keep_id, cluster_size) — one row per image with ≥1

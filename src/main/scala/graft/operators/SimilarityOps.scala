@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps
-import graft.sources.Tables
+import graft.sources.{ArtifactStore, Tables}
 
 /** Similarity search over the `embeddings` table (vec_id,
   * embedding: array<float>, label) — the approximate-nearest-neighbor
@@ -29,7 +29,7 @@ object SimilarityOps {
   val QueryCount = 8
   val K = 3
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
 
   /** Brute-force deterministic cosine top-k: for each query vector,
@@ -236,39 +236,6 @@ object SimilarityOps {
        |WHERE rank <= $NegK
        |ORDER BY q_vec_id, rank""".stripMargin
 
-  /** SPEC-ONLY ground truth: all (i < j) pairs with cosine ≥
-    * `threshold` — the unbounded exact range search. This is the
-    * oracle the bounded contracts are validated against in
-    * DedupSimilaritySpec, exactly as `dedupJaccardAllPairs` serves
-    * `dedupJaccard`. It is deliberately NOT in the driver catalog: an
-    * O(N²) cartesian pair scan is a scale-killer regardless of how
-    * evenly the tiles distribute (2k vectors → 2M pairs; 200k → 20G).
-    *
-    * Why no LSH can rescue exact low-τ search: measured on this
-    * corpus, true pairs at τ = 0.4 sit at cosine 0.40–0.60, where a
-    * random hyperplane agrees with probability only 1 − θ/π ≈ 0.63 per
-    * bit — sign-LSH needs ~24 tables of 2 bits for recall ≈ 1, which
-    * emits MORE candidate work than the N²/2 scan it replaces. Exact
-    * range search at that radius is inherently ~quadratic; production
-    * contracts must bound it (blocking key → [[dedupEmbeddingBlocked]])
-    * or raise the threshold (LSH → [[dedupEmbeddingLsh]]). */
-  def dedupEmbeddingAllPairs(spark: SparkSession, dir: String,
-      threshold: Double = 0.4): DataFrame = {
-    val e = emb(spark, dir)
-    val a = e.select(col("vec_id").as("i"),
-        VectorOps.quantize(col("embedding")).as("iv"))
-      .withColumn("ina", VectorOps.norm2Q(col("iv")))
-    val b = e.select(col("vec_id").as("j"),
-        VectorOps.quantize(col("embedding")).as("jv"))
-      .withColumn("jnb", VectorOps.norm2Q(col("jv")))
-    a.join(b, col("i") < col("j"))
-      .select(col("i"), col("j"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("iv"), col("jv")),
-          col("ina"), col("jnb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .orderBy(col("i"), col("j"))
-  }
-
   /** Registered exact embedding near-dup contract: all (i < j) pairs
     * WITHIN THE SAME `label` BLOCK with cosine ≥ `threshold` — the
     * standard blocking trick from entity resolution: exact search is
@@ -281,8 +248,8 @@ object SimilarityOps {
     * near-dups are the high-threshold LSH path's job
     * ([[dedupEmbeddingLsh]]); unblocked exact low-τ search is
     * unbounded by nature and lives only as the spec ground truth
-    * ([[dedupEmbeddingAllPairs]]). Per-pair cost is one codegen'd
-    * integer dot on pre-quantized, pre-normed vectors. */
+    * (`AllPairsReference.dedupEmbeddingAllPairs`). Per-pair cost is
+    * one codegen'd integer dot on pre-quantized, pre-normed vectors. */
   def dedupEmbeddingBlocked(spark: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
     val e = emb(spark, dir)
@@ -467,11 +434,8 @@ object SimilarityOps {
     * artifact (what `buildIvfIndex` persists for the ingest rows), so
     * materializing it once per corpus and probing it per query is the
     * honest shape, not a shortcut. Probing stays per-query. */
-  private val ivfMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Int, Long), (DataFrame, DataFrame)]()
-
-  private[graft] def clearIvfMemo(): Unit = ivfMemo.clear()
+  private[graft] val ivfMemo = new Memo[(String, Int, Long),
+    (DataFrame, DataFrame)]
 
   /** Since round 8 the session memo fronts PERSISTED parquet
     * artifacts (centroids + cell assignment — the stored IVF index a
@@ -481,26 +445,18 @@ object SimilarityOps {
     * assignment pass ([[graft.sources.ArtifactStore]]; the
     * clusterLabels treatment applied to the index). */
   private[graft] def corpusIvf(spark: SparkSession, dir: String,
-      cells: Int, seed: Long = 42L): (DataFrame, DataFrame) = {
-    Memos.purgeStopped(ivfMemo)
-    ivfMemo.computeIfAbsent((spark, dir, cells, seed), key => {
-      val fp = graft.sources.ArtifactStore.tableFingerprint(
-        key._1, key._2, "embeddings")
-      val keyParts = Seq(key._2, fp, s"cells=${key._3}", s"seed=${key._4}")
+      cells: Int, seed: Long = 42L): (DataFrame, DataFrame) =
+    ivfMemo(spark, (dir, cells, seed)) {
+      def stored(kind: String)(build: => DataFrame) =
+        ArtifactStore.stored(spark, dir, "embeddings", kind,
+          s"cells=$cells", s"seed=$seed")(build)
       // build both relations from ONE centroid subplan when cold: the
       // assignment artifact embeds the centroid choice, so the two are
-      // written inside one loadOrBuild dependency order (cents first)
-      val cents = graft.sources.ArtifactStore.loadOrBuild(key._1,
-        "ivf_cents", keyParts)(
-        ivfCentroids(emb(key._1, key._2), key._3, key._4))
-        .localCheckpoint() // materialized either way — stable plans
-      val assigned = graft.sources.ArtifactStore.loadOrBuild(key._1,
-        "ivf_assigned", keyParts)(
-        ivfAssignTo(emb(key._1, key._2), cents))
-        .localCheckpoint()
-      (cents, assigned)
-    })
-  }
+      // written in dependency order (cents first)
+      val cents = stored("ivf_cents")(
+        ivfCentroids(emb(spark, dir), cells, seed))
+      (cents, stored("ivf_assigned")(ivfAssignTo(emb(spark, dir), cents)))
+    }
 
   /** Bench PREP hook: materialize the registered-config IVF index
     * (load-or-build through the artifact store) untimed. */

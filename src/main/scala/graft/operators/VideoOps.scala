@@ -300,17 +300,12 @@ object VideoOps {
   /** Per-(session, dir) memo of the resolved video cluster labels —
     * consumed by the registered `dedup_video_clusters` row AND the
     * media_pipeline loser set (the imageClusterLabels discipline). */
-  private val videoLabelMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
-
-  private[graft] def clearVideoLabelMemo(): Unit = videoLabelMemo.clear()
+  private val videoLabelMemo = new Memo[String, DataFrame]
 
   private[graft] def videoClusterLabels(spark: SparkSession,
-      dir: String): DataFrame = {
-    Memos.purgeStopped(videoLabelMemo)
-    videoLabelMemo.computeIfAbsent((spark, dir), k => {
-      val pairs = dedupVideo(k._1, k._2).select(col("i"), col("j"))
+      dir: String): DataFrame =
+    videoLabelMemo(spark, dir) {
+      val pairs = dedupVideo(spark, dir).select(col("i"), col("j"))
       val labels = DedupOps.resolveDupClusters(pairs)
       labels.join(
           labels.groupBy(col("keep_id"))
@@ -319,8 +314,7 @@ object VideoOps {
         .select(col("doc_id").as("id"), col("keep_id"),
           col("cluster_size"))
         .localCheckpoint()
-    })
-  }
+    }
 
   /** Video near-dup CLUSTERS: the corpus-linear deliverable
     * (id, keep_id, cluster_size) a pipeline applies — connected

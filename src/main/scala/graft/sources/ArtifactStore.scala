@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * labels table / index once and every later RUN reads it. Here a
   * prep product is written as parquet under [[root]], keyed by a hash
   * of (input dir, input-table fingerprint, parameters, producer
-  * version), and `loadOrBuild` returns the parquet-backed relation —
+  * version), and [[stored]] returns the parquet-backed relation —
   * so a FRESH SparkSession (or a fresh JVM) probing the same corpus
   * pays a metadata stat + scan instead of the whole build
   * (ArtifactStoreSpec pins reuse, and the Bench `prep` block shows
@@ -104,7 +104,7 @@ object ArtifactStore {
     * but unlike the r8 (Σlen, max mtime) pair it cannot collide for a
     * re-laid-out corpus with equal totals or a same-size regeneration
     * inside mtime granularity of the max (r8 advice). */
-  def tableFingerprint(spark: SparkSession, dir: String,
+  private[graft] def tableFingerprint(spark: SparkSession, dir: String,
       table: String): String = {
     val p = new Path(s"$dir/$table.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -194,8 +194,8 @@ object ArtifactStore {
     * the cheapest time to collect old). `live` is the key about to be
     * (re)built: same-source, same-params siblings under a different
     * fingerprint are superseded by it. Never deletes `live`'s own
-    * path. keyParts convention (both producers follow it): head =
-    * source dir, apply(1) = table fingerprint, drop(2) = params. */
+    * path. Keys are built by [[stored]]: head = source dir, apply(1) =
+    * table fingerprint, drop(2) = params. */
   private[graft] def sweepKind(spark: SparkSession, kind: String,
       live: Option[Seq[String]]): Unit = {
     val kindDir = new Path(s"$root/$kind")
@@ -274,11 +274,24 @@ object ArtifactStore {
       .foreach(k => sweepKind(spark, k.getPath.getName, None))
   }
 
+  /** The stored prep product `kind` of `<dir>/<table>.parquet` under
+    * `params`, keyed (dir, table fingerprint, params…) — the order
+    * [[sweepKind]] reads — and localCheckpoint'd, so consumers see
+    * one materialized-relation plan whether it was built this session
+    * or loaded: the artifact scan belongs to prep, not to the
+    * per-query plan (the pipeline rows' PlanSpec pins count parquet
+    * scans in the final plan). */
+  def stored(spark: SparkSession, dir: String, table: String,
+      kind: String, params: String*)(build: => DataFrame): DataFrame =
+    loadOrBuild(spark, kind,
+      Seq(dir, tableFingerprint(spark, dir, table)) ++ params)(build)
+      .localCheckpoint()
+
   /** Read the artifact if it exists, else build → write → read back.
     * The returned relation is ALWAYS the parquet-backed one, so every
     * consumer scans the stored table (one plan shape whether warm or
     * cold) and no lineage to the build survives. */
-  def loadOrBuild(spark: SparkSession, kind: String,
+  private[graft] def loadOrBuild(spark: SparkSession, kind: String,
       keyParts: Seq[String])(build: => DataFrame): DataFrame = {
     val path = pathFor(kind, keyParts)
     if (!done(spark, path)) {

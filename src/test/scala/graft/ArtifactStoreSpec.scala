@@ -28,16 +28,16 @@ class ArtifactStoreSpec extends AnyFunSuite {
     "(no rebuild) with identical labels; a mutated input fingerprint " +
     "rebuilds") {
     val dir = copyOf("documents")
-    DedupOps.clearClusterLabelMemo()
-    DedupOps.clearJaccardMemo()
+    DedupOps.labelMemo.clear()
+    DedupOps.jaccardMemo.clear()
     val b0 = ArtifactStore.builds
     val first = DedupOps.clusterLabels(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(ArtifactStore.builds == b0 + 1, "cold call must build once")
     // fresh session (new memo key), memo cleared: only the artifact
     // can answer without a rebuild
-    DedupOps.clearClusterLabelMemo()
-    DedupOps.clearJaccardMemo()
+    DedupOps.labelMemo.clear()
+    DedupOps.jaccardMemo.clear()
     val s2 = spark.newSession()
     val again = DedupOps.clusterLabels(s2, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
@@ -50,8 +50,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val f = Paths.get(s"$dir/documents.parquet")
     Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
       .fromMillis(Files.getLastModifiedTime(f).toMillis + 123000L))
-    DedupOps.clearClusterLabelMemo()
-    DedupOps.clearJaccardMemo()
+    DedupOps.labelMemo.clear()
+    DedupOps.jaccardMemo.clear()
     DedupOps.clusterLabels(spark, dir).collect()
     assert(ArtifactStore.builds == b0 + 2,
       "a new input fingerprint must trigger a rebuild")
@@ -60,7 +60,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
   test("corpusIvf: centroids + assignment reload across sessions and " +
     "the probed search result is identical") {
     val dir = copyOf("embeddings")
-    SimilarityOps.clearIvfMemo()
+    SimilarityOps.ivfMemo.clear()
     val b0 = ArtifactStore.builds
     val (c1, a1) = SimilarityOps.corpusIvf(spark, dir, cells = 16)
     val cold = (c1.collect().map(_.toSeq).toSet,
@@ -68,7 +68,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(ArtifactStore.builds == b0 + 2,
       "cold IVF build writes two artifacts (cents, assigned)")
-    SimilarityOps.clearIvfMemo()
+    SimilarityOps.ivfMemo.clear()
     val s2 = spark.newSession()
     val (c2, a2) = SimilarityOps.corpusIvf(s2, dir, cells = 16)
     val warm = (c2.collect().map(_.toSeq).toSet,
@@ -84,8 +84,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     "the binary modalities)") {
     import graft.operators.MultimodalOps
     val dir = copyOf("documents")
-    MultimodalOps.clearMediaLabelMemos()
-    MultimodalOps.clearMediaGraphMemos()
+    MultimodalOps.imageLabelMemo.clear(); MultimodalOps.audioLabelMemo.clear()
+    MultimodalOps.imageGraphMemo.clear(); MultimodalOps.audioGraphMemo.clear()
     val b0 = ArtifactStore.builds
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -93,8 +93,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val aud = rows(MultimodalOps.dedupAudioClusters(spark, dir))
     assert(ArtifactStore.builds == b0 + 2,
       "cold call builds one artifact per modality")
-    MultimodalOps.clearMediaLabelMemos()
-    MultimodalOps.clearMediaGraphMemos()
+    MultimodalOps.imageLabelMemo.clear(); MultimodalOps.audioLabelMemo.clear()
+    MultimodalOps.imageGraphMemo.clear(); MultimodalOps.audioGraphMemo.clear()
     val s2 = spark.newSession()
     val img2 = rows(MultimodalOps.dedupImageClusters(s2, dir))
     val aud2 = rows(MultimodalOps.dedupAudioClusters(s2, dir))

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{ClusterOps, SimilarityOps}
+import graft.operators.ClusterOps
 
 /** Semantic gates for the k-means / SemDeDup family. The DuckDB differ
   * proves cross-engine equality; these prove the ENGINE side computes
@@ -87,7 +87,7 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("semdedup pairs are a subset of brute-force pairs; recall pinned") {
-    val brute = SimilarityOps.dedupEmbeddingAllPairs(spark, dir).collect()
+    val brute = AllPairsReference.dedupEmbeddingAllPairs(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet
     val got = ClusterOps.semDedup(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet
@@ -104,7 +104,7 @@ class ClusterSpec extends AnyFunSuite {
     // targetClusterSize ≥ N ⇒ k = 1 ⇒ the within-cluster join IS the
     // all-pairs join — blocking must be a pure candidate restriction,
     // never a change to the pair semantics
-    val brute = SimilarityOps.dedupEmbeddingAllPairs(spark, dir).collect()
+    val brute = AllPairsReference.dedupEmbeddingAllPairs(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"),
         r.getAs[Double]("cos"))).toSet
     val got = ClusterOps.semDedupScaled(spark, dir,
@@ -116,7 +116,7 @@ class ClusterSpec extends AnyFunSuite {
 
   test("semdedup_scaled at default config: subset of brute force, recall " +
     "floor holds") {
-    val brute = SimilarityOps.dedupEmbeddingAllPairs(spark, dir).collect()
+    val brute = AllPairsReference.dedupEmbeddingAllPairs(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet
     val got = ClusterOps.semDedupScaled(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet
@@ -144,7 +144,7 @@ class ClusterSpec extends AnyFunSuite {
 
   test("semdedup_shortlist at default nprobe: subset of brute force, " +
     "recall floor vs the exhaustive assignment holds") {
-    val brute = SimilarityOps.dedupEmbeddingAllPairs(spark, dir).collect()
+    val brute = AllPairsReference.dedupEmbeddingAllPairs(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet
     val exhaustive = ClusterOps.semDedupScaled(spark, dir).collect()
       .map(r => (r.getAs[Long]("i"), r.getAs[Long]("j"))).toSet

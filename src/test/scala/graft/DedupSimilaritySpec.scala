@@ -238,7 +238,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val dir = SparkFixture.Sf0001
     val lsh = DedupOps.dedupJaccard(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val brute = DedupOps.dedupJaccardAllPairs(spark, dir)
+    val brute = AllPairsReference.dedupJaccardAllPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(brute.nonEmpty, "fixture should contain near-dup pairs")
     assert(lsh == brute,
@@ -249,7 +249,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val dir = SparkFixture.Sf0001
     val lsh = DedupOps.dedupMinhash(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val brute = DedupOps.shingleJaccardAllPairs(spark, dir)
+    val brute = AllPairsReference.shingleJaccardAllPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(brute.nonEmpty, "fixture should contain J >= 0.5 shingle pairs")
     assert(lsh == brute,
@@ -266,7 +266,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // ground truth: all-pairs J >= 0.5 restricted to pairs with exactly
     // one side in the ingest batch, oriented (new, live); both-new
     // pairs are intra-batch (a batch-internal dedup's job, not this op)
-    val brute = DedupOps.shingleJaccardAllPairs(spark, dir)
+    val brute = AllPairsReference.shingleJaccardAllPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .filter { case (i, j, _) => isNew(i) ^ isNew(j) }
       .map { case (i, j, jac) =>
@@ -303,7 +303,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val e = graft.sources.Tables.load(spark, dir, "embeddings")
     val labelOf = e.select(col("vec_id"), col("label"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val brute = SimilarityOps.dedupEmbeddingAllPairs(spark, dir)
+    val brute = AllPairsReference.dedupEmbeddingAllPairs(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(brute.nonEmpty, "fixture should contain near-dup pairs")
     val expected = brute.filter { case (i, j, _) => labelOf(i) == labelOf(j) }
@@ -546,7 +546,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
   test("clusterLabels memo: same (session, dir) returns the SAME " +
     "materialized relation (the chain runs once); different dirs " +
     "never share labels") {
-    DedupOps.clearClusterLabelMemo()
+    DedupOps.labelMemo.clear()
     val a1 = DedupOps.clusterLabels(spark, SparkFixture.Sf0001)
     val a2 = DedupOps.clusterLabels(spark, SparkFixture.Sf0001)
     assert(a1 eq a2, "second call must hit the memo, not recompute")
@@ -567,22 +567,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val direct = a1.collect().map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(_._1).toSeq
     assert(viaQuery == direct)
-    DedupOps.clearClusterLabelMemo()
+    DedupOps.labelMemo.clear()
   }
 
-  test("Memos.purgeStopped keeps live-session entries (eviction only " +
-    "fires for stopped sessions — round-7 advice #5)") {
-    val m = new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), String]()
-    m.put((spark, "a"), "x")
-    m.put((spark, "b"), "y")
-    graft.operators.Memos.purgeStopped(m)
-    assert(m.size() == 2,
-      "purge must never evict entries of a live session")
-    // (the stopped-session leg can't run in-process — one SparkContext
-    // per JVM and the fixture owns it — but the predicate is exactly
-    // sparkContext.isStopped, exercised here on the live side)
-  }
 test("ivfAssign keeps exactly ONE cell per vector - the invariant " +
     "the r15 ivfSearch dropDuplicates removal rests on") {
     // ivfSearch no longer dedups (q, c) pairs after the cell join:
