@@ -1,5 +1,6 @@
 package graft.operators
 
+import java.util.UUID
 import java.util.concurrent.Executors
 
 import scala.concurrent.duration.Duration
@@ -30,24 +31,43 @@ import org.apache.spark.sql.DataFrame
   * overlap, not pre-computation.
   *
   * 2-3 jobs in flight is the guide's recommendation: enough to fill
-  * the tail, not so many that they fight for cores. */
+  * the tail, not so many that they fight for cores.
+  *
+  * Failure: the call fails fast with the FIRST failing leg's own
+  * exception. Every leg's jobs carry one job tag unique to the call,
+  * and that tag's jobs are cancelled before the error is rethrown — a
+  * failed door batch must not leave its sibling legs' jobs running on
+  * the executors (interrupting the pool thread alone does not stop a
+  * submitted job). */
 private[graft] object ConcurrentLegs {
 
   def materialize(legs: Seq[DataFrame], maxInFlight: Int = 3)
       : Seq[DataFrame] = {
     if (legs.sizeIs <= 1) legs.map(_.localCheckpoint())
     else {
+      val sc = legs.head.sparkSession.sparkContext
+      val tag = s"graft-legs-${UUID.randomUUID()}"
       val pool =
         Executors.newFixedThreadPool(math.min(maxInFlight, legs.size))
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
+      val ec = ExecutionContext.fromExecutor(pool)
       // Pool threads are created lazily on first submit, i.e. by THIS
       // thread, so Spark's InheritableThreadLocal job properties (job
-      // description/group) carry over to the concurrent legs.
+      // description/group) carry over to the concurrent legs; the tag
+      // is added inside each pool thread.
+      val runs = legs.map(l => Future {
+        sc.addJobTag(tag)
+        l.localCheckpoint()
+      }(ec))
+      // `sequence` fails as soon as any leg fails (parasitic: its own
+      // callbacks must not be scheduled on the pool being shut down)
       try Await.result(
-        Future.sequence(legs.map(l => Future(l.localCheckpoint()))),
+        Future.sequence(runs)(implicitly, ExecutionContext.parasitic),
         Duration.Inf)
-      finally pool.shutdownNow()
+      catch {
+        case e: Throwable =>
+          sc.cancelJobsWithTag(tag, "a sibling concurrent leg failed")
+          throw e
+      } finally pool.shutdownNow()
     }
   }
 }

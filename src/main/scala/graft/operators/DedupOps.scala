@@ -244,14 +244,33 @@ object DedupOps {
 
   /** The minted-and-canonicalized URL relation (doc_id, url,
     * canon_url) over any (doc_id, source, …) frame — shared VERBATIM
-    * by the batch [[dedupUrl]] row and the streaming ingest gate
-    * ([[graft.streaming.IngestStreaming]]), so the two can't drift on
-    * either the mint or the canonicalization. */
+    * by the batch [[dedupUrl]] row and the ingest URL gate
+    * ([[urlGate]]), so the two can't drift on either the mint or the
+    * canonicalization. */
   def mintedCanonUrls(d: DataFrame): DataFrame =
     d.filter(col("doc_id").isNotNull && col("source").isNotNull &&
         col("doc_id") >= 0)
       .select(col("doc_id"), mintUrl.as("url"))
       .withColumn("canon_url", canonicalizeUrl(col("url")))
+
+  /** The ingest URL gate: (doc_id, url, canon_url, url_ok) per minted
+    * arrival, `url_ok` for the min-doc_id arrival of each canonical
+    * URL whose canon is in neither `liveCanon` nor `priorCanon` (the
+    * canons admitted by earlier batches). Shared by the door's URL leg
+    * ([[IngestDoor.doorFrame]]) and the streaming URL gate
+    * ([[graft.streaming.IngestStreaming.urlDedupStream]]). */
+  def urlGate(arrivals: DataFrame, liveCanon: DataFrame,
+      priorCanon: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val seen = liveCanon.union(priorCanon.select(col("canon_url")))
+      .distinct()
+    mintedCanonUrls(arrivals)
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("canon_url")).orderBy(col("doc_id"))))
+      .join(seen.withColumn("seen", lit(true)), Seq("canon_url"), "left")
+      .select(col("doc_id"), col("url"), col("canon_url"),
+        (col("rn") === 1 && col("seen").isNull).as("url_ok"))
+  }
 
   /** [[dedupUrl]] over any (doc_id, source, …) frame — the planted-
     * corpus spec entry point. */
@@ -1907,13 +1926,33 @@ object DedupOps {
     * list, so output is |sources| rows at ANY corpus size. */
   /** (doc_id, chunk) rows of the ≥[[CdcMinLen]]-cp CDC chunks over any
     * (doc_id, text, …) frame — shared VERBATIM by the batch dup-mass
-    * row and the streaming ingest probe
-    * ([[graft.streaming.IngestStreaming.cdcIngestStream]]), so the
-    * boundary rule and the length floor cannot drift between them. */
+    * row and the ingest probe ([[cdcProbe]]), so the boundary rule and
+    * the length floor cannot drift between them. */
   def cdcBigChunks(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
         explode(graft.functions.CdcChunks.chunks(col("text"))).as("chunk"))
       .where(length(col("chunk")) >= CdcMinLen)
+
+  /** The ingest CDC probe: per arrival with at least one substantial
+    * chunk, (doc_id, n_big, dup_big, dup_ppm) — how many of its
+    * [[cdcBigChunks]] the live chunk set `liveChunks` (chunk) already
+    * holds, in parts per million. Shared by the door's CDC leg
+    * ([[IngestDoor.doorFrame]]) and the streaming CDC probe
+    * ([[graft.streaming.IngestStreaming.cdcIngestStream]]). */
+  def cdcProbe(arrivals: DataFrame, liveChunks: DataFrame): DataFrame = {
+    val ch = cdcBigChunks(arrivals)
+    val n = ch.groupBy(col("doc_id")).agg(count(lit(1)).as("n_big"))
+    val dup = ch.join(liveChunks, Seq("chunk"), "left_semi")
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("dup_big"))
+    n.join(dup, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_big"),
+        coalesce(col("dup_big"), lit(0L)).as("dup_big"))
+      .withColumn("dup_ppm", cdcDupPpm)
+  }
+
+  /** dup_big per million n_big — the CDC dup share of the batch row
+    * and the ingest probe. */
+  private def cdcDupPpm: Column = expr("dup_big * 1000000 DIV n_big")
 
   def dedupCdc(spark: SparkSession, dir: String): DataFrame = {
     val base = spread(docs(spark, dir))
@@ -1935,8 +1974,7 @@ object DedupOps {
       .select(col("source"), col("n_chunks"),
         coalesce(col("n_big"), lit(0L)).as("n_big"),
         coalesce(col("dup_big"), lit(0L)).as("dup_big"),
-        when(coalesce(col("n_big"), lit(0L)) > 0,
-          expr("dup_big * 1000000 DIV n_big")).otherwise(0L)
+        when(coalesce(col("n_big"), lit(0L)) > 0, cdcDupPpm).otherwise(0L)
           .as("dup_ppm"))
       .orderBy(col("source"))
   }

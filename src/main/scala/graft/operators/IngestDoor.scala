@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,10 +18,10 @@ import graft.sources.Tables
   *
   *   - scrub:      [[PiiOps.scrubFrame]] over [[PiiOps.mintedDocs]]
   *                 (the pii_redact row's exact projection)
-  *   - URL gate:   [[DedupOps.mintedCanonUrls]] (dedup_url's mint +
-  *                 canonicalization), first-arrival-wins vs the live
+  *   - URL gate:   [[DedupOps.urlGate]] over dedup_url's mint +
+  *                 canonicalization, first-arrival-wins vs the live
   *                 canon set and previously admitted arrivals
-  *   - CDC probe:  [[DedupOps.cdcBigChunks]] (dedup_cdc's boundary
+  *   - CDC probe:  [[DedupOps.cdcProbe]] (dedup_cdc's boundary
   *                 rule + length floor) vs the live chunk set
   *   - near-dup:   [[DedupOps.ingestPairs]] against
   *                 [[DedupOps.nearDupIndex]] (dedup_ingest verbatim)
@@ -62,7 +61,11 @@ object IngestDoor {
       liveCanon: DataFrame,   // (canon_url) distinct
       liveChunks: DataFrame,  // (chunk) distinct, ≥ CdcMinLen cps
       bench: DataFrame,       // (g) distinct benchmark shingle hashes
-      nearDup: DedupOps.NearDupIndex)
+      nearDup: DedupOps.NearDupIndex) {
+    /** Every static side, in build order. */
+    def sides: Seq[DataFrame] = Seq(liveCanon, liveChunks, bench,
+      nearDup.bands, nearDup.shingles)
+  }
 
   def doorIndex(live: DataFrame): DoorIndex = DoorIndex(
     liveCanon = DedupOps.mintedCanonUrls(live)
@@ -72,18 +75,26 @@ object IngestDoor {
     bench = TextAnalysis.benchShingles(live),
     nearDup = DedupOps.nearDupIndex(live))
 
-  /** Persist + materialize every static side (the streaming caller's
-    * build-once step). DISK_ONLY, not MEMORY_AND_DISK: at 100 TB the
-    * static sides ARE disk tables (bucketed, read per arrival), and
-    * in-process the shingle/band relations are the door's bulkiest
-    * state — holding them on heap for both the base and blow-up
-    * corpora squeezed execution memory under the heaviest probe legs
-    * (an r12 bench run OOM'd exactly there). Local-disk reads are the
-    * honest cost the production posture pays. */
+  /** Persist every static side ([[materializeIndex]] is the
+    * build-once step that also materializes them). DISK_ONLY, not
+    * MEMORY_AND_DISK: at 100 TB the static sides ARE disk tables
+    * (bucketed, read per arrival), and in-process the shingle/band
+    * relations are the door's bulkiest state — holding them on heap
+    * for both the base and blow-up corpora squeezed execution memory
+    * under the heaviest probe legs (an r12 bench run OOM'd exactly
+    * there). Local-disk reads are the honest cost the production
+    * posture pays. */
   def persistIndex(idx: DoorIndex): DoorIndex = {
-    Seq(idx.liveCanon, idx.liveChunks, idx.bench,
-      idx.nearDup.bands, idx.nearDup.shingles)
-      .foreach(_.persist(StorageLevel.DISK_ONLY))
+    idx.sides.foreach(_.persist(StorageLevel.DISK_ONLY))
+    idx
+  }
+
+  /** [[persistIndex]], then materialize every side NOW: persist alone
+    * is lazy, and a half-trained index would charge training into the
+    * first consumer (the r8 embed_probe skew) — for the stream, into
+    * its first micro-batch. */
+  private[graft] def materializeIndex(idx: DoorIndex): DoorIndex = {
+    persistIndex(idx).sides.foreach(_.count())
     idx
   }
 
@@ -101,28 +112,15 @@ object IngestDoor {
   def doorFrame(arrivals: DataFrame, idx: DoorIndex,
       priorCanon: DataFrame): DataFrame = {
     val base = arrivals.select(col("doc_id"))
-    // URL gate: first-in-batch per canon, then anti vs live ∪ prior
-    val seen = idx.liveCanon
-      .union(priorCanon.select(col("canon_url"))).distinct()
-    val urlg = DedupOps.mintedCanonUrls(arrivals)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("canon_url")).orderBy(col("doc_id"))))
-      .join(seen.withColumn("seen", lit(true)),
-        Seq("canon_url"), "left")
-      .select(col("doc_id"), col("canon_url"),
-        (col("rn") === 1 && col("seen").isNull).as("url_ok"))
+    // URL gate: first-in-batch per canon, unseen in live ∪ prior
+    val urlg = DedupOps.urlGate(arrivals, idx.liveCanon, priorCanon)
+      .select(col("doc_id"), col("canon_url"), col("url_ok"))
     // PII scrub (the pii_redact projection)
     val pii = PiiOps.scrubFrame(PiiOps.mintedDocs(arrivals))
       .select(col("doc_id"), col("n_pii"))
     // CDC probe vs the live chunk set
-    val bigA = DedupOps.cdcBigChunks(arrivals)
-    val nb = bigA.groupBy(col("doc_id")).agg(count(lit(1)).as("n_big"))
-    val db = bigA.join(idx.liveChunks, Seq("chunk"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("dup_big"))
-    val cdc = nb.join(db, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_big"),
-        expr("coalesce(dup_big, 0L) * 1000000 DIV n_big")
-          .as("cdc_dup_ppm"))
+    val cdc = DedupOps.cdcProbe(arrivals, idx.liveChunks)
+      .select(col("doc_id"), col("n_big"), col("dup_ppm").as("cdc_dup_ppm"))
     // Near-dup probe vs the band index
     val nd = DedupOps.ingestPairs(arrivals, idx.nearDup, 0.5)
       .groupBy(col("new_id").as("doc_id"))
@@ -186,13 +184,7 @@ object IngestDoor {
         .localCheckpoint()
       val live = d.filter(
         !(col("doc_id") % DedupOps.IngestMod === DedupOps.IngestRem))
-      val idx = persistIndex(doorIndex(live))
-      // materialize every side NOW: persist alone is lazy, and a
-      // half-trained index would charge training into the first
-      // timed consumer (the r8 embed_probe skew)
-      Seq(idx.liveCanon, idx.liveChunks, idx.bench,
-        idx.nearDup.bands, idx.nearDup.shingles).foreach(_.count())
-      (d, idx)
+      (d, materializeIndex(doorIndex(live)))
     }
 
   /** Re-persist + re-materialize the memoized static sides after an
@@ -207,10 +199,7 @@ object IngestDoor {
   private[graft] def rematerializeSides(spark: SparkSession,
       dir: String): Unit =
     sidesMemo.get(spark, dir).foreach { case (_, idx) =>
-      Seq(idx.liveCanon, idx.liveChunks, idx.bench,
-        idx.nearDup.bands, idx.nearDup.shingles).foreach { s =>
-        s.persist(StorageLevel.DISK_ONLY); s.count()
-      }
+      materializeIndex(idx)
     }
 
   /** Registered row: the one-shot door over the dedup_ingest arrival

@@ -370,36 +370,57 @@ object VideoOps {
     * batch frames + matched index buckets — the live corpus is never
     * re-paired against itself.
     *
+    * The live side is [[videoIndex]] and the per-arrival probe
+    * [[videoProbe]], shared with the streaming twin
+    * ([[graft.streaming.IngestStreaming.videoIngestStream]]).
     * Output: (new_id, live_id, shared_frames, jaccard_ppm) for
     * J ≥ [[VideoJaccardPpm]]. */
   def dedupVideoIngest(spark: SparkSession, dir: String): DataFrame = {
     val occ = videoFrameSets(
       asVideoTable(spark, dir).toDF("id", "payload")).localCheckpoint()
     val isNew = col("id") % VideoIngestMod === VideoIngestRem
-    val live = occ.filter(!isNew)
-    val batch = occ.filter(isNew)
-    val overCap = live.groupBy(col("fkey"))
+    videoProbe(occ.filter(isNew), videoIndex(occ.filter(!isNew)))
+      .orderBy(col("new_id"), col("live_id"))
+  }
+
+  /** The live side of the video ingest probe, over live
+    * [[videoFrameSets]] occurrences: the frames carried by more than
+    * [[VideoDfCap]] live videos (`overCap`, (fkey)), the live
+    * occurrences left after the cap (`keptLive`, (fkey, id)) and each
+    * live video's capped set size (`liveSizes`, (id, n)). */
+  final case class VideoIndex(overCap: DataFrame, keptLive: DataFrame,
+      liveSizes: DataFrame)
+
+  def videoIndex(liveOcc: DataFrame): VideoIndex = {
+    val overCap = liveOcc.groupBy(col("fkey"))
       .agg(count(lit(1)).as("df")).filter(col("df") > VideoDfCap)
       .select(col("fkey"))
-    val keptLive = live.join(overCap, Seq("fkey"), "left_anti")
-    val keptBatch = batch.join(overCap, Seq("fkey"), "left_anti")
-    val liveSizes = keptLive.groupBy(col("id")).agg(count(lit(1)).as("n"))
+    val keptLive = liveOcc.join(overCap, Seq("fkey"), "left_anti")
+    VideoIndex(overCap, keptLive,
+      keptLive.groupBy(col("id")).agg(count(lit(1)).as("n")))
+  }
+
+  /** One video ingest probe: arriving [[videoFrameSets]] occurrences
+    * against the live index, capped by the LIVE df (batch-only frames
+    * still count toward the arrival's set size). Unordered, for the
+    * streaming caller. */
+  def videoProbe(batchOcc: DataFrame, idx: VideoIndex): DataFrame = {
+    val keptBatch = batchOcc.join(idx.overCap, Seq("fkey"), "left_anti")
     val batchSizes = keptBatch.groupBy(col("id")).agg(count(lit(1)).as("n"))
     keptBatch.select(col("fkey"), col("id").as("new_id"))
-      .join(keptLive.select(col("fkey"), col("id").as("live_id")),
+      .join(idx.keptLive.select(col("fkey"), col("id").as("live_id")),
         Seq("fkey"))
       .groupBy(col("new_id"), col("live_id"))
       .agg(count(lit(1)).as("shared_frames"))
       .join(batchSizes.select(col("id").as("new_id"), col("n").as("nn")),
         Seq("new_id"))
-      .join(liveSizes.select(col("id").as("live_id"), col("n").as("nl")),
+      .join(idx.liveSizes.select(col("id").as("live_id"), col("n").as("nl")),
         Seq("live_id"))
       .withColumn("jaccard_ppm", expr(
         "1000000 * shared_frames DIV (nn + nl - shared_frames)"))
       .filter(col("jaccard_ppm") >= VideoJaccardPpm)
       .select(col("new_id"), col("live_id"), col("shared_frames"),
         col("jaccard_ppm"))
-      .orderBy(col("new_id"), col("live_id"))
   }
 
   /** Oracle: the dedup_video frame relation split into batch/live,

@@ -39,4 +39,29 @@ class ConcurrentLegsSpec extends AnyFunSuite {
     assert(m.count() == 3)
     assert(ConcurrentLegs.materialize(Nil).isEmpty)
   }
+
+  test("a failing leg surfaces its own exception and cancels its " +
+    "siblings' Spark jobs") {
+    val sc = spark.sparkContext
+    val boom = udf { (x: Long) =>
+      if (x == 3L) throw new IllegalStateException("leg boom") else x
+    }
+    val slow = udf { (x: Long) => Thread.sleep(200L); x }
+    // two 20 s sibling tasks leave two of the four local cores to the
+    // failing leg, so it fails while the sibling's job is running
+    val sibling = spark.range(0L, 200L, 1L, 2).select(slow(col("id")))
+    val failing = spark.range(0L, 8L, 1L, 2).select(boom(col("id")))
+    try {
+      val e = intercept[Throwable](
+        ConcurrentLegs.materialize(Seq(sibling, failing)))
+      val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(c => c.isInstanceOf[IllegalStateException] &&
+        c.getMessage == "leg boom"), s"not the failing leg's error: $e")
+      val deadline = System.nanoTime() + 5000000000L
+      while (sc.statusTracker.getActiveJobIds().nonEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(100L)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty,
+        "a sibling leg's job kept running after materialize threw")
+    } finally sc.cancelAllJobs()
+  }
 }

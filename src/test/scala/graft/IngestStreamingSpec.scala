@@ -480,4 +480,43 @@ class IngestStreamingSpec extends AnyFunSuite {
       "fixture probe must predict both classes")
     assert(got == want)
   }
+
+  test("maxFilesPerTrigger = 1 drains a three-file landing as three " +
+    "micro-batches (probe, reader-only and door streams)") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val d = graft.sources.Tables.load(spark, dir, "documents")
+    val isNew = col("doc_id") % DedupOps.IngestMod === DedupOps.IngestRem
+    val live = d.filter(!isNew)
+    val tmp = Files.createTempDirectory("graft_batch_per_file")
+    val landing = tmp.resolve("landing").toString
+    Files.createDirectory(java.nio.file.Paths.get(landing))
+    (0 until 3).foreach { chunk =>
+      val stage = tmp.resolve(s"stage$chunk").toString
+      d.filter(isNew && col("doc_id") % 3 === chunk)
+        .coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath,
+        java.nio.file.Paths.get(landing, s"part-$chunk.parquet"))
+    }
+    def assertThreeBatches(name: String)(
+        start: (String, String) => StreamingQuery): Unit = {
+      val q = start(tmp.resolve(s"$name-out").toString,
+        tmp.resolve(s"$name-ckpt").toString)
+      try q.awaitTermination() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3,
+        s"$name: one micro-batch per landing file, got " +
+          q.recentProgress.map(_.numInputRows).mkString(","))
+    }
+    assertThreeBatches("near-dup")((out, ckpt) =>
+      IngestStreaming.nearDupIngestStream(
+        spark, landing, live, out, ckpt, maxFilesPerTrigger = Some(1)))
+    assertThreeBatches("pii")((out, ckpt) =>
+      IngestStreaming.piiScrubStream(
+        spark, landing, out, ckpt, maxFilesPerTrigger = Some(1)))
+    assertThreeBatches("door")((out, ckpt) =>
+      IngestStreaming.ingestDoorStream(
+        spark, landing, live, out, ckpt, maxFilesPerTrigger = Some(1)))
+  }
 }
