@@ -337,14 +337,14 @@ object Bench {
         "lloyd_and_shortlist" -> (() => ClusterOps.prewarm(spark, dir)),
         "ivf_index" -> (() => SimilarityOps.prewarm(spark, dir)),
         "media_fp_graphs" -> (() => {
-          MultimodalOps.imageFpGraphFor(spark, dir)._2.count()
-          MultimodalOps.audioFpGraphFor(spark, dir)._2.count(); ()
+          MultimodalOps.imageFp.graphFor(spark, dir)._2.count()
+          MultimodalOps.audioFp.graphFor(spark, dir)._2.count(); ()
         }),
         // r9: the media cluster labels persist (ArtifactStore) — a
         // warm artifact dir shows near-zero here, the restart story
         "media_labels" -> (() => {
-          MultimodalOps.imageClusterLabels(spark, dir).count()
-          MultimodalOps.audioClusterLabels(spark, dir).count(); ()
+          MultimodalOps.imageFp.labels(spark, dir).count()
+          MultimodalOps.audioFp.labels(spark, dir).count(); ()
         }),
         // r10: the video cluster labels memo feeds dedup_video_clusters
         // AND media_pipeline — train it here so neither row's first

@@ -683,17 +683,19 @@ object DedupOps {
   //
   // A per-token xxhash64 fingerprint cannot be oracled: DuckDB has no
   // xxhash64. This SimHash runs under a hash family both engines
-  // compute bit-identically — token → vocab rank
-  // (row_number over the sorted distinct vocabulary; binary UTF-8
-  // ordering on both engines) → two QUADRATIC permutation-style
-  // hashes over Z_P (the affine seeded_sample family is linear, so
-  // composing it stays linear and consecutive ranks would get
-  // correlated bit patterns; the h² term breaks that), 30 bits each
-  // → 60-bit fingerprint. Chunk-collision candidates over four
-  // 15-bit chunks are pigeonhole-COMPLETE for hamming ≤ 3, and the
-  // verify step keeps only true pairs — so the pair list equals the
-  // all-pairs hamming scan DuckDB replays, and the row is FULLY
-  // ORACLED.
+  // compute bit-identically — token → vocab rank (binary UTF-8
+  // ordering on both engines) → one 30-bit QUADRATIC
+  // permutation-style hash over Z_P per 30 fingerprint bits (the
+  // affine seeded_sample family is linear, so composing it stays
+  // linear and consecutive ranks would get correlated bit patterns;
+  // the h² term breaks that). Pairs come from [[PairJoin.hamming]],
+  // so both rows equal the all-pairs hamming scan DuckDB replays and
+  // are FULLY ORACLED. Chunk layouts:
+  //  - dedup_simhash: 60 bits in 4×15-bit chunks;
+  //  - dedup_simhash_wide (r11, VERDICT #4): 80 bits in 4×20-bit
+  //    chunks. 15-bit chunks make RANDOM chunk collisions ∝ N²/2¹⁵ —
+  //    the measured ~3.3× structural probe ratio at 10× data; 20-bit
+  //    chunks divide that mass by 2⁵ = 32.
   //
   // Scale: the vocab rank assignment runs the DISTRIBUTED
   // rank-offsets job ([[graft.functions.GlobalRank]], r11 — the
@@ -702,7 +704,10 @@ object DedupOps {
   // else is a linear explode + groupBy + chunk-join.
 
   val SimhashOracleBits = 60
+  val SimhashOracleChunkBits = 15
   val SimhashOracleMaxHamming = 3
+  val SimhashWideBits = 80
+  val SimhashWideChunkBits = 20
 
   /** One 30-bit quadratic hash of the vocab rank: two independent
     * affine layers joined by a squaring, all mod P = 2³¹−1. Every
@@ -722,53 +727,47 @@ object DedupOps {
     s"((($h) * ($h) % $p) * $a2 + $b2 + ($h)) % $p"
   }
 
-  /** 60-bit oracled SimHash fingerprint per doc. Vocab rank via the
-    * distributed rank-offsets job ([[graft.functions.GlobalRank]]) —
-    * r11: the global `row_number()` window this used before funnels
-    * the whole vocabulary (corpus-growing; ~10⁷ rows at 100 TB)
-    * through ONE task; the range-sort rank is order-identical and
-    * distributed. */
-  def simhashOracle(d: DataFrame): DataFrame = {
+  /** The fingerprint words of a `bits`-bit SimHash as (column,
+    * width): `sh0` holds bits 0..59, `sh1` the next 60 bits. */
+  private def simhashWords(bits: Int): Seq[(String, Int)] =
+    (0 until bits by 60).map(lo => s"sh${lo / 60}" -> (bits - lo).min(60))
+
+  /** `bits`-bit oracled SimHash fingerprint per doc, as its
+    * [[simhashWords]] columns: bit b is the sign of the doc's token
+    * votes on bit b % 30 of the quadratic hash seeded 7, 19, then 31
+    * for b / 30 = 0, 1, 2. */
+  def simhash(d: DataFrame, bits: Int): DataFrame = {
     val toks = d.select(col("doc_id"),
       explode(split(col("text"), " ")).as("tok"))
-    val vocab = graft.functions.GlobalRank.withRank1(
-        toks.select(col("tok")).distinct(), "vid", col("tok"))
-      .withColumn("q0", quadHash(col("vid"), 7L))
-      .withColumn("q1", quadHash(col("vid"), 19L))
+    val vocab = Seq(7L, 19L, 31L).take((bits + 29) / 30).zipWithIndex
+      .foldLeft(graft.functions.GlobalRank.withRank1(
+        toks.select(col("tok")).distinct(), "vid", col("tok"))) {
+        case (v, (seed, q)) => v.withColumn(s"q$q", quadHash(col("vid"), seed))
+      }
     val tv = toks.join(vocab, "tok")
-    val bitSums: Seq[Column] = (0 until SimhashOracleBits).map { b =>
-      val src = if (b < 30) col("q0") else col("q1")
-      sum(when(shiftrightunsigned(src, b % 30).bitwiseAND(lit(1L)) === 1L,
-        1).otherwise(-1)).as(s"b$b")
+    val bitSums: Seq[Column] = (0 until bits).map { b =>
+      sum(when(shiftrightunsigned(col(s"q${b / 30}"), b % 30)
+        .bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)).as(s"b$b")
     }
     tv.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until SimhashOracleBits).map(b =>
-          when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("simhash"))
+      .select(col("doc_id") +: simhashWords(bits).zipWithIndex.map {
+        case ((w, width), k) => (0 until width).map(b =>
+          when(col(s"b${60 * k + b}") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_.bitwiseOR(_)).as(w)
+      }: _*)
   }
 
-  /** Complete hamming-≤3 pair list: four 15-bit chunk collisions
-    * (pigeonhole-complete) + exact bit_count verify. */
-  def simhashOraclePairs(d: DataFrame): DataFrame = {
-    val chunked = simhashOracle(d).select(col("doc_id"), col("simhash"),
-      posexplode(array((0 until 4).map(c =>
-        shiftrightunsigned(col("simhash"), c * 15)
-          .bitwiseAND(lit(0x7FFFL))): _*)))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-    PairJoin.buckets(chunked, "chunk", "cv")
-      .pairs(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
-          .cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= SimhashOracleMaxHamming)
-  }
+  /** Complete hamming-≤3 pair list over the `bits`-bit fingerprint in
+    * `chunkBits`-wide chunks. */
+  def simhashPairs(d: DataFrame, bits: Int, chunkBits: Int): DataFrame =
+    PairJoin.hamming(simhash(d, bits), "doc_id", simhashWords(bits),
+      chunkBits, SimhashOracleMaxHamming, _ < _)
 
-  /** Driver-facing SimHash query: the oracled variant's complete
+  /** Registered SimHash row: the 60-bit fingerprint's complete
     * hamming-≤3 pair list. */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    simhashOraclePairs(spread(docs(spark, dir)))
+    simhashPairs(spread(docs(spark, dir)), SimhashOracleBits,
+      SimhashOracleChunkBits)
       .select(col("i"), col("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
 
@@ -801,78 +800,10 @@ object DedupOps {
        |ORDER BY i, j""".stripMargin
   }
 
-  // -------- widened-chunk SimHash (r11, VERDICT #4) ---------------
-  //
-  // The band-widening knob the dedup_simhash row has documented since
-  // r5, registered as its own row: the 60-bit fingerprint's 4×15-bit
-  // chunks make RANDOM chunk collisions ∝ N²/2¹⁵ — the measured ~3.3×
-  // structural probe ratio at 10× data. Widening to an 80-bit
-  // fingerprint in 4×20-bit chunks divides the random-collision mass
-  // by 2⁵ = 32 while keeping the pigeonhole guarantee (4 chunks
-  // partition all 80 bits, so hamming ≤ 3 leaves ≥ 1 chunk
-  // identical — the candidate set is COMPLETE, and the exact
-  // bit_count verify keeps precision 1). Same cross-engine-exact
-  // quadratic hash family ([[quadHash]]), third seed for the high
-  // 20 bits; same distributed vocab-rank assignment
-  // ([[graft.functions.GlobalRank]]). Fully oracled — DuckDB replays
-  // the fingerprint bit-exactly and verifies by all-pairs hamming.
-
-  val SimhashWideBits = 80
-  val SimhashWideChunkBits = 20
-
-  /** 80-bit oracled SimHash fingerprint per doc: (sh_lo bits 0..59,
-    * sh_hi bits 60..79). */
-  def simhashWide(d: DataFrame): DataFrame = {
-    val toks = d.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("tok"))
-    val vocab = graft.functions.GlobalRank.withRank1(
-        toks.select(col("tok")).distinct(), "vid", col("tok"))
-      .withColumn("q0", quadHash(col("vid"), 7L))
-      .withColumn("q1", quadHash(col("vid"), 19L))
-      .withColumn("q2", quadHash(col("vid"), 31L))
-    val tv = toks.join(vocab, "tok")
-    val bitSums: Seq[Column] = (0 until SimhashWideBits).map { b =>
-      val src =
-        if (b < 30) col("q0") else if (b < 60) col("q1") else col("q2")
-      sum(when(shiftrightunsigned(src, b % 30).bitwiseAND(lit(1L)) === 1L,
-        1).otherwise(-1)).as(s"b$b")
-    }
-    tv.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until 60).map(b =>
-          when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("sh_lo"),
-        (60 until SimhashWideBits).map(b =>
-          when(col(s"b$b") > 0, lit(1L << (b - 60))).otherwise(lit(0L)))
-          .reduce(_.bitwiseOR(_)).as("sh_hi"))
-  }
-
-  /** Complete hamming-≤3 pair list over the 80-bit fingerprint: four
-    * 20-bit chunk collisions (pigeonhole-complete) + exact two-word
-    * bit_count verify. Same co-partitioned exchange-free self-join
-    * shape as [[simhashOraclePairs]]. */
-  def simhashWidePairs(d: DataFrame): DataFrame = {
-    val m = (1L << SimhashWideChunkBits) - 1
-    val chunked = simhashWide(d).select(col("doc_id"), col("sh_lo"),
-      col("sh_hi"), posexplode(array(
-        col("sh_lo").bitwiseAND(lit(m)),
-        shiftrightunsigned(col("sh_lo"), 20).bitwiseAND(lit(m)),
-        shiftrightunsigned(col("sh_lo"), 40).bitwiseAND(lit(m)),
-        col("sh_hi").bitwiseAND(lit(m)))))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
-    PairJoin.buckets(chunked, "chunk", "cv")
-      .pairs(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"),
-        (bit_count(col("x.sh_lo").bitwiseXOR(col("y.sh_lo"))) +
-          bit_count(col("x.sh_hi").bitwiseXOR(col("y.sh_hi"))))
-          .cast("long").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= SimhashOracleMaxHamming)
-  }
-
   /** Registered row: the widened-chunk SimHash pair list. */
   def dedupSimhashWide(spark: SparkSession, dir: String): DataFrame =
-    simhashWidePairs(spread(docs(spark, dir)))
+    simhashPairs(spread(docs(spark, dir)), SimhashWideBits,
+      SimhashWideChunkBits)
       .select(col("i"), col("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
 
@@ -1193,6 +1124,18 @@ object DedupOps {
       .orderBy(col("doc_id"))
   }
 
+  /** The recursive reachability closure over the pair CTE `pairs`
+    * (i, j), as two CTEs: `<pre>edges` (each pair both ways) and
+    * `<pre>reach` (a, b) for every node b reachable from a, a
+    * included — the oracle twin of [[resolveDupClusters]]. */
+  private[graft] def reachCtes(pairs: String, pre: String = ""): String =
+    s"""${pre}edges AS (
+       |  SELECT i AS a, j AS b FROM $pairs UNION ALL SELECT j, i FROM $pairs),
+       |${pre}reach(a, b) AS (
+       |  SELECT DISTINCT a, a FROM ${pre}edges
+       |  UNION
+       |  SELECT r.a, e.b FROM ${pre}reach r JOIN ${pre}edges e ON r.b = e.a)""".stripMargin
+
   val dedupKeepBestSql: String =
     s"""WITH RECURSIVE d AS (
        |  SELECT doc_id, lang, source,
@@ -1205,12 +1148,7 @@ object DedupOps {
        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
        |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
        |    >= 0.8),
-       |edges AS (
-       |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-       |reach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |${reachCtes("p")},
        |lab AS (SELECT a AS doc_id, MIN(b) AS keep_id FROM reach GROUP BY a),
        |q AS (SELECT doc_id, quality_ppm FROM
        |  (${graft.operators.TextAnalysis.qualityScoreSql}) qs),
@@ -1225,7 +1163,7 @@ object DedupOps {
        |ORDER BY doc_id""".stripMargin
 
   val dedupSoftWeightsSql: String =
-    """WITH RECURSIVE d AS (
+    s"""WITH RECURSIVE d AS (
       |  SELECT doc_id, lang, source,
       |    list_distinct(string_split(text, ' ')) AS toks
       |  FROM documents),
@@ -1236,12 +1174,7 @@ object DedupOps {
       |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
       |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
       |    >= 0.8),
-      |edges AS (
-      |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-      |reach(a, b) AS (
-      |  SELECT DISTINCT a, a FROM edges
-      |  UNION
-      |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+      |${reachCtes("p")},
       |lab AS (SELECT a AS doc_id, MIN(b) AS keep_id FROM reach GROUP BY a),
       |cl AS (
       |  SELECT doc.doc_id, COALESCE(lab.keep_id, doc.doc_id) AS cl
@@ -1254,7 +1187,7 @@ object DedupOps {
       |ORDER BY cl.doc_id""".stripMargin
 
   val dedupClustersSql: String =
-    """WITH RECURSIVE d AS (
+    s"""WITH RECURSIVE d AS (
       |  SELECT doc_id, lang, source,
       |    list_distinct(string_split(text, ' ')) AS toks
       |  FROM documents),
@@ -1265,12 +1198,7 @@ object DedupOps {
       |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
       |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
       |    >= 0.8),
-      |edges AS (
-      |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-      |reach(a, b) AS (
-      |  SELECT DISTINCT a, a FROM edges
-      |  UNION
-      |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
+      |${reachCtes("p")}
       |SELECT a AS doc_id, MIN(b) AS keep_id
       |FROM reach
       |GROUP BY a
@@ -1509,7 +1437,7 @@ object DedupOps {
   }
 
   val nearDupCleanSql: String =
-    """WITH RECURSIVE d AS (
+    s"""WITH RECURSIVE d AS (
       |  SELECT doc_id, lang, source,
       |    list_distinct(string_split(text, ' ')) AS toks
       |  FROM documents),
@@ -1520,12 +1448,7 @@ object DedupOps {
       |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
       |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
       |    >= 0.8),
-      |edges AS (
-      |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-      |reach(a, b) AS (
-      |  SELECT DISTINCT a, a FROM edges
-      |  UNION
-      |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+      |${reachCtes("p")},
       |drop AS (
       |  SELECT a AS doc_id FROM reach GROUP BY a HAVING MIN(b) <> a)
       |SELECT doc_id, lang, source, n_chars FROM documents

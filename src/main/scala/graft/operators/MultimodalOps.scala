@@ -338,17 +338,13 @@ object MultimodalOps {
   val DHashRows = 8
   val DHashCols = 9
 
-  /** Verified pair threshold. 3 is pigeonhole-complete for the 4×16-bit
-    * chunk bucketing below: ≤3 differing bits can touch at most 3 of
-    * the 4 chunks, so every qualifying pair shares at least one chunk
-    * — the bucket join provably equals the all-pairs scan the oracle
-    * runs (the dedup_simhash chunk-collision argument). */
+  /** Verified pair threshold over the 4×16-bit chunk layout. */
   val DHashMaxHamming = 3
 
-  /** Per-image dHash as FOUR 16-bit chunk columns (c0..c3) — chunked
-    * at hash time because (a) the bucket join keys on chunks directly
-    * and (b) 16-bit non-negative values sidestep any cross-engine
-    * sign/shift semantics a packed 64-bit hash would drag in.
+  /** Per-image dHash as FOUR 16-bit chunk columns (c0..c3) — 16-bit
+    * non-negative values sidestep any cross-engine sign/shift
+    * semantics a packed 64-bit hash would drag in; only the engine
+    * side packs them ([[MediaFp]]).
     *
     * Every input is read from the PAYLOAD BYTES: width/height come
     * off the BITMAPINFOHEADER at their spec offsets, the stride
@@ -398,7 +394,7 @@ object MultimodalOps {
     // SAME all-zero fingerprint, emitting all corrupt rows as
     // hamming-0 near-dups of each other (round-7 advice #4). NULL
     // fingerprints are filtered before the pair join in
-    // [[imageDedupPairs]]. Valid planted BMPs never sample out of
+    // [[MediaFp.graph]]. Valid planted BMPs never sample out of
     // range, so registered output is unchanged.
     val chunks = (0 until 4).map { c =>
       val bits = (0 until 16).map { t =>
@@ -411,80 +407,88 @@ object MultimodalOps {
     withLums.selectExpr("id" +: chunks: _*)
   }
 
-  /** Near-duplicate IMAGE pairs over any (id, payload) frame:
-    * [[imageDHash]] per image, then FINGERPRINT COMPACTION (the
-    * fuzzy_join distinct-name idiom): the chunk-collision candidate
-    * join runs over the DISTINCT fingerprints only, and member pairs
+  /** One media modality's near-dup graph, pair list and persisted
+    * cluster labels. `fingerprint` maps (id, payload) rows to
+    * (id, c0..c{chunks-1}) 16-bit chunk columns, NULL for a corrupt or
+    * truncated payload (such rows carry no perceptual content and drop
+    * out rather than cluster together). The graph packs the chunks
+    * into one `chunks`×16-bit word `hid` (bijective; the image word
+    * may go negative via the sign bit), and the packed chunks occupy
+    * disjoint bit ranges, so hamming(hid) is the per-chunk sum —
+    * [[PairJoin.hamming]] then runs over `hid` in 16-bit chunks.
+    *
+    * FINGERPRINT COMPACTION (the fuzzy_join distinct-name idiom): the
+    * kernel runs over the DISTINCT fingerprints only, and member pairs
     * are expanded afterwards by two output-bound equi-joins.
+    * Near-identical media concentrate into few fingerprints (the 10×
+    * image probe measured ~3.9k distinct hashes carrying 560k images —
+    * identical-hash pair mass 6.78M, an 86× growth for 10× data, i.e.
+    * the OUTPUT is quadratic in this fixture), so a member-level
+    * bucket join pays Σ bucket² ≈ 71M candidate rows where the
+    * distinct-level join pays ~10⁴. Exactness is unchanged: ham(i,j)
+    * is a function of the two fingerprints, and the kernel keeps the
+    * A=A self-pair (`<=`) for identical payloads. Everything past the
+    * distinct() is bounded by CONTENT DIVERSITY, never by corpus size;
+    * at 100 TB the 2¹⁶-value chunk space is the knob — band wider as
+    * content diversity grows, like simhash's chunks.
     *
-    * Why compaction is load-bearing: near-identical-image corpora
-    * concentrate into few fingerprints (the 10× probe measured ~3.9k
-    * distinct hashes carrying 560k images — identical-hash pair mass
-    * 6.78M, an 86× growth for 10× data, i.e. the OUTPUT is quadratic
-    * in this fixture), so a member-level bucket join pays Σ bucket²
-    * ≈ 71M candidate rows where the distinct-level join pays ~10⁴ and
-    * everything past it is proportional to the pairs actually
-    * emitted. Exactness is unchanged: ham(i,j) is a function of the
-    * two fingerprints, and the pigeonhole argument on
-    * [[DHashMaxHamming]] applies verbatim at the distinct level
-    * (including the A=A self-pair for identical images).
-    *
-    * Scale shape: one corpus-linear hash pass (localCheckpoint'd),
-    * a distinct-fingerprint bucket join (content-diversity-bounded,
-    * not corpus-bounded), and member expansion that shuffles only
-    * output rows. At 100 TB the 2¹⁶-value chunk space over DISTINCT
-    * fingerprints is the knob — band wider as content diversity
-    * grows, like simhash's bands. */
-  /** The fingerprint-level near-dup graph shared by the pair and
-    * cluster deliverables: (members, verified) where members =
-    * (id, hid) maps every fingerprintable image to its packed 64-bit
-    * dHash and verified = (ha ≤ hb, hamming) is the
-    * pigeonhole-complete fingerprint pair set (including A=A
-    * self-pairs for identical images). Everything downstream of the
-    * distinct() is bounded by CONTENT DIVERSITY (distinct
-    * fingerprints), never by corpus size. */
-  private def imageFpGraph(bmp: DataFrame): (DataFrame, DataFrame) = {
-    // hid packs the 4×16-bit chunks into ONE bijective BIGINT (may go
-    // negative via the sign bit — an arbitrary but consistent total
-    // order is all the unordered-pair dedup below needs)
-    val hid = expr("(c0 << 48) | (c1 << 32) | (c2 << 16) | c3")
-    // NULL fingerprints (corrupt/truncated payloads — see the fpok
-    // guard in [[imageDHash]]) carry no perceptual content and drop
-    // out here rather than clustering together
-    val h = imageDHash(bmp)
-      .filter(col("c0").isNotNull && col("c1").isNotNull &&
-        col("c2").isNotNull && col("c3").isNotNull)
-      .withColumn("hid", hid)
-      .localCheckpoint() // member table: feeds expansion twice
-    val d = h.select(col("hid"), col("c0"), col("c1"), col("c2"),
-        col("c3")).distinct()
-      .localCheckpoint() // distinct fingerprints: buckets + verify
-    val chunks = d.select(col("hid"), posexplode(
-        array(col("c0"), col("c1"), col("c2"), col("c3"))))
-      .toDF("hid", "ci", "cv")
-    // ha <= hb keeps each unordered fingerprint pair once, INCLUDING
-    // the A=A self-pair (identical images, hamming 0)
-    val cands = PairJoin.buckets(chunks, "ci", "cv")
-      .pairs(col("x.hid") <= col("y.hid"))
-      .select(col("x.hid").as("ha"), col("y.hid").as("hb"))
-      .distinct()
-    val verified = cands
-      .join(d.select(col("hid").as("ha"), col("c0").as("x0"),
-        col("c1").as("x1"), col("c2").as("x2"), col("c3").as("x3")),
-        Seq("ha"))
-      .join(d.select(col("hid").as("hb"), col("c0").as("y0"),
-        col("c1").as("y1"), col("c2").as("y2"), col("c3").as("y3")),
-        Seq("hb"))
-      .withColumn("hamming", expr(
-        """CAST(bit_count(x0 ^ y0) + bit_count(x1 ^ y1) +
-          |bit_count(x2 ^ y2) + bit_count(x3 ^ y3) AS BIGINT)""".stripMargin))
-      .filter(col("hamming") <= DHashMaxHamming)
-      .select(col("ha"), col("hb"), col("hamming"))
-    (h.select(col("id"), col("hid")), verified)
+    * The pair row and the cluster row consume the IDENTICAL corpus
+    * graph, memoized per (session, dir) by [[graphFor]]; the cluster
+    * labels persist across sessions ([[labels]]). The frame-level
+    * [[pairs]] stays memo-free for spec fixtures. */
+  private[graft] final class MediaFp(
+      table: (SparkSession, String) => DataFrame,
+      fingerprint: DataFrame => DataFrame, chunks: Int, maxHam: Int,
+      kind: String, params: String) {
+
+    /** (members, verified): members = (id, hid) for every
+      * fingerprintable payload, verified = (i ≤ j, hamming) over the
+      * distinct fingerprints. */
+    def graph(payloads: DataFrame): (DataFrame, DataFrame) = {
+      val hid = (0 until chunks)
+        .map(c => shiftleft(col(s"c$c"), 16 * (chunks - 1 - c)))
+        .reduce(_.bitwiseOR(_))
+      val h = fingerprint(payloads).withColumn("hid", hid)
+        .filter(col("hid").isNotNull)
+        .localCheckpoint() // member table: feeds expansion twice
+      (h.select(col("id"), col("hid")),
+        PairJoin.hamming(h.select(col("hid")).distinct(), "hid",
+          Seq("hid" -> 16 * chunks), 16, maxHam, _ <= _))
+    }
+
+    def pairs(payloads: DataFrame): DataFrame =
+      (expandPairs _).tupled(graph(payloads))
+
+    /** The corpus graph, `verified` additionally checkpointed here
+      * since [[graph]] returns it as a plan over the kernel's
+      * checkpoint. */
+    val graphMemo = new Memo[String, (DataFrame, DataFrame)]
+
+    def graphFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+      graphMemo(spark, dir) {
+        val (h, v) = graph(table(spark, dir))
+        (h, v.localCheckpoint())
+      }
+
+    /** The PERSISTED cluster labels — the
+      * [[graft.operators.DedupOps.clusterLabels]] treatment (r9: a
+      * restart pays a metadata stat + scan instead of re-deriving the
+      * graph). Keyed by the documents fingerprint + `kind`/`params`;
+      * the artifact read is localCheckpoint'd so consumer plans are
+      * materialized-relation-shaped whether built or loaded
+      * (media_pipeline's zero-parquet-scan PlanSpec pin). */
+    val labelMemo = new Memo[String, DataFrame]
+
+    def labels(spark: SparkSession, dir: String): DataFrame =
+      labelMemo(spark, dir)(
+        ArtifactStore.stored(spark, dir, "documents", kind, params)(
+          (fpClusters _).tupled(graphFor(spark, dir))))
   }
 
-  def imageDedupPairs(bmp: DataFrame): DataFrame =
-    (expandPairs _).tupled(imageFpGraph(bmp))
+  private[graft] val imageFp = new MediaFp(
+    (spark, dir) => asBmpTable(spark, dir).toDF("id", "payload"),
+    imageDHash, 4, DHashMaxHamming, "media_labels_image",
+    s"dhash=${DHashRows}x$DHashCols,ham=$DHashMaxHamming")
 
   /** Output-bound member expansion of a verified fingerprint pair set:
     * each doc has ONE fingerprint, so a cross-fingerprint doc pair
@@ -492,9 +496,9 @@ object MultimodalOps {
     * dedup on id order. */
   private def expandPairs(h: DataFrame, verified: DataFrame): DataFrame =
     verified
-      .join(h.select(col("hid").as("ha"), col("id").as("ia")), Seq("ha"))
-      .join(h.select(col("hid").as("hb"), col("id").as("ib")), Seq("hb"))
-      .filter(col("ha") =!= col("hb") || col("ia") < col("ib"))
+      .join(h.select(col("hid").as("i"), col("id").as("ia")), Seq("i"))
+      .join(h.select(col("hid").as("j"), col("id").as("ib")), Seq("j"))
+      .filter(col("i") =!= col("j") || col("ia") < col("ib"))
       .select(least(col("ia"), col("ib")).as("i"),
         greatest(col("ia"), col("ib")).as("j"), col("hamming"))
       .orderBy(col("i"), col("j"))
@@ -515,8 +519,7 @@ object MultimodalOps {
     * are one shuffle each, both corpus-linear. */
   private def fpClusters(h: DataFrame, verified: DataFrame): DataFrame = {
     val fpLab = DedupOps.resolveDupClusters(
-        verified.filter(col("ha") =!= col("hb"))
-          .select(col("ha").as("i"), col("hb").as("j")))
+        verified.filter(col("i") =!= col("j")).select(col("i"), col("j")))
       .select(col("doc_id").as("hid"), col("keep_id").as("fkeep"))
     // fingerprints with no CROSS-fingerprint edge label themselves —
     // identical-image groups (one shared fingerprint) still cluster
@@ -531,64 +534,11 @@ object MultimodalOps {
       .orderBy(col("id"))
   }
 
-  /** Per-(session, dir) memos of the corpus fingerprint GRAPHS — the
-    * pair row and the cluster row consume the IDENTICAL
-    * synthesize→fingerprint→bucket-join→verify pipeline (the
-    * clusterLabels pattern: the graph is the shared prep product a
-    * pipeline materializes once); `verified` is additionally
-    * checkpointed here since [[imageFpGraph]] returns it as a plan
-    * over its internal checkpoints. Frame-level APIs
-    * ([[imageDedupPairs]] etc.) stay memo-free for spec fixtures. */
-  private[graft] val imageGraphMemo = new Memo[String, (DataFrame, DataFrame)]
-  private[graft] val audioGraphMemo = new Memo[String, (DataFrame, DataFrame)]
-
-  private[graft] def imageFpGraphFor(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    imageGraphMemo(spark, dir) {
-      val (h, v) = imageFpGraph(asBmpTable(spark, dir).toDF("id", "payload"))
-      (h, v.localCheckpoint())
-    }
-
-  private[graft] def audioFpGraphFor(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    audioGraphMemo(spark, dir) {
-      val (h, v) = audioFpGraph(asWavTable(spark, dir).toDF("id", "payload"))
-      (h, v.localCheckpoint())
-    }
-
   /** Registered query: perceptual near-dup pairs over the planted
     * corpus BMPs — multimodal columns DEDUPED, not just parsed (the
     * round-6 growth edge). */
-  def dedupImage(spark: SparkSession, dir: String): DataFrame = {
-    val (h, verified) = imageFpGraphFor(spark, dir)
-    expandPairs(h, verified)
-  }
-
-  /** Per-(session, dir) memos of the PERSISTED media cluster labels —
-    * the [[graft.operators.DedupOps.clusterLabels]] treatment applied
-    * to the image/audio modalities (r9: the media labels were the one
-    * prep product a fresh session still re-derived from the
-    * fingerprint graphs; now a restart pays a metadata stat + scan).
-    * Keyed by the documents fingerprint + the fingerprint-family
-    * parameters; the artifact read is localCheckpoint'd so consumer
-    * plans are materialized-relation-shaped whether built or loaded
-    * (media_pipeline's zero-parquet-scan PlanSpec pin). */
-  private[graft] val imageLabelMemo = new Memo[String, DataFrame]
-  private[graft] val audioLabelMemo = new Memo[String, DataFrame]
-
-  private[graft] def imageClusterLabels(spark: SparkSession,
-      dir: String): DataFrame =
-    imageLabelMemo(spark, dir)(
-      ArtifactStore.stored(spark, dir, "documents", "media_labels_image",
-        s"dhash=${DHashRows}x$DHashCols,ham=$DHashMaxHamming")(
-        (fpClusters _).tupled(imageFpGraphFor(spark, dir))))
-
-  private[graft] def audioClusterLabels(spark: SparkSession,
-      dir: String): DataFrame =
-    audioLabelMemo(spark, dir)(
-      ArtifactStore.stored(spark, dir, "documents", "media_labels_audio",
-        s"win=$AudioWindows,ham=$AudioMaxHamming")(
-        (fpClusters _).tupled(audioFpGraphFor(spark, dir))))
+  def dedupImage(spark: SparkSession, dir: String): DataFrame =
+    (expandPairs _).tupled(imageFp.graphFor(spark, dir))
 
   /** Registered query: per-image near-dup CLUSTER LABELS
     * (id, keep_id, cluster_size) — one row per image with ≥1
@@ -599,9 +549,9 @@ object MultimodalOps {
     * expanded pairs and fingerprint-level closure expanded to members
     * are the same partition, since ham(i,j) is a function of the two
     * fingerprints alone. Labels persist across sessions (see
-    * [[imageClusterLabels]]). */
+    * [[MediaFp.labels]]). */
   def dedupImageClusters(spark: SparkSession, dir: String): DataFrame =
-    imageClusterLabels(spark, dir).orderBy(col("id"))
+    imageFp.labels(spark, dir).orderBy(col("id"))
 
   // ------------- audio fingerprint near-dup (window-sum hash) ------
 
@@ -609,10 +559,7 @@ object MultimodalOps {
     * adjacent-comparison bits). */
   val AudioWindows = 33
 
-  /** Verified pair threshold: 1 is pigeonhole-complete for the 2×16-bit
-    * chunking — one differing bit touches at most one chunk, so the
-    * bucket join equals the all-pairs scan (the [[DHashMaxHamming]]
-    * argument at audio-fingerprint selectivity). */
+  /** Verified pair threshold over the 2×16-bit chunk layout. */
   val AudioMaxHamming = 1
 
   /** Per-recording fingerprint as TWO 16-bit chunks: the PCM data
@@ -667,62 +614,27 @@ object MultimodalOps {
     withSums.selectExpr("id" +: chunks: _*)
   }
 
-  /** The audio fingerprint graph — [[imageFpGraph]] over the 2×16-bit
-    * window-sum fingerprints: members (id, hid) + verified fingerprint
-    * pairs (ha ≤ hb, hamming ≤ [[AudioMaxHamming]]), candidates from
-    * the chunk-collision join over DISTINCT fingerprints (the r7 form
-    * joined at MEMBER level — correct, but Σ bucket² over members is
-    * exactly the concentration blow-up the image path compacted away;
-    * identical recordings are common in a crawl, so the audio leg gets
-    * the same compaction). */
-  private def audioFpGraph(wav: DataFrame): (DataFrame, DataFrame) = {
-    val hid = expr("(c0 << 16) | c1") // bijective 32-bit pack
-    val h = audioFingerprint(wav)
-      .filter(col("c0").isNotNull && col("c1").isNotNull)
-      .withColumn("hid", hid)
-      .localCheckpoint()
-    val d = h.select(col("hid"), col("c0"), col("c1")).distinct()
-      .localCheckpoint()
-    val chunks = d.select(col("hid"),
-        posexplode(array(col("c0"), col("c1"))))
-      .toDF("hid", "ci", "cv")
-    val cands = PairJoin.buckets(chunks, "ci", "cv")
-      .pairs(col("x.hid") <= col("y.hid"))
-      .select(col("x.hid").as("ha"), col("y.hid").as("hb"))
-      .distinct()
-    val verified = cands
-      .join(d.select(col("hid").as("ha"), col("c0").as("x0"),
-        col("c1").as("x1")), Seq("ha"))
-      .join(d.select(col("hid").as("hb"), col("c0").as("y0"),
-        col("c1").as("y1")), Seq("hb"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(x0 ^ y0) + bit_count(x1 ^ y1) AS BIGINT)"))
-      .filter(col("hamming") <= AudioMaxHamming)
-      .select(col("ha"), col("hb"), col("hamming"))
-    (h.select(col("id"), col("hid")), verified)
-  }
-
-  /** Near-duplicate AUDIO pairs via the compacted fingerprint graph —
-    * the [[imageDedupPairs]] expansion over the WAV payloads (output
-    * identical to the r7 member-level join: ham is a function of the
-    * two fingerprints, pigeonhole completeness unchanged at the
-    * distinct level, StreamingMultimodalSpec pins the all-pairs
-    * reference equality). */
-  def audioDedupPairs(wav: DataFrame): DataFrame =
-    (expandPairs _).tupled(audioFpGraph(wav))
+  /** The audio modality: the window-sum fingerprint under the image
+    * leg's fingerprint compaction (the r7 form joined at MEMBER level
+    * — correct, but identical recordings are common in a crawl, so
+    * Σ bucket² over members is the same concentration blow-up). */
+  private[graft] val audioFp = new MediaFp(
+    (spark, dir) => asWavTable(spark, dir).toDF("id", "payload"),
+    audioFingerprint, 2, AudioMaxHamming, "media_labels_audio",
+    s"win=$AudioWindows,ham=$AudioMaxHamming")
 
   /** Registered query: near-dup recordings over the planted corpus
     * WAVs — the audio leg of "multimodal columns deduped, not just
     * parsed". */
   def dedupAudio(spark: SparkSession, dir: String): DataFrame =
-    (expandPairs _).tupled(audioFpGraphFor(spark, dir))
+    (expandPairs _).tupled(audioFp.graphFor(spark, dir))
 
   /** Registered query: per-recording near-dup CLUSTER LABELS — the
     * corpus-linear audio deliverable ([[fpClusters]] over the audio
     * fingerprint graph; see [[dedupImageClusters]]); persisted like
     * the image labels. */
   def dedupAudioClusters(spark: SparkSession, dir: String): DataFrame =
-    audioClusterLabels(spark, dir).orderBy(col("id"))
+    audioFp.labels(spark, dir).orderBy(col("id"))
 
   // ------------- PNG — the entropy-coded third format -------------
 
@@ -914,8 +826,8 @@ object MultimodalOps {
 
   /** Oracle: replay the window sums from (doc_id, text) synthesis
     * (sample k = ((unicode(char k mod len)·523+7) mod 2¹⁶) − 2¹⁵),
-    * then the all-pairs hamming filter — pigeonhole-equal to the
-    * chunk-collision join. COALESCE pins empty windows to 0 (DuckDB
+    * then the all-pairs hamming filter — equal to the engine's
+    * [[PairJoin.hamming]] pairs. COALESCE pins empty windows to 0 (DuckDB
     * list_sum([]) is NULL; the engine's bounded PcmS16LeSum returns
     * 0). */
   /** Shared replay prefix for the audio rows: window sums from
@@ -940,19 +852,9 @@ object MultimodalOps {
        |    THEN 1 ELSE 0 END) AS bits
        |  FROM ${pre}ws)""".stripMargin
   }
-  private lazy val audioPhCtes: String = audioPhCtesPre("")
 
   lazy val dedupAudioSql: String =
-    s"""WITH $audioPhCtes
-       |SELECT x.doc_id AS i, y.doc_id AS j,
-       |  CAST(len(list_filter(range(32), k ->
-       |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |    AS BIGINT) AS hamming
-       |FROM ph x JOIN ph y ON x.doc_id < y.doc_id
-       |WHERE len(list_filter(range(32), k ->
-       |  x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |  <= $AudioMaxHamming
-       |ORDER BY i, j""".stripMargin
+    mediaPairsSql(audioPhCtesPre(""), 32, AudioMaxHamming)
 
   /** Recursive reachability closure over the same all-pairs audio
     * graph → (id, keep_id, cluster_size) per member of a ≥2 cluster —
@@ -960,19 +862,38 @@ object MultimodalOps {
     * components (every member of a ≥2 cluster appears in ≥1 pair, so
     * `reach`'s node set IS the ≥2-cluster membership). */
   lazy val dedupAudioClustersSql: String =
-    s"""WITH RECURSIVE $audioPhCtes,
-       |p AS MATERIALIZED (
+    mediaClustersSql(audioPhCtesPre(""), 32, AudioMaxHamming)
+
+  /** The all-pairs media CTE `<pre>p` (i, j): doc pairs whose
+    * `<pre>ph` bit lists (`bits` long) differ in ≤ `maxHam` places. */
+  private def mediaPairCte(pre: String, bits: Int, maxHam: Int): String =
+    s"""${pre}p AS MATERIALIZED (
        |  SELECT x.doc_id AS i, y.doc_id AS j
-       |  FROM ph x JOIN ph y ON x.doc_id < y.doc_id
-       |  WHERE len(list_filter(range(32), k ->
+       |  FROM ${pre}ph x JOIN ${pre}ph y ON x.doc_id < y.doc_id
+       |  WHERE len(list_filter(range($bits), k ->
        |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |    <= $AudioMaxHamming),
-       |edges AS (
-       |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-       |reach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |    <= $maxHam)""".stripMargin
+
+  /** The pair-row oracle over the `ph` CTEs in `phCtes`. */
+  private def mediaPairsSql(phCtes: String, bits: Int,
+      maxHam: Int): String =
+    s"""WITH $phCtes
+       |SELECT x.doc_id AS i, y.doc_id AS j,
+       |  CAST(len(list_filter(range($bits), k ->
+       |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
+       |    AS BIGINT) AS hamming
+       |FROM ph x JOIN ph y ON x.doc_id < y.doc_id
+       |WHERE len(list_filter(range($bits), k ->
+       |  x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
+       |  <= $maxHam
+       |ORDER BY i, j""".stripMargin
+
+  /** The cluster-row oracle over the `ph` CTEs in `phCtes`. */
+  private def mediaClustersSql(phCtes: String, bits: Int,
+      maxHam: Int): String =
+    s"""WITH RECURSIVE $phCtes,
+       |${mediaPairCte("", bits, maxHam)},
+       |${DedupOps.reachCtes("p")},
        |lab AS (SELECT a AS id, MIN(b) AS keep_id FROM reach GROUP BY a),
        |sz AS (SELECT keep_id AS k, COUNT(*) AS cluster_size
        |       FROM lab GROUP BY 1)
@@ -983,9 +904,8 @@ object MultimodalOps {
   /** Oracle: replay the dHash from (doc_id, text) synthesis directly
     * (sampled pixels never land on padding — 3·col ≤ 3·width−3 — so
     * the byte at (row·stride + 3·col) is text char ((row·stride +
-    * 3·col) mod len) mod 256), then the ALL-PAIRS hamming filter,
-    * which the pigeonhole argument on [[DHashMaxHamming]] makes
-    * exactly equal to the engine's chunk-collision join. */
+    * 3·col) mod len) mod 256), then the ALL-PAIRS hamming filter —
+    * equal to the engine's [[PairJoin.hamming]] pairs. */
   /** Shared replay prefix for the image rows: dHash bits per doc from
     * (doc_id, text) synthesis (`ph`); `pre` as in [[audioPhCtesPre]]. */
   private def dHashPhCtesPre(pre: String): String = {
@@ -1006,43 +926,15 @@ object MultimodalOps {
        |    THEN 1 ELSE 0 END) AS bits
        |  FROM ${pre}g)""".stripMargin
   }
-  private lazy val dHashPhCtes: String = dHashPhCtesPre("")
 
   lazy val dedupImageSql: String =
-    s"""WITH $dHashPhCtes
-       |SELECT x.doc_id AS i, y.doc_id AS j,
-       |  CAST(len(list_filter(range(64), k ->
-       |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |    AS BIGINT) AS hamming
-       |FROM ph x JOIN ph y ON x.doc_id < y.doc_id
-       |WHERE len(list_filter(range(64), k ->
-       |  x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |  <= $DHashMaxHamming
-       |ORDER BY i, j""".stripMargin
+    mediaPairsSql(dHashPhCtesPre(""), 64, DHashMaxHamming)
 
   /** Recursive reachability closure over the same all-pairs dHash
     * graph → (id, keep_id, cluster_size); see
     * [[dedupAudioClustersSql]]. */
   lazy val dedupImageClustersSql: String =
-    s"""WITH RECURSIVE $dHashPhCtes,
-       |p AS MATERIALIZED (
-       |  SELECT x.doc_id AS i, y.doc_id AS j
-       |  FROM ph x JOIN ph y ON x.doc_id < y.doc_id
-       |  WHERE len(list_filter(range(64), k ->
-       |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |    <= $DHashMaxHamming),
-       |edges AS (
-       |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-       |reach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-       |lab AS (SELECT a AS id, MIN(b) AS keep_id FROM reach GROUP BY a),
-       |sz AS (SELECT keep_id AS k, COUNT(*) AS cluster_size
-       |       FROM lab GROUP BY 1)
-       |SELECT lab.id, lab.keep_id, sz.cluster_size
-       |FROM lab JOIN sz ON sz.k = lab.keep_id
-       |ORDER BY id""".stripMargin
+    mediaClustersSql(dHashPhCtesPre(""), 64, DHashMaxHamming)
 
   /** Direct field derivation from (doc_id, text); row0_sum replays the
     * pixel generator for row 0 (char k mod len, mod 256 — padding
@@ -1232,40 +1124,15 @@ object MultimodalOps {
     * pretrain jdrop idiom). */
   lazy val mediaPipelineSql: String =
     s"""WITH RECURSIVE ${dHashPhCtesPre("i")},
-       |ip AS MATERIALIZED (
-       |  SELECT x.doc_id AS i, y.doc_id AS j
-       |  FROM iph x JOIN iph y ON x.doc_id < y.doc_id
-       |  WHERE len(list_filter(range(64), k ->
-       |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |    <= $DHashMaxHamming),
-       |iedges AS (
-       |  SELECT i AS a, j AS b FROM ip UNION ALL SELECT j, i FROM ip),
-       |ireach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM iedges
-       |  UNION
-       |  SELECT r.a, e.b FROM ireach r JOIN iedges e ON r.b = e.a),
+       |${mediaPairCte("i", 64, DHashMaxHamming)},
+       |${DedupOps.reachCtes("ip", "i")},
        |idrop AS (SELECT a AS id FROM ireach GROUP BY a HAVING MIN(b) <> a),
        |${audioPhCtesPre("a")},
-       |ap AS MATERIALIZED (
-       |  SELECT x.doc_id AS i, y.doc_id AS j
-       |  FROM aph x JOIN aph y ON x.doc_id < y.doc_id
-       |  WHERE len(list_filter(range(32), k ->
-       |    x.bits[CAST(k AS INT) + 1] != y.bits[CAST(k AS INT) + 1]))
-       |    <= $AudioMaxHamming),
-       |aedges AS (
-       |  SELECT i AS a, j AS b FROM ap UNION ALL SELECT j, i FROM ap),
-       |areach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM aedges
-       |  UNION
-       |  SELECT r.a, e.b FROM areach r JOIN aedges e ON r.b = e.a),
+       |${mediaPairCte("a", 32, AudioMaxHamming)},
+       |${DedupOps.reachCtes("ap", "a")},
        |adrop AS (SELECT a AS id FROM areach GROUP BY a HAVING MIN(b) <> a),
        |${VideoOps.videoOccCte},
-       |vedges AS (
-       |  SELECT i AS a, j AS b FROM vp UNION ALL SELECT j, i FROM vp),
-       |vreach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM vedges
-       |  UNION
-       |  SELECT r.a, e.b FROM vreach r JOIN vedges e ON r.b = e.a),
+       |${DedupOps.reachCtes("vp", "v")},
        |vdrop AS (SELECT a AS id FROM vreach GROUP BY a HAVING MIN(b) <> a),
        |parsed AS (
        |  SELECT doc_id AS id,

@@ -8,6 +8,11 @@ import graft.functions.SortedIntersectCount
   * bands, SimHash chunks, containment and prefix shingles, media
   * fingerprint chunks), split the V-SMART-Join way into a candidate
   * phase shared by every measure and a per-measure verify phase.
+  * Callers: [[DedupOps]] `dedupJaccardCompute`, `minhashPairs`,
+  * `containmentPairs`, `prefixJoinPairs` (`ingestPairs` uses the
+  * [[jaccard]] verify alone) and `simhashPairs` through [[hamming]];
+  * [[MultimodalOps]]' image and audio fingerprint graphs through
+  * [[hamming]].
   *
   * Why the numbered repartition sits ABOVE the checkpoint: a
   * `localCheckpoint` discards its plan's output partitioning, so a
@@ -46,5 +51,44 @@ private[graft] object PairJoin {
       .join(jSets.select(col("doc_id").as(j), col(set).as("sj")), Seq(j))
       .select(col(i), col(j),
         (inter.cast("double") / uni.cast("double")).as("jaccard"))
+  }
+
+  /** `(i, j, hamming)` for the `id` pairs of `fps` under `cond(x, y)`
+    * whose fingerprints differ in at most `maxHam` bits. The
+    * fingerprint is the `words` of each row, as (long column, bit
+    * width); each word is cut into `chunkBits`-wide chunks (Manku et
+    * al.'s pigeonhole tables, WWW 2007), the rows self-join on equal
+    * (chunk, value), and the candidates are verified by the exact XOR
+    * popcount summed over the words.
+    *
+    * Complete by pigeonhole: the chunks partition every bit, so a
+    * pair differing in at most `maxHam` bits touches at most `maxHam`
+    * chunks; with more chunks than that, some chunk is identical and
+    * the pair meets in its bucket. The result therefore equals the
+    * all-pairs scan, and the layout is rejected up front unless every
+    * width is a whole number of chunks and `maxHam` < the chunk
+    * count. */
+  def hamming(fps: DataFrame, id: String, words: Seq[(String, Int)],
+      chunkBits: Int, maxHam: Int,
+      cond: (Column, Column) => Column): DataFrame = {
+    require(words.forall(_._2 % chunkBits == 0),
+      s"word widths ${words.map(_._2)} are not whole $chunkBits-bit chunks")
+    val chunks = words.flatMap { case (w, width) =>
+      (0 until width by chunkBits).map(s => shiftrightunsigned(col(w), s)
+        .bitwiseAND(lit((1L << chunkBits) - 1)))
+    }
+    require(maxHam < chunks.size,
+      s"$maxHam differing bits can touch all ${chunks.size} chunks")
+    val chunked = fps.select((id +: words.map(_._1)).distinct.map(col) :+
+        posexplode(array(chunks: _*)): _*)
+      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "cv")
+    buckets(chunked, "chunk", "cv")
+      .pairs(cond(col(s"x.$id"), col(s"y.$id")))
+      .select(col(s"x.$id").as("i"), col(s"y.$id").as("j"),
+        words.map { case (w, _) =>
+          bit_count(col(s"x.$w").bitwiseXOR(col(s"y.$w")))
+        }.reduce(_ + _).cast("long").as("hamming"))
+      .distinct()
+      .filter(col("hamming") <= maxHam)
   }
 }

@@ -326,12 +326,7 @@ object TextAnalysis {
        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
        |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
        |    >= 0.8),
-       |jedges AS (
-       |  SELECT i AS a, j AS b FROM jp UNION ALL SELECT j, i FROM jp),
-       |jreach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM jedges
-       |  UNION
-       |  SELECT r.a, e.b FROM jreach r JOIN jedges e ON r.b = e.a),
+       |${DedupOps.reachCtes("jp", "j")},
        |jdrop AS (
        |  SELECT a AS doc_id FROM jreach GROUP BY a HAVING MIN(b) <> a),
        |s2 AS (
@@ -1191,12 +1186,7 @@ object TextAnalysis {
        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
        |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
        |    >= 0.8),
-       |edges AS (
-       |  SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-       |reach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |${DedupOps.reachCtes("p")},
        |lab AS (SELECT a AS doc_id, MIN(b) AS keep_id FROM reach GROUP BY a),
        |base0 AS (
        |  SELECT dd.doc_id, COALESCE(l.keep_id, dd.doc_id) AS cluster_id

@@ -229,19 +229,27 @@ object VideoOps {
         .select(col("fkey")),
       Seq("fkey"))
     val sizes = kept.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val shared = kept.select(col("fkey"), col("id").as("i"))
-      .join(kept.select(col("fkey"), col("id").as("j")), Seq("fkey"))
-      .filter(col("i") < col("j"))
-      .groupBy(col("i"), col("j"))
+    frameJaccard(kept, sizes, kept, sizes, "i", "j", selfJoin = true)
+      .orderBy(col("i"), col("j"))
+  }
+
+  /** (i, j, shared_frames, jaccard_ppm) for J ≥ [[VideoJaccardPpm]]
+    * between the capped occurrences `a` and `b` (fkey, id), given each
+    * side's capped set sizes (id, n); a `selfJoin` keeps i < j. */
+  private def frameJaccard(a: DataFrame, aSizes: DataFrame, b: DataFrame,
+      bSizes: DataFrame, i: String, j: String,
+      selfJoin: Boolean): DataFrame = {
+    val shared = a.select(col("fkey"), col("id").as(i))
+      .join(b.select(col("fkey"), col("id").as(j)), Seq("fkey"))
+    (if (selfJoin) shared.filter(col(i) < col(j)) else shared)
+      .groupBy(col(i), col(j))
       .agg(count(lit(1)).as("shared_frames"))
-    shared
-      .join(sizes.select(col("id").as("i"), col("n").as("ni")), Seq("i"))
-      .join(sizes.select(col("id").as("j"), col("n").as("nj")), Seq("j"))
+      .join(aSizes.select(col("id").as(i), col("n").as("ni")), Seq(i))
+      .join(bSizes.select(col("id").as(j), col("n").as("nj")), Seq(j))
       .withColumn("jaccard_ppm", expr(
         "1000000 * shared_frames DIV (ni + nj - shared_frames)"))
       .filter(col("jaccard_ppm") >= VideoJaccardPpm)
-      .select(col("i"), col("j"), col("shared_frames"), col("jaccard_ppm"))
-      .orderBy(col("i"), col("j"))
+      .select(col(i), col(j), col("shared_frames"), col("jaccard_ppm"))
   }
 
   def dedupVideo(spark: SparkSession, dir: String): DataFrame =
@@ -299,7 +307,7 @@ object VideoOps {
 
   /** Per-(session, dir) memo of the resolved video cluster labels —
     * consumed by the registered `dedup_video_clusters` row AND the
-    * media_pipeline loser set (the imageClusterLabels discipline). */
+    * media_pipeline loser set (the media cluster-label discipline). */
   private val videoLabelMemo = new Memo[String, DataFrame]
 
   private[graft] def videoClusterLabels(spark: SparkSession,
@@ -330,12 +338,7 @@ object VideoOps {
     * dedup_image_clusters oracle shape on the video pair CTEs. */
   val dedupVideoClustersSql: String =
     s"""WITH RECURSIVE $videoOccCte,
-       |edges AS (
-       |  SELECT i AS a, j AS b FROM vp UNION ALL SELECT j, i FROM vp),
-       |reach(a, b) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |${DedupOps.reachCtes("vp")},
        |lab AS (SELECT a AS id, MIN(b) AS keep_id FROM reach GROUP BY a),
        |sz AS (SELECT keep_id AS k, COUNT(*) AS cluster_size
        |       FROM lab GROUP BY 1)
@@ -407,20 +410,8 @@ object VideoOps {
   def videoProbe(batchOcc: DataFrame, idx: VideoIndex): DataFrame = {
     val keptBatch = batchOcc.join(idx.overCap, Seq("fkey"), "left_anti")
     val batchSizes = keptBatch.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    keptBatch.select(col("fkey"), col("id").as("new_id"))
-      .join(idx.keptLive.select(col("fkey"), col("id").as("live_id")),
-        Seq("fkey"))
-      .groupBy(col("new_id"), col("live_id"))
-      .agg(count(lit(1)).as("shared_frames"))
-      .join(batchSizes.select(col("id").as("new_id"), col("n").as("nn")),
-        Seq("new_id"))
-      .join(idx.liveSizes.select(col("id").as("live_id"), col("n").as("nl")),
-        Seq("live_id"))
-      .withColumn("jaccard_ppm", expr(
-        "1000000 * shared_frames DIV (nn + nl - shared_frames)"))
-      .filter(col("jaccard_ppm") >= VideoJaccardPpm)
-      .select(col("new_id"), col("live_id"), col("shared_frames"),
-        col("jaccard_ppm"))
+    frameJaccard(keptBatch, batchSizes, idx.keptLive, idx.liveSizes,
+      "new_id", "live_id", selfJoin = false)
   }
 
   /** Oracle: the dedup_video frame relation split into batch/live,

@@ -83,9 +83,10 @@ class ArtifactStoreSpec extends AnyFunSuite {
     "sessions with identical rows (the clusterLabels treatment for " +
     "the binary modalities)") {
     import graft.operators.MultimodalOps
+    import graft.operators.MultimodalOps.{audioFp, imageFp}
     val dir = copyOf("documents")
-    MultimodalOps.imageLabelMemo.clear(); MultimodalOps.audioLabelMemo.clear()
-    MultimodalOps.imageGraphMemo.clear(); MultimodalOps.audioGraphMemo.clear()
+    imageFp.labelMemo.clear(); audioFp.labelMemo.clear()
+    imageFp.graphMemo.clear(); audioFp.graphMemo.clear()
     val b0 = ArtifactStore.builds
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -93,8 +94,8 @@ class ArtifactStoreSpec extends AnyFunSuite {
     val aud = rows(MultimodalOps.dedupAudioClusters(spark, dir))
     assert(ArtifactStore.builds == b0 + 2,
       "cold call builds one artifact per modality")
-    MultimodalOps.imageLabelMemo.clear(); MultimodalOps.audioLabelMemo.clear()
-    MultimodalOps.imageGraphMemo.clear(); MultimodalOps.audioGraphMemo.clear()
+    imageFp.labelMemo.clear(); audioFp.labelMemo.clear()
+    imageFp.graphMemo.clear(); audioFp.graphMemo.clear()
     val s2 = spark.newSession()
     val img2 = rows(MultimodalOps.dedupImageClusters(s2, dir))
     val aud2 = rows(MultimodalOps.dedupAudioClusters(s2, dir))

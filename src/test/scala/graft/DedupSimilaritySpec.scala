@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.{DedupOps, SimilarityOps}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.operators.{DedupOps, PairJoin, SimilarityOps}
 import graft.functions.VectorOps
 
 /** Semantic validation for the non-oracled approximate operators:
@@ -153,7 +155,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("oracled simhash: identical docs at hamming 0, chunk candidates " +
     "equal the all-pairs hamming scan (pigeonhole completeness)") {
-    val hashes = DedupOps.simhashOracle(plantedDocs)
+    val hashes = DedupOps.simhash(plantedDocs, DedupOps.SimhashOracleBits)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(hashes(2L) == hashes(3L), "identical docs, identical fingerprint")
     hashes.values.foreach(h =>
@@ -165,7 +167,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
       d = java.lang.Long.bitCount(hashes(i) ^ hashes(j))
       if d <= DedupOps.SimhashOracleMaxHamming
     } yield (i, j, d.toLong)).toSet
-    val viaChunks = DedupOps.simhashOraclePairs(plantedDocs)
+    val viaChunks = DedupOps.simhashPairs(plantedDocs,
+        DedupOps.SimhashOracleBits, DedupOps.SimhashOracleChunkBits)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaChunks == brute,
       s"chunk-collision pairs $viaChunks != all-pairs $brute")
@@ -174,7 +177,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("widened simhash (80-bit, 4x20 chunks): identical docs at " +
     "hamming 0, chunk candidates equal the all-pairs hamming scan") {
-    val fps = DedupOps.simhashWide(plantedDocs)
+    val fps = DedupOps.simhash(plantedDocs, DedupOps.SimhashWideBits)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(fps(2L) == fps(3L), "identical docs, identical fingerprint")
@@ -191,11 +194,99 @@ class DedupSimilaritySpec extends AnyFunSuite {
       d = ham(fps(i), fps(j))
       if d <= DedupOps.SimhashOracleMaxHamming
     } yield (i, j, d.toLong)).toSet
-    val viaChunks = DedupOps.simhashWidePairs(plantedDocs)
+    val viaChunks = DedupOps.simhashPairs(plantedDocs,
+        DedupOps.SimhashWideBits, DedupOps.SimhashWideChunkBits)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaChunks == brute,
       s"chunk-collision pairs $viaChunks != all-pairs $brute")
     assert(brute.exists { case (i, j, d) => i == 2L && j == 3L && d == 0L })
+  }
+
+  /** [[PairJoin.hamming]] against a brute-force bitCount scan over
+    * seeded random fingerprints (words of `widths` bits): each base
+    * row planted with near-copies at distance 0..maxHam+1, plus one
+    * copy differing only in the last word's top bit (the sign bit of
+    * a 64-bit word). `idIsWord` is the media layout: the one word is
+    * its own id, over distinct fingerprints. */
+  private def checkHamming(widths: Seq[Int], chunkBits: Int, maxHam: Int,
+      le: Boolean, idIsWord: Boolean, seed: Long): Unit = {
+    val rnd = new scala.util.Random(seed)
+    def flip(fp: Vector[Long], bit: Int): Vector[Long] = {
+      val k = widths.indices.find(k => bit < widths.take(k + 1).sum).get
+      fp.updated(k, fp(k) ^ (1L << (bit - widths.take(k).sum)))
+    }
+    val bases = Vector.fill(12)(
+      widths.map(w => rnd.nextLong() >>> (64 - w)).toVector)
+    val fps = flip(bases.head, widths.sum - 1) +: bases.flatMap { b =>
+      (0 +: (0 to maxHam + 1)).map(d =>
+        rnd.shuffle((0 until widths.sum).toList).take(d).foldLeft(b)(flip))
+    }
+    val rows = if (idIsWord) fps.distinct.map(fp => fp(0) -> fp)
+      else fps.zipWithIndex.map { case (fp, i) => i.toLong -> fp }
+    val words = widths.indices.map(k => s"w$k")
+    val idCols = if (idIsWord) Nil else Seq("id")
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, fp) =>
+        Row.fromSeq((if (idIsWord) Nil else Seq(i)) ++ fp) }),
+      StructType((idCols ++ words).map(StructField(_, LongType))))
+    val cond: (Column, Column) => Column = if (le) _ <= _ else _ < _
+    val got = PairJoin.hamming(df, if (idIsWord) "w0" else "id",
+        words.zip(widths), chunkBits, maxHam, cond)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val brute = (for {
+      (i, a) <- rows; (j, b) <- rows if (if (le) i <= j else i < j)
+      d = a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
+      if d <= maxHam
+    } yield (i, j, d.toLong)).toSet
+    assert(got == brute, s"kernel ${got -- brute} / brute ${brute -- got}")
+    assert((0 to maxHam).forall(d => brute.exists(_._3 == d)),
+      "planted copies reach every distance up to maxHam")
+    if (le) assert(rows.forall { case (i, _) => brute.exists(p =>
+      p._1 == i && p._2 == i && p._3 == 0L) }, "<= keeps every A=A pair")
+    if (widths.last == 64) assert(fps.exists(_.last < 0), "sign bit set")
+  }
+
+  test("PairJoin.hamming equals the brute-force scan for the 60-bit " +
+    "SimHash layout (4x15 chunks, <)") {
+    Seq(1L, 2L).foreach(checkHamming(Seq(60), 15, 3, le = false,
+      idIsWord = false, _))
+  }
+
+  test("PairJoin.hamming equals the brute-force scan for the 60+20-bit " +
+    "SimHash layout (4x20 chunks, <)") {
+    Seq(1L, 2L).foreach(checkHamming(Seq(60, 20), 20, 3, le = false,
+      idIsWord = false, _))
+  }
+
+  test("PairJoin.hamming equals the brute-force scan for the 64-bit " +
+    "image layout (4x16 chunks, <=, sign bit set, A=A kept)") {
+    Seq(1L, 2L).foreach(checkHamming(Seq(64), 16, 3, le = true,
+      idIsWord = true, _))
+  }
+
+  test("PairJoin.hamming equals the brute-force scan for the 32-bit " +
+    "audio layout (2x16 chunks, <=)") {
+    Seq(1L, 2L).foreach(checkHamming(Seq(32), 16, 1, le = true,
+      idIsWord = true, _))
+  }
+
+  test("PairJoin.hamming rejects a layout the pigeonhole argument does " +
+    "not cover before any job runs") {
+    val df = spark.range(4).select(col("id"), col("id").as("w"),
+      col("id").as("v"))
+    val sc = spark.sparkContext
+    sc.setJobGroup("hamming-layout", "rejected layouts")
+    try {
+      Seq((Seq("w" -> 60), 15, 4), (Seq("w" -> 32), 16, 2),
+        (Seq("w" -> 60), 16, 3), (Seq("w" -> 60, "v" -> 20), 15, 3))
+        .foreach { case (words, chunkBits, maxHam) =>
+          intercept[IllegalArgumentException](PairJoin.hamming(df, "id",
+            words, chunkBits, maxHam, _ < _))
+        }
+      assert(sc.statusTracker.getJobIdsForGroup("hamming-layout").isEmpty)
+      df.count() // the tracker does see this group's jobs
+      assert(sc.statusTracker.getJobIdsForGroup("hamming-layout").nonEmpty)
+    } finally sc.clearJobGroup()
   }
 
   test("LSH ANN candidates are a subset of brute force and keep exact dups") {

@@ -10,6 +10,8 @@ import graft.operators.{DedupOps, MultimodalOps}
   * `<outDir>/<row>.txt`, normalized so that dumps of two builds compare
   * with one `diff -r`: expression ids (`#123`), `plan_id=`s, RDD ids,
   * call sites (as `File.scala:N`) and lambda identities are masked. A
+  * row with a [[SparkEntry.oracleSql]] entry also gets its oracle text
+  * as `<outDir>/<row>.sql`, so the same `diff -r` covers the oracle. A
   * name may also be one of [[pairJoinFrames]], the frames whose bucket
   * self-join is visible in their plan. Runs on the shared local[4] test
   * session.
@@ -27,9 +29,9 @@ object PlanDump {
     "dedupSimhashWide" -> (() => DedupOps.dedupSimhashWide(spark, dir)),
     "dedupContainment" -> (() => DedupOps.dedupContainment(spark, dir)),
     "dedupPrefixJoin" -> (() => DedupOps.dedupPrefixJoin(spark, dir)),
-    "imageDedupPairs" -> (() => MultimodalOps.imageDedupPairs(
+    "imageDedupPairs" -> (() => MultimodalOps.imageFp.pairs(
       MultimodalOps.asBmpTable(spark, dir).toDF("id", "payload"))),
-    "audioDedupPairs" -> (() => MultimodalOps.audioDedupPairs(
+    "audioDedupPairs" -> (() => MultimodalOps.audioFp.pairs(
       MultimodalOps.asWavTable(spark, dir).toDF("id", "payload"))))
 
   def normalize(plan: String): String = plan
@@ -49,6 +51,8 @@ object PlanDump {
         .getOrElse(SparkEntry.queries(name)(spark, dir))
       Files.writeString(Paths.get(outDir, s"$name.txt"),
         normalize(df.queryExecution.explainString(FormattedMode)))
+      SparkEntry.oracleSql.get(name).foreach(sql =>
+        Files.writeString(Paths.get(outDir, s"$name.sql"), sql))
     }
     spark.stop()
   }

@@ -524,7 +524,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(nearHam >= 1 && nearHam <= 2, s"one-pixel edit moved $nearHam bits")
     assert(ham(bits(15L), bits(5L)) > MultimodalOps.DHashMaxHamming,
       "distinct-content images must not be near-dups on this plant")
-    val got = MultimodalOps.imageDedupPairs(
+    val got = MultimodalOps.imageFp.pairs(
         planted.toDF("id", "payload"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == refPairs,
@@ -565,7 +565,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       (i, bi) <- bits; (j, bj) <- bits if i < j
       d = ham(bi, bj) if d <= MultimodalOps.AudioMaxHamming
     } yield (i, j, d.toLong)).toSet
-    val got = MultimodalOps.audioDedupPairs(planted.toDF("id", "payload"))
+    val got = MultimodalOps.audioFp.pairs(planted.toDF("id", "payload"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == refPairs, s"engine $got != reference $refPairs")
     assert(got.contains((2L, 8L, 0L)))
@@ -650,8 +650,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     val bmpRows = MultimodalOps.parseBmp(junk).collect()
     assert(bmpRows.forall(r => r.isNullAt(6) || !r.getBoolean(6)),
       "no garbage payload may verify as a valid BMP")
-    MultimodalOps.imageDedupPairs(junk).collect()
-    MultimodalOps.audioDedupPairs(junk).collect()
+    MultimodalOps.imageFp.pairs(junk).collect()
+    MultimodalOps.audioFp.pairs(junk).collect()
   }
 
   test("corrupt payloads get NULL fingerprints and drop out of the " +
@@ -674,7 +674,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     assert(Seq(1L, 2L, 3L).forall(id => img(id).forall(identity)),
       "corrupt payloads must fingerprint as NULL chunks")
     assert(img(7L).forall(!_), "valid payloads keep real fingerprints")
-    val pairs = MultimodalOps.imageDedupPairs(bmp).collect()
+    val pairs = MultimodalOps.imageFp.pairs(bmp).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(!pairs.exists(p => Set(1L, 2L, 3L).contains(p._1) ||
       Set(1L, 2L, 3L).contains(p._2)),
@@ -690,7 +690,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> (1 to 2).map(r.isNullAt)).toMap
     assert(Seq(1L, 2L, 3L).forall(id => aud(id).forall(identity)),
       "corrupt payloads must audio-fingerprint as NULL chunks")
-    val apairs = MultimodalOps.audioDedupPairs(wav).collect()
+    val apairs = MultimodalOps.audioFp.pairs(wav).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(apairs.toSeq == Seq((7L, 8L)),
       s"audio pairs must be exactly the planted twin: ${apairs.toSeq}")
@@ -810,7 +810,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // image leg on the corpus fixture
     val bmp = MultimodalOps.asBmpTable(spark, dir).toDF("id", "payload")
       .localCheckpoint()
-    val ipairs = MultimodalOps.imageDedupPairs(bmp).collect()
+    val ipairs = MultimodalOps.imageFp.pairs(bmp).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(ipairs.nonEmpty, "fixture must carry image near-dups")
     checkAgainstPairs(MultimodalOps.dedupImageClusters(spark, dir)
@@ -818,7 +818,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // audio leg
     val wav = MultimodalOps.asWavTable(spark, dir).toDF("id", "payload")
       .localCheckpoint()
-    val apairs = MultimodalOps.audioDedupPairs(wav).collect()
+    val apairs = MultimodalOps.audioFp.pairs(wav).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(apairs.nonEmpty, "fixture must carry audio near-dups")
     checkAgainstPairs(MultimodalOps.dedupAudioClusters(spark, dir)
