@@ -47,15 +47,11 @@ final class MrPipeline[K, V](val ds: Dataset[(K, V)]) extends Serializable {
   /** Run one typed step; chain calls for multi-step jobs
     * (mrjob steps(), mrjob/job.py:497-545 — a linear DAG, which in
     * Spark is simply function composition inside one job).
-    *
-    * `ordV2` is unused (kept for source compatibility — SORT_VALUES
-    * now sorts inside Tungsten on both paths).
     */
   def step[K2, V2, K3, V3](s: MrStep[K, V, K2, V2, K3, V3])(
       implicit e2: Encoder[(K2, V2)],
       ek2: Encoder[K2],
-      e3: Encoder[(K3, V3)],
-      ordV2: Ordering[V2] = null): MrPipeline[K3, V3] = {
+      e3: Encoder[(K3, V3)]): MrPipeline[K3, V3] = {
 
     val spark = ds.sparkSession
     val sh = (cmd: String) => Seq("/bin/sh", "-c", cmd)

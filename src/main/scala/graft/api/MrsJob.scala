@@ -59,7 +59,7 @@ abstract class MrsJob[K1, V1, K2, V2, K3, V3] extends Serializable {
 
   final def run(input: Dataset[(K1, V1)])(
       implicit e2: Encoder[(K2, V2)], ek2: Encoder[K2],
-      e3: Encoder[(K3, V3)], ordV2: Ordering[V2] = null): Dataset[(K3, V3)] =
+      e3: Encoder[(K3, V3)]): Dataset[(K3, V3)] =
     MrPipeline.fromDataset(input).step(toStep).ds
 
   /** Text-file entry, RawValueProtocol-style (job `run()` over line
@@ -67,7 +67,7 @@ abstract class MrsJob[K1, V1, K2, V2, K3, V3] extends Serializable {
   final def runOnText(spark: SparkSession, path: String)(
       implicit ev: (String, String) =:= (K1, V1),
       e2: Encoder[(K2, V2)], ek2: Encoder[K2],
-      e3: Encoder[(K3, V3)], ordV2: Ordering[V2] = null): Dataset[(K3, V3)] =
+      e3: Encoder[(K3, V3)]): Dataset[(K3, V3)] =
     run(MrPipeline.fromText(spark, path).ds
       .asInstanceOf[Dataset[(K1, V1)]])
 }

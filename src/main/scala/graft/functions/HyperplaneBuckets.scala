@@ -44,6 +44,12 @@ case class HyperplaneBuckets(child: Expression,
     a
   }
 
+  /** Plan text: the plane layout and a content hash of the planes, not
+    * the array's JVM identity — so two builds of one plan print alike. */
+  override def stringArgs: Iterator[Any] = Iterator(child,
+    s"tables=$tables", s"bits=$bits", s"dim=$dim",
+    f"planes=${java.util.Arrays.hashCode(flat)}%08x")
+
   private def elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 

@@ -32,7 +32,8 @@ object VectorOps {
 
   /** Deterministic cosine similarity between two quantized vectors.
     * For pairwise workloads, precompute the norms per side instead
-    * (see SimilarityOps) — this form recomputes both per pair. */
+    * (see [[graft.operators.VecSearch]]) — this form recomputes both per
+    * pair. */
   def cosineQ(a: Column, b: Column): Column =
     dotQ(a, b).cast("double") /
       (sqrt(norm2Q(a).cast("double")) * sqrt(norm2Q(b).cast("double")))

@@ -57,36 +57,26 @@ object BitextOps {
     * must be a bounded subset of src ids. */
   private[graft] def marginOf(src: DataFrame, tgt: DataFrame,
       queryMax: Long): DataFrame = {
-    def side(df: DataFrame, p: String): DataFrame = df
-      .select(col("id").as(s"${p}_id"),
-        VectorOps.quantize(col("vec")).as(s"${p}v"))
-      .withColumn(s"${p}n", VectorOps.norm2Q(col(s"${p}v")))
+    def side(df: DataFrame, p: String): DataFrame = VecSearch.side(
+      df.withColumnRenamed("vec", "embedding"), col("id").as(s"${p}_id"), p)
     val s = side(src, "s")
     val t = side(tgt, "t")
     val q = s.filter(col("s_id") < queryMax)
       .select(col("s_id").as("q_id"), col("sv").as("qv"),
         col("sn").as("qn"))
-    val wf = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_q9").desc, col("t_id").asc)
-    val fwd = broadcast(q)
-      .join(t, col("q_id") =!= col("t_id"))
-      .select(col("q_id"), col("t_id"),
-        q9(VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("tv")),
-          col("qn"), col("tn"))).as("cos_q9"))
-      .withColumn("r", row_number().over(wf))
-      .filter(col("r") <= MarginK)
+    val fwd = VecSearch.topK(broadcast(q)
+        .join(t, col("q_id") =!= col("t_id"))
+        .select(col("q_id"), col("t_id"),
+          q9(VecSearch.cos("q", "t")).as("cos_q9")),
+        Seq("q_id"), "cos_q9", "t_id", MarginK)
       .localCheckpoint() // ≤ Q·K rows, consumed three times below
     val aq = fwd.groupBy(col("q_id")).agg(sum(col("cos_q9")).as("asum"))
     val candv = fwd.select(col("t_id")).distinct().join(t, Seq("t_id"))
-    val wb = Window.partitionBy(col("t_id"))
-      .orderBy(col("cos_q9").desc, col("s_id").asc)
-    val back = broadcast(candv)
-      .join(s, col("t_id") =!= col("s_id"))
-      .select(col("t_id"), col("s_id"),
-        q9(VectorOps.cosineFrom(VectorOps.dotQ(col("tv"), col("sv")),
-          col("tn"), col("sn"))).as("cos_q9"))
-      .withColumn("r", row_number().over(wb))
-      .filter(col("r") <= MarginK)
+    val back = VecSearch.topK(broadcast(candv)
+        .join(s, col("t_id") =!= col("s_id"))
+        .select(col("t_id"), col("s_id"),
+          q9(VecSearch.cos("t", "s")).as("cos_q9")),
+        Seq("t_id"), "cos_q9", "s_id", MarginK)
       .groupBy(col("t_id")).agg(sum(col("cos_q9")).as("bsum"))
     val wm = Window.partitionBy(col("q_id"))
       .orderBy(col("margin_ppm").desc, col("t_id").asc)

@@ -239,20 +239,9 @@ object ClusterOps {
     * (exhaustive argmin or coarse-quantizer shortlist). */
   private def withinClusterPairs(spark: SparkSession, dir: String,
       asg: DataFrame, threshold: Double): DataFrame = {
-    val e = emb(spark, dir)
-      .select(col("vec_id"), VectorOps.quantize(col("embedding")).as("v"))
-      .withColumn("n2", VectorOps.norm2Q(col("v")))
-    val x = asg.select(col("vec_id"), col("cluster")).join(e, "vec_id")
-    x.select(col("cluster").as("ca"), col("vec_id").as("i"),
-        col("v").as("iv"), col("n2").as("ina"))
-      .join(x.select(col("cluster").as("cb"), col("vec_id").as("j"),
-        col("v").as("jv"), col("n2").as("jnb")),
-        col("ca") === col("cb") && col("i") < col("j"))
-      .select(col("i"), col("j"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("iv"), col("jv")),
-          col("ina"), col("jnb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .orderBy(col("i"), col("j"))
+    val e = VecSearch.side(emb(spark, dir), col("vec_id"), "")
+    VecSearch.blockPairs(asg.select(col("vec_id"), col("cluster"))
+      .join(e, "vec_id"), "vec_id", "cluster", threshold)
   }
 
   /** Target cluster SIZE for the scale-safe config: k = ⌈N / this⌉,

@@ -1136,19 +1136,25 @@ object DedupOps {
        |  UNION
        |  SELECT r.a, e.b FROM ${pre}reach r JOIN ${pre}edges e ON r.b = e.a)""".stripMargin
 
-  val dedupKeepBestSql: String =
-    s"""WITH RECURSIVE d AS (
+  /** The same-lang/source token-Jaccard ≥ 0.8 pair CTE (`${pre}d`
+    * token sets, `${pre}p` pairs) and its [[reachCtes]] closure — the
+    * cluster input of every near-dup oracle over `documents`. */
+  private[graft] def jaccardReachCtes(pre: String = ""): String =
+    s"""${pre}d AS (
        |  SELECT doc_id, lang, source,
        |    list_distinct(string_split(text, ' ')) AS toks
        |  FROM documents),
-       |p AS (
+       |${pre}p AS (
        |  SELECT a.doc_id AS i, b.doc_id AS j
-       |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
+       |  FROM ${pre}d a JOIN ${pre}d b ON a.lang = b.lang AND a.source = b.source
        |    AND a.doc_id < b.doc_id
        |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
        |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
        |    >= 0.8),
-       |${reachCtes("p")},
+       |${reachCtes(s"${pre}p", pre)}""".stripMargin
+
+  val dedupKeepBestSql: String =
+    s"""WITH RECURSIVE ${jaccardReachCtes()},
        |lab AS (SELECT a AS doc_id, MIN(b) AS keep_id FROM reach GROUP BY a),
        |q AS (SELECT doc_id, quality_ppm FROM
        |  (${graft.operators.TextAnalysis.qualityScoreSql}) qs),
@@ -1163,18 +1169,7 @@ object DedupOps {
        |ORDER BY doc_id""".stripMargin
 
   val dedupSoftWeightsSql: String =
-    s"""WITH RECURSIVE d AS (
-      |  SELECT doc_id, lang, source,
-      |    list_distinct(string_split(text, ' ')) AS toks
-      |  FROM documents),
-      |p AS (
-      |  SELECT a.doc_id AS i, b.doc_id AS j
-      |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-      |    AND a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-      |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      |    >= 0.8),
-      |${reachCtes("p")},
+    s"""WITH RECURSIVE ${jaccardReachCtes()},
       |lab AS (SELECT a AS doc_id, MIN(b) AS keep_id FROM reach GROUP BY a),
       |cl AS (
       |  SELECT doc.doc_id, COALESCE(lab.keep_id, doc.doc_id) AS cl
@@ -1187,18 +1182,7 @@ object DedupOps {
       |ORDER BY cl.doc_id""".stripMargin
 
   val dedupClustersSql: String =
-    s"""WITH RECURSIVE d AS (
-      |  SELECT doc_id, lang, source,
-      |    list_distinct(string_split(text, ' ')) AS toks
-      |  FROM documents),
-      |p AS (
-      |  SELECT a.doc_id AS i, b.doc_id AS j
-      |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-      |    AND a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-      |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      |    >= 0.8),
-      |${reachCtes("p")}
+    s"""WITH RECURSIVE ${jaccardReachCtes()}
       |SELECT a AS doc_id, MIN(b) AS keep_id
       |FROM reach
       |GROUP BY a
@@ -1437,18 +1421,7 @@ object DedupOps {
   }
 
   val nearDupCleanSql: String =
-    s"""WITH RECURSIVE d AS (
-      |  SELECT doc_id, lang, source,
-      |    list_distinct(string_split(text, ' ')) AS toks
-      |  FROM documents),
-      |p AS (
-      |  SELECT a.doc_id AS i, b.doc_id AS j
-      |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-      |    AND a.doc_id < b.doc_id
-      |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-      |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      |    >= 0.8),
-      |${reachCtes("p")},
+    s"""WITH RECURSIVE ${jaccardReachCtes()},
       |drop AS (
       |  SELECT a AS doc_id FROM reach GROUP BY a HAVING MIN(b) <> a)
       |SELECT doc_id, lang, source, n_chars FROM documents

@@ -12,7 +12,8 @@ import graft.functions.SortedIntersectCount
   * `containmentPairs`, `prefixJoinPairs` (`ingestPairs` uses the
   * [[jaccard]] verify alone) and `simhashPairs` through [[hamming]];
   * [[MultimodalOps]]' image and audio fingerprint graphs through
-  * [[hamming]].
+  * [[hamming]]. Cosine pairs over embedding vectors live in
+  * [[VecSearch]].
   *
   * Why the numbered repartition sits ABOVE the checkpoint: a
   * `localCheckpoint` discards its plan's output partitioning, so a

@@ -213,34 +213,29 @@ object PqOps {
               lit(subDim)),
             col("cv"), (x, y) => (x - y) * (x - y)),
           lit(0L), (acc, x) => acc + x).as("pd"))
-    val sl = codes
+    val adc = codes
       .join(broadcast(lut),
         col("m") === col("lm") && col("code") === col("lcl"))
       .filter(col("vec_id") =!= col("q_vec_id"))
       .groupBy(col("q_vec_id"), col("vec_id"))
       .agg(sum(col("pd")).as("adc_dist"))
-      .withColumn("arank", row_number().over(
-        Window.partitionBy(col("q_vec_id"))
-          .orderBy(col("adc_dist"), col("vec_id"))))
-      .filter(col("arank") <= shortlist)
+    val sl = VecSearch.topK(adc, Seq("q_vec_id"), "adc_dist", "vec_id",
+        shortlist, desc = false)
       .select(col("q_vec_id"), col("vec_id").as("c_vec_id"))
     // exact integer-L2 re-rank of the constant-size shortlist — the
     // ONLY stage that touches raw vectors after encoding, and it reads
     // exactly Q·Shortlist of them via equi-joins (never a corpus scan)
     val qv = e.filter(col("vec_id") < QueryCount)
       .select(col("vec_id").as("q_vec_id"), col("v").as("qv2"))
-    val out = broadcast(sl)
-      .join(e.select(col("vec_id").as("c_vec_id"), col("v").as("cv2")),
-        Seq("c_vec_id"))
-      .join(broadcast(qv), Seq("q_vec_id"))
-      .select(col("q_vec_id"), col("c_vec_id"),
-        aggregate(
-          zip_with(col("qv2"), col("cv2"), (x, y) => (x - y) * (x - y)),
-          lit(0L), (acc, x) => acc + x).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_vec_id"))
-          .orderBy(col("d2"), col("c_vec_id"))).cast("long"))
-      .filter(col("rank") <= K)
+    val out = VecSearch.topK(broadcast(sl)
+        .join(e.select(col("vec_id").as("c_vec_id"), col("v").as("cv2")),
+          Seq("c_vec_id"))
+        .join(broadcast(qv), Seq("q_vec_id"))
+        .select(col("q_vec_id"), col("c_vec_id"),
+          aggregate(
+            zip_with(col("qv2"), col("cv2"), (x, y) => (x - y) * (x - y)),
+            lit(0L), (acc, x) => acc + x).as("d2")),
+        Seq("q_vec_id"), "d2", "c_vec_id", K, desc = false)
       .select(col("q_vec_id"), col("c_vec_id"), col("rank"), col("d2"))
       .localCheckpoint()
     es.unpersist()

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -209,39 +208,25 @@ object ScalarQuantOps {
   def annInt8(spark: SparkSession, dir: String,
       shortlist: Int = Shortlist): DataFrame = {
     // codes are stored 8-bit-valued; widen to long only at the dot
-    // (ArrayDotProduct's exact-integer element type)
+    // (ArrayDotProduct's exact-integer element type); the codes ride as
+    // the `qb`/`cb` sides, the fixed-point vectors as `q`/`c`
     val coded = withQuant(emb(spark, dir), "embedding")
       .select(col("vec_id"), col("embedding"),
-        col("qvec").cast("array<bigint>").as("qvec"))
-      .withColumn("qn", VectorOps.norm2Q(col("qvec")))
-    val queries = coded.filter(col("vec_id") < SimilarityOps.QueryCount)
-      .select(col("vec_id").as("q_vec_id"), col("qvec").as("q_qvec"),
-        col("qn").as("q_qn"),
-        VectorOps.quantize(col("embedding")).as("q_fx"))
-      .withColumn("q_fxn", VectorOps.norm2Q(col("q_fx")))
-    val cands = coded.select(col("vec_id").as("c_vec_id"), col("qvec"),
-      col("qn"), VectorOps.quantize(col("embedding")).as("c_fx"))
-      .withColumn("c_fxn", VectorOps.norm2Q(col("c_fx")))
-    val wShort = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("icos").desc, col("c_vec_id").asc)
-    val short = broadcast(queries)
-      .join(cands, col("q_vec_id") =!= col("c_vec_id"))
-      .select(col("q_vec_id"), col("c_vec_id"), col("q_fx"), col("q_fxn"),
-        col("c_fx"), col("c_fxn"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("q_qvec"), col("qvec")),
-          col("q_qn"), col("qn")).as("icos"))
-      .withColumn("srank", row_number().over(wShort))
-      .filter(col("srank") <= shortlist)
-    val wFinal = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
-    short
-      .select(col("q_vec_id"), col("c_vec_id"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("q_fx"), col("c_fx")),
-          col("q_fxn"), col("c_fxn")).as("cos"))
-      .withColumn("rank", row_number().over(wFinal).cast("long"))
-      .filter(col("rank") <= SimilarityOps.K)
-      .select(col("q_vec_id"), col("c_vec_id"), col("rank"), col("cos"))
-      .orderBy(col("q_vec_id"), col("rank"))
+        col("qvec").cast("array<bigint>").as("bv"))
+      .withColumn("bn", VectorOps.norm2Q(col("bv")))
+    def codes(p: String) =
+      Seq(col("bv").as(s"${p}bv"), col("bn").as(s"${p}bn"))
+    val queries = VecSearch.side(
+      coded.filter(col("vec_id") < SimilarityOps.QueryCount),
+      col("vec_id").as("q_vec_id"), "q", codes("q"): _*)
+    val cands = VecSearch.side(coded, col("vec_id").as("c_vec_id"), "c",
+      codes("c"): _*)
+    val short = VecSearch.topK(broadcast(queries)
+        .join(cands, col("q_vec_id") =!= col("c_vec_id"))
+        .select(col("q_vec_id"), col("c_vec_id"), col("qv"), col("qn"),
+          col("cv"), col("cn"), VecSearch.cos("qb", "cb").as("icos")),
+      Seq("q_vec_id"), "icos", "c_vec_id", shortlist)
+    VecSearch.rankCos(short, SimilarityOps.K)
   }
 
   val annInt8Sql: String = {

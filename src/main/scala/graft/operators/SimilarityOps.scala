@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorOps
 import graft.sources.{ArtifactStore, Tables}
 
@@ -36,47 +35,23 @@ object SimilarityOps {
     * the K nearest other vectors. */
   def annTopK(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    // quantize + norm once per side; the pair loop only pays one dot
-    val cand = e.select(col("vec_id").as("c_vec_id"),
-        VectorOps.quantize(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm2Q(col("cv")))
-    val queries = e.filter(col("vec_id") < QueryCount)
-      .select(col("vec_id").as("q_vec_id"),
-        VectorOps.quantize(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm2Q(col("qv")))
-    val w = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
-    broadcast(queries)
-      .join(cand, col("q_vec_id") =!= col("c_vec_id"))
-      .select(col("q_vec_id"), col("c_vec_id"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("q_vec_id"), col("c_vec_id"), col("rank"), col("cos"))
-      .orderBy(col("q_vec_id"), col("rank"))
+    VecSearch.rankCos(broadcast(querySide(e))
+      .join(candSide(e), col("q_vec_id") =!= col("c_vec_id")), K)
   }
 
-  val annTopKSql: String =
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_vec_id, ${VectorOps.QuantizeSql} AS qv
-       |  FROM embeddings WHERE vec_id < $QueryCount),
-       |c AS (
-       |  SELECT vec_id AS c_vec_id, ${VectorOps.QuantizeSql} AS cv
-       |  FROM embeddings),
-       |p AS (
-       |  SELECT q_vec_id, c_vec_id,
-       |    CAST(list_sum(list_transform(list_zip(qv, cv), z -> z[1] * z[2])) AS DOUBLE) /
-       |    (sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE)) *
-       |     sqrt(CAST(list_sum(list_transform(cv, x -> x * x)) AS DOUBLE))) AS cos
-       |  FROM q, c WHERE q_vec_id <> c_vec_id),
-       |r AS (
-       |  SELECT q_vec_id, c_vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_vec_id ORDER BY cos DESC, c_vec_id ASC) AS rank
-       |  FROM p)
-       |SELECT q_vec_id, c_vec_id, rank, cos FROM r
-       |WHERE rank <= $K
-       |ORDER BY q_vec_id, rank""".stripMargin
+  /** The `q` side of the queries (vec_id < [[QueryCount]]) of `e`. */
+  private def querySide(e: DataFrame, keep: Column*): DataFrame =
+    VecSearch.side(e.filter(col("vec_id") < QueryCount),
+      col("vec_id").as("q_vec_id"), "q", keep: _*)
+
+  /** The `c` side of every vector of `e`. */
+  private def candSide(e: DataFrame, keep: Column*): DataFrame =
+    VecSearch.side(e, col("vec_id").as("c_vec_id"), "c", keep: _*)
+
+  private val QueryWhere = s"vec_id < $QueryCount"
+
+  val annTopKSql: String = VecSearch.rankCosSql(QueryWhere, "",
+    "q, c WHERE q_vec_id <> c_vec_id", K)
 
   /** Dimension prefixes evaluated by [[annMatryoshka]]. */
   val MatryoshkaDims = Seq(8, 16, 32, 64)
@@ -98,33 +73,23 @@ object SimilarityOps {
     * [[annTopK]], which is the d=64 leg by construction. */
   def annMatryoshka(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    def sliced(v: Column, side: String): Seq[(Int, Column, Column)] =
-      MatryoshkaDims.map { d =>
-        val sv = slice(v, 1, d)
-        (d, sv.as(s"${side}v$d"), VectorOps.norm2Q(sv).as(s"${side}n$d"))
-      }
-    val cand = e.select(col("vec_id").as("c_vec_id") +:
-      sliced(VectorOps.quantize(col("embedding")), "c")
-        .flatMap(t => Seq(t._2, t._3)): _*)
-    val queries = e.filter(col("vec_id") < QueryCount)
-      .select(col("vec_id").as("q_vec_id") +:
-        sliced(VectorOps.quantize(col("embedding")), "q")
-          .flatMap(t => Seq(t._2, t._3)): _*)
-    val withCos = broadcast(queries)
-      .join(cand, col("q_vec_id") =!= col("c_vec_id"))
-      .select(Seq(col("q_vec_id"), col("c_vec_id")) ++
-        MatryoshkaDims.map(d => VectorOps.cosineFrom(
-          VectorOps.dotQ(col(s"qv$d"), col(s"cv$d")),
-          col(s"qn$d"), col(s"cn$d")).as(s"cos$d")): _*)
+    // one prefix side per dim: `q8v`/`q8n`, …, `c64v`/`c64n`
+    def sliced(p: String): Seq[Column] = MatryoshkaDims.flatMap { d =>
+      val sv = slice(VectorOps.quantize(col("embedding")), 1, d)
+      Seq(sv.as(s"$p${d}v"), VectorOps.norm2Q(sv).as(s"$p${d}n"))
+    }
+    val withCos = broadcast(e.filter(col("vec_id") < QueryCount)
+        .select(col("vec_id").as("q_vec_id") +: sliced("q"): _*))
+      .join(e.select(col("vec_id").as("c_vec_id") +: sliced("c"): _*),
+        col("q_vec_id") =!= col("c_vec_id"))
+      .select(Seq(col("q_vec_id"), col("c_vec_id")) ++ MatryoshkaDims.map(
+        d => VecSearch.cos(s"q$d", s"c$d").as(s"cos$d")): _*)
       .select(col("q_vec_id"), col("c_vec_id"),
         expr("stack(" + MatryoshkaDims.size + ", " +
           MatryoshkaDims.map(d => s"CAST($d AS BIGINT), cos$d")
             .mkString(", ") + ") AS (dim, cos)"))
-    val w = Window.partitionBy(col("dim"), col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
-    val topk = withCos
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
+    val topk = VecSearch.topK(withCos, Seq("dim", "q_vec_id"), "cos",
+        "c_vec_id", K)
       .select(col("dim"), col("q_vec_id"), col("c_vec_id"))
       .localCheckpoint() // feeds itself (the d=64 ground-truth join)
     val gt = topk.filter(col("dim") === lit(64L))
@@ -190,51 +155,15 @@ object SimilarityOps {
   def hardNegatives(spark: SparkSession, dir: String,
       k: Int = NegK): DataFrame = {
     val e = emb(spark, dir)
-    val cand = e.select(col("vec_id").as("c_vec_id"),
-        col("label").as("c_label"),
-        VectorOps.quantize(col("embedding")).as("cv"))
-      .withColumn("cn", VectorOps.norm2Q(col("cv")))
-    val queries = e.filter(col("vec_id") < QueryCount)
-      .select(col("vec_id").as("q_vec_id"), col("label").as("q_label"),
-        VectorOps.quantize(col("embedding")).as("qv"))
-      .withColumn("qn", VectorOps.norm2Q(col("qv")))
-    val w = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
-    broadcast(queries)
-      .join(cand, col("q_label") =!= col("c_label"))
-      .select(col("q_vec_id"), col("q_label"), col("c_vec_id"),
-        col("c_label"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_vec_id"), col("q_label"), col("c_vec_id"),
-        col("c_label"), col("rank"), col("cos"))
-      .orderBy(col("q_vec_id"), col("rank"))
+    VecSearch.rankCos(broadcast(querySide(e, col("label").as("q_label")))
+        .join(candSide(e, col("label").as("c_label")),
+          col("q_label") =!= col("c_label")),
+      k, Seq("q_label"), Seq("c_label"))
   }
 
-  val hardNegativesSql: String =
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_vec_id, label AS q_label,
-       |    ${VectorOps.QuantizeSql} AS qv
-       |  FROM embeddings WHERE vec_id < $QueryCount),
-       |c AS (
-       |  SELECT vec_id AS c_vec_id, label AS c_label,
-       |    ${VectorOps.QuantizeSql} AS cv
-       |  FROM embeddings),
-       |p AS (
-       |  SELECT q_vec_id, q_label, c_vec_id, c_label,
-       |    CAST(list_sum(list_transform(list_zip(qv, cv), z -> z[1] * z[2])) AS DOUBLE) /
-       |    (sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE)) *
-       |     sqrt(CAST(list_sum(list_transform(cv, x -> x * x)) AS DOUBLE))) AS cos
-       |  FROM q, c WHERE q_label <> c_label),
-       |r AS (
-       |  SELECT q_vec_id, q_label, c_vec_id, c_label, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_vec_id ORDER BY cos DESC, c_vec_id ASC) AS rank
-       |  FROM p)
-       |SELECT q_vec_id, q_label, c_vec_id, c_label, rank, cos FROM r
-       |WHERE rank <= $NegK
-       |ORDER BY q_vec_id, rank""".stripMargin
+  val hardNegativesSql: String = VecSearch.rankCosSql(QueryWhere, "",
+    "q, c WHERE q_label <> c_label", NegK, Some("label"), Seq("q_label"),
+    Seq("c_label"))
 
   /** Registered exact embedding near-dup contract: all (i < j) pairs
     * WITHIN THE SAME `label` BLOCK with cosine ≥ `threshold` — the
@@ -252,19 +181,8 @@ object SimilarityOps {
     * one codegen'd integer dot on pre-quantized, pre-normed vectors. */
   def dedupEmbeddingBlocked(spark: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
-    val e = emb(spark, dir)
-    val a = e.select(col("label").as("bl"), col("vec_id").as("i"),
-        VectorOps.quantize(col("embedding")).as("iv"))
-      .withColumn("ina", VectorOps.norm2Q(col("iv")))
-    val b = e.select(col("label").as("br"), col("vec_id").as("j"),
-        VectorOps.quantize(col("embedding")).as("jv"))
-      .withColumn("jnb", VectorOps.norm2Q(col("jv")))
-    a.join(b, col("bl") === col("br") && col("i") < col("j"))
-      .select(col("i"), col("j"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("iv"), col("jv")),
-          col("ina"), col("jnb")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .orderBy(col("i"), col("j"))
+    VecSearch.blockPairs(VecSearch.side(emb(spark, dir), col("vec_id"), "",
+      col("label")), "vec_id", "label", threshold)
   }
 
   /** Embedding near-dup pairs at a HIGH threshold via hyperplane-LSH
@@ -280,30 +198,38 @@ object SimilarityOps {
     * pinned by the planted-dup spec (DedupSimilaritySpec). */
   def dedupEmbeddingLsh(d: DataFrame, threshold: Double = 0.9,
       tables: Int = 16, bits: Int = 8, dim: Int = 64): DataFrame = {
-    val e = d.select(col("vec_id"),
-        lshBucketArray(col("embedding"), tables, bits, dim).as("bkts"),
-        VectorOps.quantize(col("embedding")).as("v"))
-      .withColumn("n2", VectorOps.norm2Q(col("v")))
-    // ONE self-join on (table, bucket) via posexplode — not `tables`
-    // unioned joins (16 separate join stages cost ~5 s of pure
-    // scheduling at local scale and 16 shuffles on a cluster)
-    val keyed = e.select(col("vec_id"), posexplode(col("bkts")))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk")
+    val (side, keyed) = lshKeyed(d, tables, bits, dim)
     val cands = keyed.as("x").join(keyed.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bk") === col("y.bk") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("i"), col("y.vec_id").as("j"))
       .distinct()
-    val side = e.select(col("vec_id"), col("v"), col("n2"))
-    cands
-      .join(side.select(col("vec_id").as("i"), col("v").as("iv"),
-        col("n2").as("ina")), Seq("i"))
-      .join(side.select(col("vec_id").as("j"), col("v").as("jv"),
-        col("n2").as("jnb")), Seq("j"))
-      .select(col("i"), col("j"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("iv"), col("jv")),
-          col("ina"), col("jnb")).as("cos"))
+    lshJoinBack(cands, side, "i", "i", "j", "j")
+      .select(col("i"), col("j"), VecSearch.cos("i", "j").as("cos"))
       .filter(col("cos") >= threshold)
+  }
+
+  /** The LSH candidate phase's two relations over `d`: its `""` side
+    * (vec_id, v, n) and its bucket keys (vec_id, tbl, bk), one row per
+    * table — so ONE self-join on (tbl, bk) collides every table, not
+    * `tables` unioned joins (16 separate join stages cost ~5 s of pure
+    * scheduling at local scale and 16 shuffles on a cluster). */
+  private def lshKeyed(d: DataFrame, tables: Int, bits: Int,
+      dim: Int): (DataFrame, DataFrame) = {
+    val e = VecSearch.side(d, col("vec_id"), "",
+      lshBucketArray(col("embedding"), tables, bits, dim).as("bkts"))
+    (e.select(col("vec_id"), col("v"), col("n")),
+      e.select(col("vec_id"), posexplode(col("bkts")))
+        .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk"))
+  }
+
+  /** Candidate id pairs (`a`, `b`) joined back to their vectors in
+    * `side`, as the sides prefixed `pa` and `pb`. */
+  private def lshJoinBack(cands: DataFrame, side: DataFrame, a: String,
+      pa: String, b: String, pb: String): DataFrame = {
+    def end(id: String, p: String) = side.select(col("vec_id").as(id),
+      col("v").as(s"${p}v"), col("n").as(s"${p}n"))
+    cands.join(end(a, pa), Seq(a)).join(end(b, pb), Seq(b))
   }
 
   /** Driver-facing LSH embedding-dedup query: summary row over the
@@ -378,8 +304,7 @@ object SimilarityOps {
     * construction, unlike a vocab) and keeps its best-cosine cell.
     * Returns (vec_id, cell, v, n2). */
   private def ivfVecs(e: DataFrame): DataFrame =
-    e.select(col("vec_id"), VectorOps.quantize(col("embedding")).as("v"))
-      .withColumn("n2", VectorOps.norm2Q(col("v")))
+    VecSearch.side(e, col("vec_id"), "")
 
   /** The coarse centroid set: a seeded uniform sample of `cells`
     * corpus vectors, as (cell, cv, cn). The sampling hash is
@@ -397,7 +322,7 @@ object SimilarityOps {
         md5(concat(col("vec_id").cast("string"), lit(s"_$seed"))))
       .orderBy(col("hk"), col("vec_id")).limit(cells)
       .select(col("vec_id").as("cell"), col("v").as("cv"),
-        col("n2").as("cn"))
+        col("n").as("cn"))
 
   def ivfAssign(e: DataFrame, cells: Int = 16,
       seed: Long = 42L): DataFrame =
@@ -406,18 +331,12 @@ object SimilarityOps {
   /** Assignment against a caller-supplied centroid set — lets callers
     * that also probe centroids (annIvfTopK) build the subplan ONCE
     * instead of paying the centroid scan+sort twice. */
-  def ivfAssignTo(e: DataFrame, cents: DataFrame): DataFrame = {
-    val vecs = ivfVecs(e)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    vecs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("n2"), col("cell"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("v"), col("cv")),
-          col("n2"), col("cn")).as("cell_cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("cell"), col("v"), col("n2"))
-  }
+  def ivfAssignTo(e: DataFrame, cents: DataFrame): DataFrame =
+    VecSearch.topK(ivfVecs(e).crossJoin(broadcast(cents))
+        .select(col("vec_id"), col("v"), col("n"), col("cell"),
+          VecSearch.cos("", "c").as("cell_cos")),
+        Seq("vec_id"), "cell_cos", "cell", 1)
+      .select(col("vec_id"), col("cell"), col("v"), col("n").as("n2"))
 
   /** IVF top-k: each query probes its `probes` best cells and
     * exact-reranks only the vectors in those cells — search cost
@@ -497,81 +416,36 @@ object SimilarityOps {
     * partitions before any dot is paid. */
   def annIvfFiltered(spark: SparkSession, dir: String, cells: Int = 16,
       probes: Int = 16): DataFrame = {
-    val e = emb(spark, dir)
     val (cents, assigned) = corpusIvf(spark, dir, cells)
-    val labeled = assigned
-      .join(e.select(col("vec_id"), col("label")), Seq("vec_id"))
+    val labeled = assigned.join(emb(spark, dir).select(col("vec_id"),
+      col("label").as("c_label")), Seq("vec_id"))
     val queries = labeled.filter(col("vec_id") < QueryCount)
       .select(col("vec_id").as("q_vec_id"), col("v").as("qv"),
-        col("n2").as("qn"), col("label").as("q_label"))
-    val pw = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("probe_cos").desc, col("cell").asc)
-    val probed = queries.crossJoin(broadcast(cents))
-      .select(col("q_vec_id"), col("qv"), col("qn"), col("q_label"),
-        col("cell"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("probe_cos"))
-      .withColumn("rk", row_number().over(pw))
-      .filter(col("rk") <= probes)
-      .select(col("q_vec_id"), col("qv"), col("qn"), col("q_label"),
-        col("cell"))
-    val w = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
-    probed.join(labeled.select(col("cell"), col("vec_id").as("c_vec_id"),
-        col("v").as("cv"), col("n2").as("cn"),
-        col("label").as("c_label")), Seq("cell"))
-      .filter(col("q_vec_id") =!= col("c_vec_id") &&
-        col("q_label") === col("c_label"))
-      .select(col("q_vec_id"),
-        col("q_label").cast("long").as("q_label"), col("c_vec_id"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cos"))
-      .dropDuplicates("q_vec_id", "c_vec_id")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("q_vec_id"), col("q_label"), col("c_vec_id"),
-        col("rank"), col("cos"))
-      .orderBy(col("q_vec_id"), col("rank"))
+        col("n2").as("qn"), col("c_label").cast("long").as("q_label"))
+    ivfSearch(queries, cents, labeled, probes, cells, Seq("q_label"),
+      col("q_label") === col("c_label"))
   }
 
-  val annIvfFilteredSql: String =
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_vec_id, CAST(label AS BIGINT) AS q_label,
-       |    ${VectorOps.QuantizeSql} AS qv
-       |  FROM embeddings WHERE vec_id < $QueryCount),
-       |c AS (
-       |  SELECT vec_id AS c_vec_id, CAST(label AS BIGINT) AS c_label,
-       |    ${VectorOps.QuantizeSql} AS cv
-       |  FROM embeddings),
-       |p AS (
-       |  SELECT q_vec_id, q_label, c_vec_id,
-       |    CAST(list_sum(list_transform(list_zip(qv, cv), z -> z[1] * z[2])) AS DOUBLE) /
-       |    (sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE)) *
-       |     sqrt(CAST(list_sum(list_transform(cv, x -> x * x)) AS DOUBLE))) AS cos
-       |  FROM q JOIN c ON q_vec_id <> c_vec_id AND q_label = c_label),
-       |r AS (
-       |  SELECT q_vec_id, q_label, c_vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_vec_id ORDER BY cos DESC, c_vec_id ASC) AS rank
-       |  FROM p)
-       |SELECT q_vec_id, q_label, c_vec_id, rank, cos FROM r
-       |WHERE rank <= $K
-       |ORDER BY q_vec_id, rank""".stripMargin
+  val annIvfFilteredSql: String = VecSearch.rankCosSql(QueryWhere, "",
+    "q JOIN c ON q_vec_id <> c_vec_id AND q_label = c_label", K,
+    Some("CAST(label AS BIGINT)"), Seq("q_label"))
 
-  /** The IVF probe + exact-rerank tail shared by [[annIvfTopK]] and
-    * [[annIngest]]: `queries` (q_vec_id, qv, qn) each probe their
-    * `probes` best-cosine cells of `cents`, then exact-rerank only the
-    * `assigned` vectors in those cells. */
+  /** The IVF probe + exact-rerank tail shared by [[annIvfTopK]],
+    * [[annIvfFiltered]] and [[annIngest]]: `queries` (q_vec_id, qv,
+    * qn, carry…) each probe their `probes` best-cosine cells of
+    * `cents`, then exact-rerank only the `assigned` vectors in those
+    * cells that satisfy `pair` — the predicate reads the query columns
+    * and `assigned`'s, with vec_id/v/n2 read as c_vec_id/cv/cn.
+    * Output: (q_vec_id, carry…, c_vec_id, rank, cos). */
   private def ivfSearch(queries: DataFrame, cents: DataFrame,
-      assigned: DataFrame, probes: Int, cells: Int = 16): DataFrame = {
-    val pw = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("probe_cos").desc, col("cell").asc)
-    val probed = queries.crossJoin(broadcast(cents))
-      .select(col("q_vec_id"), col("qv"), col("qn"), col("cell"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("probe_cos"))
-      .withColumn("rk", row_number().over(pw))
-      .filter(col("rk") <= probes)
-      .select(col("q_vec_id"), col("qv"), col("qn"), col("cell"))
+      assigned: DataFrame, probes: Int, cells: Int = 16,
+      carry: Seq[String] = Nil, pair: Column = lit(true)): DataFrame = {
+    val qCols = (Seq("q_vec_id", "qv", "qn") ++ carry).map(col)
+    val probed = VecSearch.topK(queries.crossJoin(broadcast(cents))
+        .select(qCols :+ col("cell") :+
+          VecSearch.cos("q", "c").as("probe_cos"): _*),
+        Seq("q_vec_id"), "probe_cos", "cell", probes)
+      .select(qCols :+ col("cell"): _*)
     // r15 (§2.5): `cell` is a LOW-CARDINALITY join key — at the
     // registered cells=16 the rerank join hashes into ≤16 reduce
     // buckets no matter how many cores exist (measured at the 10×
@@ -589,9 +463,10 @@ object SimilarityOps {
     // full-width reduce tasks.
     val dp = queries.sparkSession.sparkContext.defaultParallelism
     val nSalt = math.max(1, math.min(dp, 4 * dp / math.max(1, cells)))
-    val cside = assigned.select(col("cell"),
-      col("vec_id").as("c_vec_id"), col("v").as("cv"),
-      col("n2").as("cn"))
+    // any other column of `assigned` (a label `pair` reads) rides along
+    val extra = assigned.columns.toSeq.diff(Seq("cell", "vec_id", "v", "n2"))
+    val cside = assigned.select(Seq(col("cell"), col("vec_id").as("c_vec_id"),
+      col("v").as("cv"), col("n2").as("cn")) ++ extra.map(col): _*)
     // Both sides carry an EXPLICIT repartition(dp) on the join key:
     // the join's inputs are KBs-to-MBs (queries×probes rows and the
     // replicated assigned side) while its OUTPUT is the quadratic
@@ -610,10 +485,8 @@ object SimilarityOps {
           (0 until nSalt).map(s => lit(s.toLong)): _*)))
           .repartition(dp, col("cell"), col("salt")),
           Seq("cell", "salt"))
-    val w = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
     // No dropDuplicates on (q_vec_id, c_vec_id): ivfAssignTo keeps
-    // exactly ONE cell per vector (row_number rk === 1), so a (q, c)
+    // exactly ONE cell per vector (its top-1 rank), so a (q, c)
     // pair can match in at most one probed cell and the pair set is
     // structurally distinct already (r15; oracle-verified). The old
     // defensive dedup cost a full pair-set exchange AND kept the
@@ -621,15 +494,8 @@ object SimilarityOps {
     // join — with it gone, each join task forwards only its local
     // top-K per query into the window exchange instead of every pair
     // (534 MB → KBs on the 10× probe leg).
-    paired
-      .filter(col("q_vec_id") =!= col("c_vec_id"))
-      .select(col("q_vec_id"), col("c_vec_id"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("q_vec_id"), col("c_vec_id"), col("rank"), col("cos"))
-      .orderBy(col("q_vec_id"), col("rank"))
+    VecSearch.rankCos(
+      paired.filter(col("q_vec_id") =!= col("c_vec_id") && pair), K, carry)
   }
 
   /** LSH-bucketed ANN: collide on any table's bucket, exact-rerank the
@@ -645,16 +511,7 @@ object SimilarityOps {
     * since production recall is seed-defined). */
   def annLshTopK(spark: SparkSession, dir: String,
       tables: Int = 4, bits: Int = 8): DataFrame = {
-    val e = emb(spark, dir).select(col("vec_id"),
-        lshBucketArray(col("embedding"), tables, bits).as("bkts"),
-        VectorOps.quantize(col("embedding")).as("v"))
-      .withColumn("n2", VectorOps.norm2Q(col("v")))
-    // ONE (table, bucket) equi-join via posexplode — the shape proven
-    // in dedupEmbeddingLsh; the earlier per-table form planned `tables`
-    // separate join stages + a union (4 shuffles on a cluster and ~1 s
-    // of pure stage scheduling at local scale for the same candidates).
-    val keyed = e.select(col("vec_id"), posexplode(col("bkts")))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk")
+    val (side, keyed) = lshKeyed(emb(spark, dir), tables, bits, 64)
     val cands = keyed.filter(col("vec_id") < QueryCount)
       .withColumnRenamed("vec_id", "q_vec_id")
       .join(keyed.withColumnRenamed("vec_id", "c_vec_id"),
@@ -662,21 +519,8 @@ object SimilarityOps {
       .filter(col("q_vec_id") =!= col("c_vec_id"))
       .select(col("q_vec_id"), col("c_vec_id"))
       .distinct()
-    val side = e.select(col("vec_id"), col("v"), col("n2"))
-    val w = Window.partitionBy(col("q_vec_id"))
-      .orderBy(col("cos").desc, col("c_vec_id").asc)
-    cands
-      .join(side.select(col("vec_id").as("q_vec_id"), col("v").as("qv"),
-        col("n2").as("qn")), Seq("q_vec_id"))
-      .join(side.select(col("vec_id").as("c_vec_id"), col("v").as("cv"),
-        col("n2").as("cn")), Seq("c_vec_id"))
-      .select(col("q_vec_id"), col("c_vec_id"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("cv")),
-          col("qn"), col("cn")).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= K)
-      .select(col("q_vec_id"), col("c_vec_id"), col("rank"), col("cos"))
-      .orderBy(col("q_vec_id"), col("rank"))
+    VecSearch.rankCos(
+      lshJoinBack(cands, side, "q_vec_id", "q", "c_vec_id", "c"), K)
   }
 
   /** Deterministic arrival slice for [[annIngest]] — the embeddings
@@ -725,31 +569,12 @@ object SimilarityOps {
     * probed-cell join, never a corpus rescan. */
   def ivfProbe(batch: DataFrame, idx: IvfIndex,
       probes: Int = 16, cells: Int = 16): DataFrame =
-    ivfSearch(ivfVecs(batch)
-        .select(col("vec_id").as("q_vec_id"), col("v").as("qv"),
-          col("n2").as("qn")),
+    ivfSearch(VecSearch.side(batch, col("vec_id").as("q_vec_id"), "q"),
       idx.cents, idx.assigned, probes, cells)
 
-  val annIngestSql: String =
-    s"""WITH q AS (
-       |  SELECT vec_id AS q_vec_id, ${VectorOps.QuantizeSql} AS qv
-       |  FROM embeddings WHERE vec_id % $IngestVecMod = $IngestVecRem),
-       |c AS (
-       |  SELECT vec_id AS c_vec_id, ${VectorOps.QuantizeSql} AS cv
-       |  FROM embeddings WHERE vec_id % $IngestVecMod <> $IngestVecRem),
-       |p AS (
-       |  SELECT q_vec_id, c_vec_id,
-       |    CAST(list_sum(list_transform(list_zip(qv, cv), z -> z[1] * z[2])) AS DOUBLE) /
-       |    (sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE)) *
-       |     sqrt(CAST(list_sum(list_transform(cv, x -> x * x)) AS DOUBLE))) AS cos
-       |  FROM q, c),
-       |r AS (
-       |  SELECT q_vec_id, c_vec_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY q_vec_id ORDER BY cos DESC, c_vec_id ASC) AS rank
-       |  FROM p)
-       |SELECT q_vec_id, c_vec_id, rank, cos FROM r
-       |WHERE rank <= $K
-       |ORDER BY q_vec_id, rank""".stripMargin
+  val annIngestSql: String = VecSearch.rankCosSql(
+    s"vec_id % $IngestVecMod = $IngestVecRem",
+    s"vec_id % $IngestVecMod <> $IngestVecRem", "q, c", K)
 
   /** Embedding QA profile — the sanity pass a pipeline runs BEFORE
     * indexing or training on a vector table: per label, the vector
@@ -828,37 +653,25 @@ object SimilarityOps {
     * sort). The [[MmrK]] rounds are a statically-bounded job DAG over
     * those few rows (the BpeOps bounded-round idiom). */
   def mmrRerank(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
-    val sided = e.select(col("vec_id"),
-        VectorOps.quantize(col("embedding")).as("v"))
-      .withColumn("n2", VectorOps.norm2Q(col("v")))
+    val sided = VecSearch.side(emb(spark, dir), col("vec_id"), "")
     val queries = sided.filter(col("vec_id") < QueryCount)
-      .select(col("vec_id").as("q"), col("v").as("qv"), col("n2").as("qn"))
-    val wRel = Window.partitionBy(col("q"))
-      .orderBy(col("rel").desc, col("c").asc)
+      .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn"))
     // per-query candidate pool: exact top-MmrCand with vectors carried
     // for the pairwise sims below
-    val cand = broadcast(queries)
-      .join(sided, col("q") =!= col("vec_id"))
-      .select(col("q"), col("vec_id").as("c"), col("v"), col("n2"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("qv"), col("v")),
-          col("qn"), col("n2")).as("rel"))
-      .withColumn("cr", row_number().over(wRel))
-      .filter(col("cr") <= MmrCand)
-      .select(col("q"), col("c"), col("v"), col("n2"), col("rel"))
+    val cand = VecSearch.topK(broadcast(queries)
+        .join(sided, col("q") =!= col("vec_id"))
+        .select(col("q"), col("vec_id").as("c"), col("v"), col("n"),
+          VecSearch.cos("q", "").as("rel")), Seq("q"), "rel", "c", MmrCand)
+      .select(col("q"), col("c"), col("v"), col("n"), col("rel"))
       .localCheckpoint() // feeds the pair-sim self-join + every round
     val pairSim = cand.as("a").join(cand.as("b"),
         col("a.q") === col("b.q") && col("a.c") =!= col("b.c"))
       .select(col("a.q").as("q"), col("a.c").as("c1"), col("b.c").as("c2"),
-        VectorOps.cosineFrom(VectorOps.dotQ(col("a.v"), col("b.v")),
-          col("a.n2"), col("b.n2")).as("sim"))
+        VecSearch.cos("a.", "b.").as("sim"))
       .localCheckpoint() // Q×C² rows, reused every round
     val rel = cand.select(col("q"), col("c"), col("rel"))
 
-    var selected = rel
-      .withColumn("rk", row_number().over(wRelOn(col("q"), col("rel"),
-        col("c"))))
-      .filter(col("rk") === 1)
+    var selected = VecSearch.topK(rel, Seq("q"), "rel", "c", 1)
       .select(col("q"), col("c"), lit(1L).as("round"),
         col("rel").as("score"))
       .localCheckpoint()
@@ -872,10 +685,7 @@ object SimilarityOps {
       val scored = remaining.join(maxSim, Seq("q", "c"))
         .withColumn("score", lit(MmrLambda) * col("rel") -
           lit(1.0 - MmrLambda) * col("maxsim"))
-      val pick = scored
-        .withColumn("rk", row_number().over(wRelOn(col("q"), col("score"),
-          col("c"))))
-        .filter(col("rk") === 1)
+      val pick = VecSearch.topK(scored, Seq("q"), "score", "c", 1)
         .select(col("q"), col("c"), lit(r.toLong).as("round"), col("score"))
       selected = selected.unionAll(pick).localCheckpoint()
     }
@@ -884,9 +694,6 @@ object SimilarityOps {
         col("round"), col("score"))
       .orderBy(col("q_vec_id"), col("round"))
   }
-
-  private def wRelOn(q: Column, s: Column, c: Column) =
-    Window.partitionBy(q).orderBy(s.desc, c.asc)
 
   // -------- full SQL replays of the APPROXIMATE probe paths --------
   // (round-8: the md5 centroid sampling + md5 sign planes make every
@@ -976,14 +783,19 @@ object SimilarityOps {
        |      THEN 1 << CAST(sgn.b AS INT) ELSE 0 END) AS bkv
        |  FROM n, sgn GROUP BY n.vec_id, sgn.t)""".stripMargin
 
-  val annLshProbeSql: String =
-    s"""WITH $nCte,
+  /** The `n`, bucket and query-candidate CTEs of the ann_lsh_probe
+    * replays (4 tables × 8 bits). */
+  private lazy val lshProbeCtes: String =
+    s"""$nCte,
        |${lshBkCtes(tables = 4, bits = 8)},
        |cands AS MATERIALIZED (
        |  SELECT DISTINCT q.vec_id AS q_vec_id, c.vec_id AS c_vec_id
        |  FROM bk q JOIN bk c
        |    ON q.tbl = c.tbl AND q.bkv = c.bkv AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $QueryCount),
+       |  WHERE q.vec_id < $QueryCount)""".stripMargin
+
+  val annLshProbeSql: String =
+    s"""WITH $lshProbeCtes,
        |r AS MATERIALIZED (
        |  SELECT cd.q_vec_id, cd.c_vec_id,
        |    ${cosSql("qn.v", "qn.n2", "cn.v", "cn.n2")} AS cos,
@@ -1069,13 +881,7 @@ object SimilarityOps {
        |${recallTailSql(exactTopkSql)}""".stripMargin
 
   val annLshProbeRecallSql: String =
-    s"""WITH $nCte,
-       |${lshBkCtes(tables = 4, bits = 8)},
-       |cands AS MATERIALIZED (
-       |  SELECT DISTINCT q.vec_id AS q_vec_id, c.vec_id AS c_vec_id
-       |  FROM bk q JOIN bk c
-       |    ON q.tbl = c.tbl AND q.bkv = c.bkv AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id < $QueryCount),
+    s"""WITH $lshProbeCtes,
        |r AS MATERIALIZED (
        |  SELECT cd.q_vec_id, cd.c_vec_id,
        |    ROW_NUMBER() OVER (PARTITION BY cd.q_vec_id ORDER BY

@@ -315,18 +315,7 @@ object TextAnalysis {
        |    SELECT doc_id, source, n, quality_ppm,
        |      ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id ASC) AS rn
        |    FROM qscored) w WHERE rn = 1),
-       |jd AS (
-       |  SELECT doc_id, lang, source,
-       |    list_distinct(string_split(text, ' ')) AS toks
-       |  FROM documents),
-       |jp AS (
-       |  SELECT a.doc_id AS i, b.doc_id AS j
-       |  FROM jd a JOIN jd b ON a.lang = b.lang AND a.source = b.source
-       |    AND a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-       |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-       |    >= 0.8),
-       |${DedupOps.reachCtes("jp", "j")},
+       |${DedupOps.jaccardReachCtes("j")},
        |jdrop AS (
        |  SELECT a AS doc_id FROM jreach GROUP BY a HAVING MIN(b) <> a),
        |s2 AS (
@@ -494,10 +483,6 @@ object TextAnalysis {
       |FROM occ JOIN lp ON occ.w1 = lp.w1 AND occ.w2 = lp.w2
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin
-
-  /** Absolute-discount constant for [[knBigram]], in centi units
-    * (75 = the standard D = 0.75 of Chen & Goodman 1999). */
-  val KnDiscountCenti = 75L
 
   /** Interpolated Kneser-Ney bigram LM estimation (Kneser & Ney 1995;
     * Chen & Goodman 1999 eq. 18) — the LM-TRAINING artifact next to
@@ -1175,18 +1160,7 @@ object TextAnalysis {
   val splitLeakageSql: String = {
     val hd = TextQueries.seededHashSqlExpr("doc_id", 11L)
     val hc = TextQueries.seededHashSqlExpr("cluster_id", 11L)
-    s"""WITH RECURSIVE d AS (
-       |  SELECT doc_id, lang, source,
-       |    list_distinct(string_split(text, ' ')) AS toks
-       |  FROM documents),
-       |p AS (
-       |  SELECT a.doc_id AS i, b.doc_id AS j
-       |  FROM d a JOIN d b ON a.lang = b.lang AND a.source = b.source
-       |    AND a.doc_id < b.doc_id
-       |  WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-       |    CAST(len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-       |    >= 0.8),
-       |${DedupOps.reachCtes("p")},
+    s"""WITH RECURSIVE ${DedupOps.jaccardReachCtes()},
        |lab AS (SELECT a AS doc_id, MIN(b) AS keep_id FROM reach GROUP BY a),
        |base0 AS (
        |  SELECT dd.doc_id, COALESCE(l.keep_id, dd.doc_id) AS cluster_id

@@ -15,10 +15,6 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, Timesta
   * difference between minutes and hours.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -88,8 +84,4 @@ object Tables {
     val df = load(spark, dir, "events")
     df.withColumn("ts_us", epochMicros(df.schema("ts").dataType))
   }
-
-  /** Register every table as a temp view so `spark.sql` works too. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

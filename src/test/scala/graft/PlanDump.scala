@@ -9,12 +9,13 @@ import graft.operators.{DedupOps, MultimodalOps}
 /** Dev tool: write each named catalog row's formatted physical plan to
   * `<outDir>/<row>.txt`, normalized so that dumps of two builds compare
   * with one `diff -r`: expression ids (`#123`), `plan_id=`s, RDD ids,
-  * call sites (as `File.scala:N`) and lambda identities are masked. A
-  * row with a [[SparkEntry.oracleSql]] entry also gets its oracle text
-  * as `<outDir>/<row>.sql`, so the same `diff -r` covers the oracle. A
-  * name may also be one of [[pairJoinFrames]], the frames whose bucket
-  * self-join is visible in their plan. Runs on the shared local[4] test
-  * session.
+  * call sites (as `File.scala:N`), lambda identities and the JVM-wide
+  * counter in lambda variable names (`lambda x_62#` as `lambda x_N#`)
+  * are masked. A row with a [[SparkEntry.oracleSql]] entry also gets
+  * its oracle text as `<outDir>/<row>.sql`, so the same `diff -r`
+  * covers the oracle. A name may also be one of [[pairJoinFrames]], the
+  * frames whose bucket self-join is visible in their plan. Runs on the
+  * shared local[4] test session.
   * Usage: sbt "Test/runMain graft.PlanDump <sfDir> <outDir> <row,…>"
   */
 object PlanDump {
@@ -40,6 +41,7 @@ object PlanDump {
     .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
     .replaceAll("\\w+\\.scala:\\d+", "File.scala:N")
     .replaceAll("\\$Lambda[^@\\s]*@[0-9a-f]+", "\\$Lambda")
+    .replaceAll("lambda (\\w+?)_\\d+#", "lambda $1_N#")
 
   def main(args: Array[String]): Unit = {
     val Array(dir, outDir, names) = args

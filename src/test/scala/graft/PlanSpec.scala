@@ -62,6 +62,29 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(operators.SimilarityOps.annTopK(spark, dir))
     assert("WindowGroupLimit".r.findAllIn(p).size >= 2,
       s"no partial window limit:\n$p")
+    // every registered row ranked by the VecSearch kernel keeps at least
+    // the WindowGroupLimit count its plan had before the kernel existed
+    // (ann_matryoshka, mmr_rerank and pq_topk rank inside construction
+    // checkpoints, so their registered plans show none to count)
+    Seq("ann_topk" -> 2, "hard_negatives" -> 2, "ann_ivf_topk" -> 3,
+      "ann_ivf_probe" -> 3, "ann_ivf_probe_recall" -> 5,
+      "ann_lsh_topk" -> 2, "ann_lsh_probe" -> 2,
+      "ann_lsh_probe_recall" -> 4, "ann_ingest" -> 6,
+      "ann_filtered" -> 4, "ann_int8" -> 3, "bitext_margin" -> 2)
+      .foreach { case (row, parent) =>
+        val rp = plan(SparkEntry.queries(row)(spark, dir))
+        assert("WindowGroupLimit".r.findAllIn(rp).size >= parent,
+          s"$row lost a partial window limit:\n$rp")
+      }
+  }
+
+  test("ann_lsh_probe: two builds print the same normalized plan") {
+    def dump(): String = PlanDump.normalize(
+      SparkEntry.queries("ann_lsh_probe")(spark, dir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
+    val first = dump()
+    assert(!first.contains("[[D@"), s"plane array identity in plan:\n$first")
+    assert(dump() == first)
   }
 
   /** Broadcast HINTS force a collect-to-driver regardless of size — on
