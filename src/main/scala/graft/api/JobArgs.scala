@@ -40,9 +40,6 @@ final case class JobArgs(
     * because the comma-joined passthru form is lossy for shell text. */
   def setupCmds: Seq[String] = listArgs.getOrElse("setup", Nil)
 
-  def passthruOrElse(name: String, default: String): String =
-    passthru.getOrElse(name, default)
-
   def passthruLong(name: String, default: Long): Long =
     passthru.get(name).map(_.trim.toLong).getOrElse(default)
 

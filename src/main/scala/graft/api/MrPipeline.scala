@@ -1,5 +1,7 @@
 package graft.api
 
+import java.nio.charset.StandardCharsets
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
 import scala.reflect.ClassTag
@@ -30,73 +32,55 @@ import scala.reflect.ClassTag
   *    instead of needing a KeyFieldBasedPartitioner.
   *
   * At 100 TB: no stage materializes a group in memory unless a
-  * combiner already collapsed it; shuffles are one-per-step on the
-  * step key (Spark cannot elide a shuffle whose key is produced by an
-  * opaque lambda); partition counts follow
+  * combiner already collapsed it; shuffles are at most one per step,
+  * on the step key (Spark cannot elide a shuffle whose key is produced
+  * by an opaque lambda); partition counts follow
   * `spark.sql.shuffle.partitions` / AQE unless `numReducers` pins the
   * output-file contract (harness.py:266-268).
   */
 final class MrPipeline[K, V](val ds: Dataset[(K, V)]) extends Serializable {
 
-  /** RDD hops over generic pair types: tuples are AnyRef at runtime
-    * and none of these ops key a shuffle on the ClassTag, so the
-    * erased tag is sound (same trick as [[partitionByKey]]). */
-  private implicit def erasedCT[A]: ClassTag[A] =
-    ClassTag.Any.asInstanceOf[ClassTag[A]]
-
   /** Run one typed step; chain calls for multi-step jobs
     * (mrjob steps(), mrjob/job.py:497-545 — a linear DAG, which in
     * Spark is simply function composition inside one job).
+    *
+    * Each substep position (mapper, combiner, reducer) runs its
+    * function as a typed Dataset `mapPartitions` unless a cmd,
+    * pre_filter or raw sort is set on it; then it runs on
+    * protocol-encoded lines (`MrPipeline.viaLines`).
     */
   def step[K2, V2, K3, V3](s: MrStep[K, V, K2, V2, K3, V3])(
       implicit e2: Encoder[(K2, V2)],
-      ek2: Encoder[K2],
       e3: Encoder[(K3, V3)]): MrPipeline[K3, V3] = {
-
+    import MrPipeline.{bracket, viaLines}
     val spark = ds.sparkSession
-    val sh = (cmd: String) => Seq("/bin/sh", "-c", cmd)
-    // Pre-filters are grep-like line selectors, and grep exits 1 when
-    // it selects NOTHING — routine for an empty or fully-filtered
-    // partition, fatal to PipedRDD's exit-status check. Tolerate
-    // exactly status 1 for filter commands; real failures (>1)
-    // still abort the task.
-    val filterSh = (cmd: String) =>
-      Seq("/bin/sh", "-c",
-        s"($cmd); rc=$$?; if [ $$rc -le 1 ]; then exit 0; else exit $$rc; fi")
+    // set whenever a cmd, pre_filter or sortValuesRaw is (MrStep
+    // requires it); only the line paths read it
+    val c = s.cmdProtocols.orNull
 
     // ---- map phase: init ++ mapper ++ final, one pass, lazy ----
-    // Per-substep shell wiring (mrjob/step.py:34-45): a pre_filter
-    // pipes the substep's protocol-encoded input lines through a shell
-    // command first; a mapper_cmd REPLACES the mapper function
-    // entirely (input-protocol lines in, internal-protocol lines out —
-    // mrjob/job.py:340-363). RDD.pipe streams one shell process per
-    // partition, the Hadoop-streaming task model; the reference's own
-    // Spark harness refuses cmd substeps (harness.py:634-637), so this
-    // exceeds it.
-    val mapper = s.mapper
-    val mInit = s.mapperInit
-    val mFinal = s.mapperFinal
-    val mapped: Dataset[(K2, V2)] = (s.mapperPreFilter, s.mapperCmd) match {
-      case (pf, Some(cmd)) =>
-        val c = s.cmdProtocols.get
-        val base = ds.rdd.map { case (k, v) => c.input.write(k, v) }
-        val lines = pf.fold(base)(f => base.pipe(filterSh(f))).pipe(sh(cmd))
-        spark.createDataset(lines.map(c.internal.read))
-      case (Some(pfCmd), None) =>
-        val c = s.cmdProtocols.get
-        val filtered = ds.rdd.map { case (k, v) => c.input.write(k, v) }
-          .pipe(filterSh(pfCmd)).map(c.input.read)
-        spark.createDataset(filtered.mapPartitions { it =>
-          mInit().iterator ++
-            it.flatMap { case (k, v) => mapper(k, v) } ++
-            mFinal()
-        })
-      case (None, None) => ds.mapPartitions { it =>
-        mInit().iterator ++
-          it.flatMap { case (k, v) => mapper(k, v) } ++
-          mFinal()
-      }
-    }
+    // A mapper_cmd REPLACES the mapper function entirely
+    // (input-protocol lines in, internal-protocol lines out —
+    // mrjob/job.py:340-363); a pre_filter runs ahead of either.
+    val (mapper, mInit, mFinal) = (s.mapper, s.mapperInit, s.mapperFinal)
+    val map = (it: Iterator[(K, V)]) =>
+      bracket(mInit, it.flatMap { case (k, v) => mapper(k, v) }, mFinal)
+    val mapped: Dataset[(K2, V2)] =
+      if (s.mapperCmd.isEmpty && s.mapperPreFilter.isEmpty)
+        ds.mapPartitions(map)
+      else spark.createDataset(viaLines(ds.rdd, c.input, byteSort = false,
+        s.mapperPreFilter, s.mapperCmd, c.internal)(
+        ls => map(ls.map(c.input.read))))
+
+    // A mapOnly step with nothing set on the reduce side ends here, as
+    // mrjob runs a mapper-only step with reduces=0 (bin.py:323-327);
+    // its reducer is the identity, so (K3, V3) is (K2, V2).
+    if ((s.reducer eq MrStep.idReducer) && !s.sortValues &&
+        !s.sortValuesRaw &&
+        Seq(s.combiner, s.combinerCmd, s.combinerPreFilter, s.reducerCmd,
+          s.reducerPreFilter, s.numReducers).forall(_.isEmpty) &&
+        Seq(s.reducerInit, s.reducerFinal).forall(_ eq MrStep.emptyInit))
+      return new MrPipeline(mapped.asInstanceOf[Dataset[(K3, V3)]])
 
     // ---- optional map-side combine (bounded hash buffer) ----
     // The combiner contract is "runs 0..n times over partial groups"
@@ -114,151 +98,70 @@ final class MrPipeline[K, V](val ds: Dataset[(K, V)]) extends Serializable {
     // runs after the partition's combine runs drain. Without a
     // combiner the brackets don't run — mrjob only invokes the
     // combiner substep when a combiner exists.
-    val cInit = s.combinerInit
-    val cFinal = s.combinerFinal
-    val preCombined: Dataset[(K2, V2)] =
-      if (s.combinerCmd.isDefined || s.combinerPreFilter.isDefined) {
-        // Shell substeps at the combiner position see their map task's
-        // output as SORTED encoded lines (the sim runner sorts combiner
-        // input per task, mrjob/sim.py:727-730) — in-memory per map
-        // task, bounded by split size, exactly Hadoop's combiner-input
-        // contract. combiner_cmd was flat-out missing in round 2
-        // (VERDICT §missing #1).
-        val c = s.cmdProtocols.get
-        // UTF-8 BYTE order, not String (UTF-16 code-unit) order: the
-        // sim runner sorts encoded bytes, and supplementary-plane
-        // characters order differently under the two — same parity
-        // rationale as the sortValuesRaw reduce path below
-        val sorted = mapped.rdd
-          .map { case (k, v) => c.internal.write(k, v) }
-          .mapPartitions { it =>
-            val utf8 = java.nio.charset.StandardCharsets.UTF_8
-            it.map(l => (l.getBytes(utf8), l)).toVector
-              .sortWith((a, b) =>
-                java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
-              .iterator.map(_._2)
-          }
-        val filtered = s.combinerPreFilter
-          .fold(sorted)(cmd => sorted.pipe(filterSh(cmd)))
-        s.combinerCmd match {
-          case Some(cmd) =>
-            spark.createDataset(filtered.pipe(sh(cmd)).map(c.internal.read))
-          case None =>
-            val decoded = filtered.map(c.internal.read)
-            s.combiner match {
-              case Some(cf) => spark.createDataset(decoded.mapPartitions(it =>
-                cInit().iterator ++ new MapSideCombine(it, cf) ++ cFinal()))
-              case None => spark.createDataset(decoded)
-            }
-        }
-      } else s.combiner match {
-        case Some(c) =>
-          mapped.mapPartitions { it =>
-            cInit().iterator ++ new MapSideCombine(it, c) ++ cFinal()
-          }
-        case None => mapped
-      }
+    val (cInit, cFinal) = (s.combinerInit, s.combinerFinal)
+    val combine: Iterator[(K2, V2)] => Iterator[(K2, V2)] = s.combiner match {
+      case Some(cf) => it => bracket(cInit, new MapSideCombine(it, cf), cFinal)
+      case None => identity
+    }
+    // Shell substeps at the combiner position see their map task's
+    // output as SORTED encoded lines (the sim runner sorts combiner
+    // input per task, mrjob/sim.py:727-730) — in-memory per map task,
+    // bounded by split size, exactly Hadoop's combiner-input contract.
+    val combined: Dataset[(K2, V2)] =
+      if (s.combinerCmd.isDefined || s.combinerPreFilter.isDefined)
+        spark.createDataset(viaLines(mapped.rdd, c.internal, byteSort = true,
+          s.combinerPreFilter, s.combinerCmd, c.internal)(
+          ls => combine(ls.map(c.internal.read))))
+      else if (s.combiner.isDefined) mapped.mapPartitions(combine)
+      else mapped
 
     // ---- shuffle + reduce: hash-partition by key, Tungsten
     // in-partition sort on (key[, value]), lazily group adjacent keys.
-    val r = s.reducer
-    val rInit = s.reducerInit
-    val rFinal = s.reducerFinal
+    val (r, rInit, rFinal) = (s.reducer, s.reducerInit, s.reducerFinal)
+    val reduce = (groups: Iterator[(K2, Iterator[V2])]) =>
+      bracket(rInit, groups.flatMap { case (k, vs) => r(k, vs) }, rFinal)
     // numReducers pins the partition count (the output-file contract);
     // otherwise repartition WITHOUT a count so AQE may coalesce — an
     // explicit repartition(defaultParallelism, key) is a
     // REPARTITION_BY_NUM shuffle AQE refuses to shrink, which the
     // class doc promises not to do (a review catch: a 1 MB step was
     // pinned to 200 reduce tasks)
-    def byKey[A, B](d: Dataset[(A, B)]): Dataset[(A, B)] =
-      s.numReducers match {
-        case Some(n) => d.repartition(n, d.col("_1"))
-        case None => d.repartition(d.col("_1"))
-      }
-    // rawBytes SORT_VALUES (SURVEY §7.3): partition by key, then sort
-    // each reduce partition's ENCODED lines by UTF-8 bytes and group
-    // adjacent encoded keys — the reference's own whole-line in-memory
-    // sort contract (mrjob/sim.py:750-771), reproduced for byte-level
-    // parity. Keys cannot contain '\t' (protocol contract), so
-    // whole-line byte order keeps equal keys adjacent. This mode
-    // sorts per-partition in memory exactly like the sim runner; the
-    // default typed mode below stays on the Tungsten external sort.
-    if (s.sortValuesRaw) {
-      val c = s.cmdProtocols.get
-      val sortedLines = byKey(preCombined).rdd
-        .mapPartitions { it =>
-          val utf8 = java.nio.charset.StandardCharsets.UTF_8
-          it.map { case (k, v) => c.internal.write(k, v) }
-            .map(l => (l.getBytes(utf8), l)).toVector
-            .sortWith((a, b) =>
-              java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
-            .iterator.map(_._2)
-        }
-      // shell substeps compose with raw mode exactly as with the typed
-      // sort: the byte-sorted encoded lines ARE the Hadoop-streaming
-      // reducer stdin (a silent fall-through to the typed reducer here
-      // would swallow a declared reducerCmd)
-      val filteredLines = s.reducerPreFilter
-        .fold(sortedLines)(cmd => sortedLines.pipe(filterSh(cmd)))
-      s.reducerCmd match {
-        case Some(cmd) =>
-          return new MrPipeline(
-            spark.createDataset(filteredLines.pipe(sh(cmd)).map(c.output.read)))
-        case None =>
-      }
-      val rawReduced = filteredLines.mapPartitions { it =>
-        val keyed = it.map { line =>
-          val i = line.indexOf('\t')
-          (if (i < 0) line else line.substring(0, i), line)
-        }
-        rInit().iterator ++
-          AdjacentGroups(keyed).flatMap { case (_, ls) =>
-            val pairs = ls.map(c.internal.read).buffered
-            r(pairs.head._1, pairs.map(_._2))
-          } ++ rFinal()
-      }
-      return new MrPipeline(spark.createDataset(rawReduced))
+    val shuffled = s.numReducers match {
+      case Some(n) => combined.repartition(n, combined.col("_1"))
+      case None => combined.repartition(combined.col("_1"))
     }
-
-    val sortCols = if (s.sortValues) Seq(col("_1"), col("_2"))
-                   else Seq(col("_1"))
-    val arranged = byKey(preCombined)
-      .sortWithinPartitions(sortCols: _*)
-    // reducer-position shell wiring: the command (and/or pre_filter)
-    // streams each reduce partition's key-sorted encoded lines — the
-    // Hadoop-streaming reducer contract (mrjob/job.py:451-474). A
-    // pre_filter must be line-filtering (grep-like), which preserves
-    // key adjacency for the downstream reducer function.
+    // reducer_cmd / reducer_pre_filter stream each reduce partition's
+    // key-sorted encoded lines — the Hadoop-streaming reducer contract
+    // (mrjob/job.py:451-474). A pre_filter must be line-filtering
+    // (grep-like), which preserves key adjacency for the reducer.
     val reduced: Dataset[(K3, V3)] =
-      if (s.reducerCmd.isDefined || s.reducerPreFilter.isDefined) {
-        val c = s.cmdProtocols.get
-        val lines = arranged.rdd.map { case (k, v) => c.internal.write(k, v) }
-        val filtered = s.reducerPreFilter
-          .fold(lines)(cmd => lines.pipe(filterSh(cmd)))
-        s.reducerCmd match {
-          case Some(cmd) =>
-            spark.createDataset(filtered.pipe(sh(cmd)).map(c.output.read))
-          case None =>
-            spark.createDataset(filtered.map(c.internal.read)
-              .mapPartitions { it =>
-                rInit().iterator ++
-                  AdjacentGroups(it).flatMap { case (k, vs) => r(k, vs) } ++
-                  rFinal()
-              })
-        }
-      } else arranged.mapPartitions { it =>
-        rInit().iterator ++
-          AdjacentGroups(it).flatMap { case (k, vs) => r(k, vs) } ++
-          rFinal()
+      if (s.sortValuesRaw)
+        // rawBytes SORT_VALUES (SURVEY §7.3): sort each reduce
+        // partition's ENCODED lines by UTF-8 bytes and group adjacent
+        // encoded keys — the reference's own whole-line sort contract
+        // (mrjob/sim.py:750-771), reproduced for byte-level parity.
+        // Keys cannot contain '\t' (protocol contract), so whole-line
+        // byte order keeps equal keys adjacent.
+        spark.createDataset(viaLines(shuffled.rdd, c.internal, byteSort = true,
+          s.reducerPreFilter, s.reducerCmd, c.output) { ls =>
+          reduce(AdjacentGroups(ls.map(l => (l.takeWhile(_ != '\t'), l)))
+            .map { case (_, group) =>
+              val kvs = group.map(c.internal.read).buffered
+              (kvs.head._1, kvs.map(_._2))
+            })
+        })
+      else {
+        val sortCols = if (s.sortValues) Seq(col("_1"), col("_2"))
+                       else Seq(col("_1"))
+        val arranged = shuffled.sortWithinPartitions(sortCols: _*)
+        if (s.reducerCmd.isEmpty && s.reducerPreFilter.isEmpty)
+          arranged.mapPartitions(it => reduce(AdjacentGroups(it)))
+        else spark.createDataset(viaLines(arranged.rdd, c.internal,
+          byteSort = false, s.reducerPreFilter, s.reducerCmd, c.output)(
+          ls => reduce(AdjacentGroups(ls.map(c.internal.read)))))
       }
     new MrPipeline(reduced)
   }
-
-  /** Map-only step (no shuffle — mrjob's no-reducer step,
-    * mrjob/step.py:79-86). */
-  def mapStep[K2, V2](f: (K, V) => IterableOnce[(K2, V2)])(
-      implicit e2: Encoder[(K2, V2)]): MrPipeline[K2, V2] =
-    new MrPipeline(ds.mapPartitions(_.flatMap { case (k, v) => f(k, v) }))
 
   /** Custom partitioner parity (mrjob PARTITIONER / Hadoop partitioner
     * class, mrjob/job.py:1390-1408, e.g. tests/mr_partitioner.py): route
@@ -281,40 +184,6 @@ final class MrPipeline[K, V](val ds: Dataset[(K, V)]) extends Serializable {
     new MrPipeline(spark.createDataset(pairs.partitionBy(p)))
   }
 
-  /** `mapper_cmd` / `*_pre_filter` parity: pipe records through a
-    * shell command at the map position (mrjob/job.py:340-363). The
-    * reference's own Spark harness REFUSES cmd substeps
-    * (harness.py:634-637); `RDD.pipe` lets this engine exceed it. */
-  def pipeCmd(cmd: String, encode: ((K, V)) => String,
-      decode: String => (K, V))(
-      implicit e: Encoder[(K, V)]): MrPipeline[K, V] = {
-    val spark = ds.sparkSession
-    // run through a shell, like the reference does with cmd strings
-    // (RDD.pipe's bare-string form tokenizes on whitespace, no quoting)
-    val piped = ds.rdd.map(encode)
-      .pipe(Seq("/bin/sh", "-c", cmd)).map(decode)
-    new MrPipeline(spark.createDataset(piped))
-  }
-
-  /** `reducer_cmd` parity (mrjob/step.py reducer_cmd; Hadoop-streaming
-    * semantics): shuffle + sort by key, then each reduce partition's
-    * encoded lines stream through `cmd`, whose output lines decode
-    * back into pairs. The command sees its whole partition key-grouped
-    * and sorted — exactly what a streaming reducer binary expects. */
-  def reduceCmd(cmd: String, encode: ((K, V)) => String,
-      decode: String => (K, V), numPartitions: Option[Int] = None)(
-      implicit e: Encoder[(K, V)]): MrPipeline[K, V] = {
-    // pin the count only when asked; a bare key repartition stays
-    // AQE-coalescible (same contract as the step reducer shuffle)
-    val arranged = numPartitions
-      .fold(ds.repartition(col("_1")))(n => ds.repartition(n, col("_1")))
-      .sortWithinPartitions(col("_1"))
-    val spark = ds.sparkSession
-    val piped = arranged.rdd.map(encode)
-      .pipe(Seq("/bin/sh", "-c", cmd)).map(decode)
-    new MrPipeline(spark.createDataset(piped))
-  }
-
   def toDF = ds.toDF("key", "value")
 }
 
@@ -328,6 +197,54 @@ object MrPipeline {
 
   def fromDataset[K, V](ds: Dataset[(K, V)]): MrPipeline[K, V] =
     new MrPipeline(ds)
+
+  /** RDD hops over generic pair types: tuples are AnyRef at runtime
+    * and none of these ops key a shuffle on the ClassTag, so the
+    * erased tag is sound (same trick as `partitionByKey`). */
+  private implicit def erasedCT[A]: ClassTag[A] =
+    ClassTag.Any.asInstanceOf[ClassTag[A]]
+
+  /** A substep function's per-task bracket: `init ++ body ++ final`,
+    * lazy, so `final` runs after the partition drains — same contract
+    * as harness.py:396-436. */
+  private def bracket[A](init: () => IterableOnce[A], body: Iterator[A],
+      fin: () => IterableOnce[A]): Iterator[A] =
+    init().iterator ++ body ++ fin()
+
+  /** One substep position on encoded lines — the per-substep shell
+    * wiring of mrjob/step.py:34-45: each partition's pairs are written
+    * by `in`, optionally sorted by their UTF-8 bytes, optionally piped
+    * through a pre_filter, and then either piped through `cmd` (whose
+    * output lines `out` reads) or handed to `fn`. RDD.pipe streams one
+    * shell process per partition, the Hadoop-streaming task model; the
+    * reference's own Spark harness refuses cmd substeps
+    * (harness.py:634-637), so this exceeds it. */
+  private def viaLines[A, B, C, D](pairs: RDD[(A, B)],
+      in: LineProtocol[A, B], byteSort: Boolean, preFilter: Option[String],
+      cmd: Option[String], out: LineProtocol[C, D])(
+      fn: Iterator[String] => Iterator[(C, D)]): RDD[(C, D)] = {
+    // through a shell, like the reference runs cmd strings (the
+    // bare-string RDD.pipe tokenizes on whitespace, no quoting)
+    val sh = (c: String) => Seq("/bin/sh", "-c", c)
+    val lines = pairs.map { case (k, v) => in.write(k, v) }
+    // UTF-8 BYTE order, not String (UTF-16 code-unit) order: the sim
+    // runner sorts encoded bytes in memory per task, and
+    // supplementary-plane characters order differently under the two
+    val sorted = if (!byteSort) lines else lines.mapPartitions { it =>
+      it.map(l => (l.getBytes(StandardCharsets.UTF_8), l)).toVector
+        .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
+        .iterator.map(_._2)
+    }
+    // Pre-filters are grep-like line selectors, and grep exits 1 when
+    // it selects NOTHING — routine for an empty or fully-filtered
+    // partition, fatal to PipedRDD's exit-status check. Tolerate
+    // exactly status 1 for filter commands; real failures (>1) and
+    // any non-zero status of a cmd still abort the task.
+    val filtered = preFilter.fold(sorted)(f => sorted.pipe(
+      sh(s"($f); rc=$$?; if [ $$rc -le 1 ]; then exit 0; else exit $$rc; fi")))
+    cmd.fold(filtered.mapPartitions(fn))(
+      c => filtered.pipe(sh(c)).map(out.read))
+  }
 }
 
 /** Map-side combine: drain the input through a bounded hash buffer,

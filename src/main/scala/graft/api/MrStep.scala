@@ -11,7 +11,8 @@ package graft.api
   * Semantics notes mirrored from the reference:
   *  - the combiner may run 0..n times over partial groups
   *    (mrjob/job.py:295-309) — so it must be idempotent-ish; here it
-  *    runs map-side inside an Aggregator partial merge;
+  *    runs map-side in [[MapSideCombine]], a bounded hash buffer
+  *    inside the map task;
   *  - reducer values are a lazily streamed Iterator (mrjob/job.py:884-890)
   *    — groups never need to fit in memory unless a combiner collapsed
   *    them first;
@@ -102,11 +103,25 @@ object MrStep {
   def emptyInit[K, V]: () => IterableOnce[(K, V)] =
     EmptyInitFn.asInstanceOf[() => IterableOnce[(K, V)]]
 
-  /** Map-only step (no reducer — mrjob inserts an identity reducer /
-    * elides the reduce phase, mrjob/step.py:79-86). */
+  /** The identity reducer of [[mapOnly]]: one shared singleton, so
+    * [[MrPipeline.step]] recognizes a map-only step by reference (the
+    * same trick as [[emptyInit]]). */
+  private val IdReducerFn: (Any, Iterator[Any]) => IterableOnce[(Any, Any)] =
+    (k, vs) => vs.map(k -> _)
+  private[api] def idReducer[K, V]: (K, Iterator[V]) => IterableOnce[(K, V)] =
+    IdReducerFn.asInstanceOf[(K, Iterator[V]) => IterableOnce[(K, V)]]
+
+  /** Map-only step (mrjob's step with no reducer, mrjob/step.py:79-86).
+    * [[MrPipeline.step]] ends it after the map phase, with no shuffle,
+    * as mrjob runs it with `reduces=0` (bin.py:323-327): the output
+    * keeps the map tasks' partitions, and per-task `mapperFinal` pairs
+    * stay one per task. Setting any reduce-side field on it (a combiner
+    * or combiner cmd/pre_filter, reducer init/final/cmd/pre_filter,
+    * `sortValues`, `sortValuesRaw` or `numReducers`) brings the shuffle
+    * back, with the identity as reducer. */
   def mapOnly[K1, V1, K2, V2](
       f: (K1, V1) => IterableOnce[(K2, V2)]): MrStep[K1, V1, K2, V2, K2, V2] =
-    MrStep(mapper = f, reducer = (k: K2, vs: Iterator[V2]) => vs.map(k -> _))
+    MrStep(mapper = f, reducer = idReducer[K2, V2])
 
   /** Identity mapper (inserted when a step only has reduce-side
     * substeps — mrjob/step.py:79-80). */

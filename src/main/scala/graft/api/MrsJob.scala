@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder}
 
 /** Class-based job facade — the `class MRWordFreqCount(MRJob)`
   * authoring shape (mrjob/job.py:85), typed. Override the member
@@ -58,16 +58,7 @@ abstract class MrsJob[K1, V1, K2, V2, K3, V3] extends Serializable {
     numReducers = numReducers)
 
   final def run(input: Dataset[(K1, V1)])(
-      implicit e2: Encoder[(K2, V2)], ek2: Encoder[K2],
+      implicit e2: Encoder[(K2, V2)],
       e3: Encoder[(K3, V3)]): Dataset[(K3, V3)] =
     MrPipeline.fromDataset(input).step(toStep).ds
-
-  /** Text-file entry, RawValueProtocol-style (job `run()` over line
-    * input, key = null). */
-  final def runOnText(spark: SparkSession, path: String)(
-      implicit ev: (String, String) =:= (K1, V1),
-      e2: Encoder[(K2, V2)], ek2: Encoder[K2],
-      e3: Encoder[(K3, V3)]): Dataset[(K3, V3)] =
-    run(MrPipeline.fromText(spark, path).ds
-      .asInstanceOf[Dataset[(K1, V1)]])
 }

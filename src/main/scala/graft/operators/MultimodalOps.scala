@@ -107,7 +107,31 @@ object MultimodalOps {
     * while still exercising a variable-length data chunk. */
   val WavMaxFrames = 64
 
-  case class WavBlob(id: Long, payload: Array[Byte])
+  /** One planted media payload. */
+  case class Planted(id: Long, payload: Array[Byte])
+
+  /** `(id, payload)`: one planted media format, `synth(doc_id, text)`
+    * over every non-empty document. The scan is spread over
+    * defaultParallelism: the unsplittable single-file scan would
+    * otherwise run the synthesis map AND the downstream parse (the
+    * per-sample PCM parse evaluates interpreted higher-order functions,
+    * not codegen) single-threaded — the WAV row read 8.9 s serial,
+    * ~0.6 s spread. */
+  def planted(spark: SparkSession, dir: String,
+      synth: (Long, String) => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    plantedFrom(Tables.load(spark, dir, "documents")
+      .select(col("doc_id"), col("text"))
+      .filter(length(col("text")) >= 1)
+      .repartition(spark.sparkContext.defaultParallelism)
+      .as[(Long, String)], synth)
+  }
+
+  private def plantedFrom(docs: Dataset[(Long, String)],
+      synth: (Long, String) => Array[Byte]): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.map { case (id, text) => Planted(id, synth(id, text)) }.toDF()
+  }
 
   /** Plants a REAL RIFF/WAVE fixture: each document becomes a
     * spec-conformant PCM WAV whose header fields and samples derive
@@ -119,22 +143,9 @@ object MultimodalOps {
     * k mod len as ((c·523+7) mod 2¹⁶) − 2¹⁵. The 44-byte canonical
     * header layout (RIFF size, fmt chunk, byte rate, block align,
     * data size) is pinned byte-for-byte against an independent
-    * ByteBuffer builder and a hand-derived golden in MultimodalSpec. */
-  def asWavTable(spark: SparkSession, dir: String): Dataset[WavBlob] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= 1)
-      // spread the unsplittable single-file scan: the synthesis map
-      // AND the downstream per-sample PCM parse (higher-order
-      // functions evaluate interpreted, not codegen'd) otherwise run
-      // single-threaded — this row read 8.9 s serial, ~0.6 s spread
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[(Long, String)]
-      .map { case (id, text) => WavBlob(id, synthWav(id, text)) }
-  }
-
-  /** Pure function (doc_id, text) → WAV bytes; little-endian
+    * ByteBuffer builder and a hand-derived golden in MultimodalSpec.
+    *
+    * Pure function (doc_id, text) → WAV bytes; little-endian
     * throughout, per the RIFF spec. Iterates CODE POINTS, not UTF-16
     * units, so length/indexing agree with the oracle's
     * length(text)/unicode() (code-point semantics) even on astral
@@ -191,7 +202,7 @@ object MultimodalOps {
     * aggregates over the data chunk via sequence+aggregate, bounded
     * by the data_size the header declares. */
   def multimodalMeta(spark: SparkSession, dir: String): DataFrame =
-    parseWav(asWavTable(spark, dir).toDF("id", "payload"))
+    parseWav(planted(spark, dir, synthWav))
 
   /** The parse itself over any (id, payload BINARY) frame — factored
     * so the spec can feed corrupted headers and planted goldens. */
@@ -272,18 +283,6 @@ object MultimodalOps {
     bb.array()
   }
 
-  case class BmpBlob(id: Long, payload: Array[Byte])
-
-  def asBmpTable(spark: SparkSession, dir: String): Dataset[BmpBlob] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= 1)
-      .repartition(spark.sparkContext.defaultParallelism) // see asWavTable
-      .as[(Long, String)]
-      .map { case (id, text) => BmpBlob(id, synthBmp(id, text)) }
-  }
-
   /** Parse the planted BMPs back out of their bytes: magic, header
     * fields, the stride identity file_size = 54 + stride·height, and
     * the first pixel row's byte sum (padding excluded — reading the
@@ -327,7 +326,7 @@ object MultimodalOps {
   }
 
   def multimodalBmp(spark: SparkSession, dir: String): DataFrame =
-    parseBmp(asBmpTable(spark, dir).toDF("id", "payload"))
+    parseBmp(planted(spark, dir, synthBmp))
 
   // ------------- perceptual-hash image near-dup (dHash) -----------
 
@@ -486,7 +485,7 @@ object MultimodalOps {
   }
 
   private[graft] val imageFp = new MediaFp(
-    (spark, dir) => asBmpTable(spark, dir).toDF("id", "payload"),
+    (spark, dir) => planted(spark, dir, synthBmp),
     imageDHash, 4, DHashMaxHamming, "media_labels_image",
     s"dhash=${DHashRows}x$DHashCols,ham=$DHashMaxHamming")
 
@@ -619,7 +618,7 @@ object MultimodalOps {
     * — correct, but identical recordings are common in a crawl, so
     * Σ bucket² over members is the same concentration blow-up). */
   private[graft] val audioFp = new MediaFp(
-    (spark, dir) => asWavTable(spark, dir).toDF("id", "payload"),
+    (spark, dir) => planted(spark, dir, synthWav),
     audioFingerprint, 2, AudioMaxHamming, "media_labels_audio",
     s"win=$AudioWindows,ham=$AudioMaxHamming")
 
@@ -688,18 +687,6 @@ object MultimodalOps {
     Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
       chunk("IHDR", ihdr) ++ chunk("IDAT", idat) ++
       chunk("IEND", Array.empty[Byte])
-  }
-
-  case class PngBlob(id: Long, payload: Array[Byte])
-
-  def asPngTable(spark: SparkSession, dir: String): Dataset[PngBlob] = {
-    import spark.implicits._
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= 1)
-      .repartition(spark.sparkContext.defaultParallelism) // see asWavTable
-      .as[(Long, String)]
-      .map { case (id, text) => PngBlob(id, synthPng(id, text)) }
   }
 
   case class PngMeta(id: Long, width: Long, height: Long,
@@ -806,7 +793,7 @@ object MultimodalOps {
     * re-derives every field (including the pixel sum THROUGH the
     * compression round-trip) from (doc_id, text). */
   def multimodalPng(spark: SparkSession, dir: String): DataFrame =
-    parsePng(asPngTable(spark, dir).toDF("id", "payload"))
+    parsePng(planted(spark, dir, synthPng))
 
   /** Direct derivation: pixel byte p (filter bytes excluded) = code
     * point (p mod len) mod 256, summed over the 3·w·h RGB bytes. */
@@ -1058,20 +1045,9 @@ object MultimodalOps {
         .select(col("doc_id"), col("text"))
         .filter(length(col("text")) >= 1))
       .localCheckpoint()
-    val ds = base.as[(Long, String)]
-    mediaPipelineOf(
-      ds.map { case (id, t) => WavBlob(id, synthWav(id, t)) }
-        .toDF("id", "payload"),
-      ds.map { case (id, t) => BmpBlob(id, synthBmp(id, t)) }
-        .toDF("id", "payload"),
-      ds.map { case (id, t) => PngBlob(id, synthPng(id, t)) }
-        .toDF("id", "payload"),
-      ds.map { case (id, t) =>
-        JpegOps.JpegBlob(id, JpegOps.synthJpeg(id, t)) }
-        .toDF("id", "payload"),
-      ds.map { case (id, t) =>
-        VideoOps.VideoBlob(id, VideoOps.synthVideo(id, t)) }
-        .toDF("id", "payload"),
+    val from = plantedFrom(base.as[(Long, String)], _)
+    mediaPipelineOf(from(synthWav), from(synthBmp), from(synthPng),
+      from(JpegOps.synthJpeg), from(VideoOps.synthVideo),
       dedupImageClusters(spark, dir),
       dedupAudioClusters(spark, dir),
       VideoOps.videoClusterLabels(spark, dir))

@@ -213,15 +213,17 @@ object SimilarityOps {
     * (vec_id, v, n) and its bucket keys (vec_id, tbl, bk), one row per
     * table — so ONE self-join on (tbl, bk) collides every table, not
     * `tables` unioned joins (16 separate join stages cost ~5 s of pure
-    * scheduling at local scale and 16 shuffles on a cluster). */
+    * scheduling at local scale and 16 shuffles on a cluster). The
+    * bucket array is exploded as an expression, not a projected
+    * column, so the scan filter Spark infers from the generator does
+    * not evaluate it twice more (see
+    * [[DedupOps.minhashSignaturesFromSets]]). */
   private def lshKeyed(d: DataFrame, tables: Int, bits: Int,
-      dim: Int): (DataFrame, DataFrame) = {
-    val e = VecSearch.side(d, col("vec_id"), "",
-      lshBucketArray(col("embedding"), tables, bits, dim).as("bkts"))
-    (e.select(col("vec_id"), col("v"), col("n")),
-      e.select(col("vec_id"), posexplode(col("bkts")))
-        .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bk"))
-  }
+      dim: Int): (DataFrame, DataFrame) =
+    (VecSearch.side(d, col("vec_id"), ""),
+      d.select(col("vec_id"),
+        posexplode(lshBucketArray(col("embedding"), tables, bits, dim))
+          .as(Seq("tbl", "bk"))))
 
   /** Candidate id pairs (`a`, `b`) joined back to their vectors in
     * `side`, as the sides prefixed `pa` and `pb`. */

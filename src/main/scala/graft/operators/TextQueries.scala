@@ -309,7 +309,7 @@ object TextQueries {
     * word freq restricted to words containing 'u'. The reference does
     * this with a `grep u` mapper_pre_filter shell substep; the engine
     * expresses the pre-filter declaratively so it rides the scan
-    * (the generic shell path exists as MrPipeline.pipeCmd). */
+    * (the shell form is `MrStep.mapperPreFilter`). */
   def wordsContainingU(spark: SparkSession, dir: String): DataFrame =
     docs(spark, dir)
       .select(explode(split(col("text"), " ")).as("word"))

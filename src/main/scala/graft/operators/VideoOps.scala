@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
 
 /** Video modality — the third leg of the image/audio/video binary
   * catalog (MultimodalOps covers WAV/BMP/PNG/JPEG stills; this file
@@ -58,11 +57,6 @@ object VideoOps {
     * candidates AND set sizes (the containment df-cap discipline). */
   val VideoDfCap = 50L
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .filter(length(col("text")) >= 1)
-
   /** Plants the GVID container for one document. Geometry is a pure
     * function of the TEXT length (w = 2 + len mod 4, h = 2 +
     * (len div 4) mod 4) and the frame count of the DOC ID (1 + id mod
@@ -88,15 +82,6 @@ object VideoOps {
     bb.array()
   }
 
-  case class VideoBlob(id: Long, payload: Array[Byte])
-
-  def asVideoTable(spark: SparkSession, dir: String): Dataset[VideoBlob] = {
-    import spark.implicits._
-    docs(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism) // see asWavTable
-      .as[(Long, String)]
-      .map { case (id, text) => VideoBlob(id, synthVideo(id, text)) }
-  }
 
   /** Parse the planted videos back out of their BYTES: magic, the four
     * u32le header fields at their spec offsets, frame 0's byte sum,
@@ -146,7 +131,7 @@ object VideoOps {
   }
 
   def multimodalVideo(spark: SparkSession, dir: String): DataFrame =
-    parseVideo(asVideoTable(spark, dir).toDF("id", "payload"))
+    parseVideo(MultimodalOps.planted(spark, dir, synthVideo))
 
   /** Direct field derivation from (doc_id, text) — the planted
     * geometry replayed in SQL; frame0_sum replays the pixel generator
@@ -253,7 +238,7 @@ object VideoOps {
   }
 
   def dedupVideo(spark: SparkSession, dir: String): DataFrame =
-    videoDedupPairs(asVideoTable(spark, dir).toDF("id", "payload"))
+    videoDedupPairs(MultimodalOps.planted(spark, dir, synthVideo))
 
   /** The oracle's frame relation: every (doc, frame) with the frame
     * CONTENT string as its key — geometry and pixels replayed from
@@ -380,7 +365,7 @@ object VideoOps {
     * J ≥ [[VideoJaccardPpm]]. */
   def dedupVideoIngest(spark: SparkSession, dir: String): DataFrame = {
     val occ = videoFrameSets(
-      asVideoTable(spark, dir).toDF("id", "payload")).localCheckpoint()
+      MultimodalOps.planted(spark, dir, synthVideo)).localCheckpoint()
     val isNew = col("id") % VideoIngestMod === VideoIngestRem
     videoProbe(occ.filter(isNew), videoIndex(occ.filter(!isNew)))
       .orderBy(col("new_id"), col("live_id"))

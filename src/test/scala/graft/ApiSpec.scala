@@ -119,15 +119,17 @@ class ApiSpec extends AnyFunSuite {
     assert(counters.snapshot("graft")("lines") == n)
   }
 
-  test("pipeCmd pipes records through a shell command (mapper_cmd parity)") {
+  test("map-only mapper_cmd step pipes records through a shell command " +
+    "without a shuffle") {
     import spark.implicits._
     val data = spark.createDataset(Seq(("a", "hello"), ("b", "world")))
-    val got = MrPipeline.fromDataset(data)
-      .pipeCmd("tr a-z A-Z",
-        encode = kv => s"${kv._1}\t${kv._2}",
-        decode = TextPairProtocol.read _)
-      .ds.collect().toMap
-    assert(got == Map("A" -> "HELLO", "B" -> "WORLD"))
+    val step = MrStep.mapOnly[String, String, String, String](MrStep.idMapper)
+      .copy(mapperCmd = Some("tr a-z A-Z"), cmdProtocols = Some(
+        CmdProtocols(TextPairProtocol, TextPairProtocol, TextPairProtocol)))
+    val out = MrPipeline.fromDataset(data).step(step).ds
+    assert(out.collect().toMap == Map("A" -> "HELLO", "B" -> "WORLD"))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"map-only step shuffled:\n$plan")
   }
 
   // ---- per-substep shell wiring (mrjob/step.py:34-45; semantics
@@ -231,6 +233,28 @@ class ApiSpec extends AnyFunSuite {
       cmdProtocols = Some(wordCountProtocols))
     val got = MrPipeline.fromDataset(cmdLines).step(step).ds.collect().toMap
     assert(got == Map("a" -> "3", "b" -> "2", "c" -> "1", "me" -> "1"))
+  }
+
+  test("exit status: a pre_filter that selects nothing is no failure at " +
+    "any position; a cmd exiting 1 fails the job") {
+    import spark.implicits._
+    val base = MrStep[String, String, String, String, String, String](
+      mapper = (_, line) =>
+        line.split(" ").iterator.map(w => (w, "1")),
+      reducer = sumReducer,
+      cmdProtocols = Some(wordCountProtocols))
+    def run(s: MrStep[String, String, String, String, String, String]) =
+      MrPipeline.fromDataset(cmdLines).step(s).ds.collect()
+    // grep exits 1 when it selects no line
+    val none = Some("grep NO_SUCH_TOKEN")
+    Seq(base.copy(mapperPreFilter = none), base.copy(combinerPreFilter = none),
+      base.copy(reducerPreFilter = none)).foreach(s => assert(run(s).isEmpty))
+    val fails = Some("false")
+    Seq(base.copy(mapperCmd = fails), base.copy(combinerCmd = fails),
+      base.copy(reducerCmd = fails)).foreach { s =>
+      val e = intercept[org.apache.spark.SparkException](run(s))
+      assert(e.getMessage.contains("exited with status 1"), e.getMessage)
+    }
   }
 
   test("sortValuesRaw: values reach the reducer in ENCODED-byte order") {

@@ -171,20 +171,23 @@ class ApiSurfaceSpec extends AnyFunSuite {
     assert(!fs.exists(s"$dir/sub/a.txt"))
   }
 
-  test("reduceCmd: shell reducer over sorted key-grouped lines") {
+  test("reducer_cmd step after idMapper: shell reducer over sorted " +
+    "key-grouped lines") {
     import spark.implicits._
     val input = spark.createDataset(Seq(
-      ("b", 2L), ("a", 1L), ("b", 3L), ("a", 4L), ("c", 5L)))
+      ("b", "2"), ("a", "1"), ("b", "3"), ("a", "4"), ("c", "5")))
     // streaming-style shell reducer: sum values per key with awk
-    val got = MrPipeline.fromDataset(input)
-      .reduceCmd(
-        cmd = "awk -F'\\t' '{s[$1]+=$2} END {for (k in s) print k\"\\t\"s[k]}'",
-        encode = { case (k, v) => s"$k\t$v" },
-        decode = { line =>
-          val Array(k, v) = line.split("\t"); (k, v.toLong) },
-        numPartitions = Some(2))
-      .ds.collect().toMap
-    assert(got == Map("a" -> 5L, "b" -> 5L, "c" -> 5L))
+    val step = MrStep[String, String, String, String, String, String](
+      mapper = MrStep.idMapper,
+      reducer = (k, vs) => vs.map(k -> _), // ignored: reducerCmd replaces it
+      reducerCmd = Some(
+        "awk -F'\\t' '{s[$1]+=$2} END {for (k in s) print k\"\\t\"s[k]}'"),
+      numReducers = Some(2),
+      cmdProtocols = Some(
+        CmdProtocols(TextPairProtocol, TextPairProtocol, TextPairProtocol)))
+    val out = MrPipeline.fromDataset(input).step(step).ds
+    assert(out.collect().toMap == Map("a" -> "5", "b" -> "5", "c" -> "5"))
+    assert(out.rdd.getNumPartitions == 2)
   }
 
   test("compactParquet collapses a many-file directory, data intact") {

@@ -73,8 +73,8 @@ class CombinerSemanticsSpec extends AnyFunSuite {
   test("mapOnly step skips the shuffle entirely") {
     import spark.implicits._
     val data = spark.createDataset(Seq(("a", 1), ("b", 2)))
-    val out = MrPipeline.fromDataset(data)
-      .mapStep((k: String, v: Int) => Iterator.single((k.toUpperCase, v * 2)))
+    val out = MrPipeline.fromDataset(data).step(MrStep.mapOnly(
+      (k: String, v: Int) => Iterator.single((k.toUpperCase, v * 2))))
     assert(out.ds.collect().toMap == Map("A" -> 2, "B" -> 4))
     val plan = out.ds.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"map-only step shuffled:\n$plan")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.JpegOps
+import graft.operators.{JpegOps, MultimodalOps}
 
 /** Baseline-JPEG plant + decode: hand-derived entropy golden, field
   * round-trip, generic AC run/size path, corruption totality. */
@@ -147,7 +147,7 @@ class JpegSpec extends AnyFunSuite {
     assert(reg.exists(_.getAs[Long]("ac_sum") != 0L),
       "the planted AC coefficients must reach the decoded output")
     val direct = JpegOps.parseJpeg(
-      JpegOps.asJpegTable(spark, dir).toDF("id", "payload")).collect()
+      MultimodalOps.planted(spark, dir, JpegOps.synthJpeg)).collect()
     assert(reg.toSeq == direct.toSeq)
   }
 }

@@ -31,9 +31,9 @@ object PlanDump {
     "dedupContainment" -> (() => DedupOps.dedupContainment(spark, dir)),
     "dedupPrefixJoin" -> (() => DedupOps.dedupPrefixJoin(spark, dir)),
     "imageDedupPairs" -> (() => MultimodalOps.imageFp.pairs(
-      MultimodalOps.asBmpTable(spark, dir).toDF("id", "payload"))),
+      MultimodalOps.planted(spark, dir, MultimodalOps.synthBmp))),
     "audioDedupPairs" -> (() => MultimodalOps.audioFp.pairs(
-      MultimodalOps.asWavTable(spark, dir).toDF("id", "payload"))))
+      MultimodalOps.planted(spark, dir, MultimodalOps.synthWav))))
 
   def normalize(plan: String): String = plan
     .replaceAll("#\\d+", "#N")

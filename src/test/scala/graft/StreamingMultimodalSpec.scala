@@ -808,7 +808,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
       }
     }
     // image leg on the corpus fixture
-    val bmp = MultimodalOps.asBmpTable(spark, dir).toDF("id", "payload")
+    val bmp = MultimodalOps.planted(spark, dir, MultimodalOps.synthBmp)
       .localCheckpoint()
     val ipairs = MultimodalOps.imageFp.pairs(bmp).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -816,7 +816,7 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     checkAgainstPairs(MultimodalOps.dedupImageClusters(spark, dir)
       .collect(), ipairs, bmp.count())
     // audio leg
-    val wav = MultimodalOps.asWavTable(spark, dir).toDF("id", "payload")
+    val wav = MultimodalOps.planted(spark, dir, MultimodalOps.synthWav)
       .localCheckpoint()
     val apairs = MultimodalOps.audioFp.pairs(wav).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -908,11 +908,11 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     // corpus tables (same graphs, same gates)
     val reg = operators.MultimodalOps.mediaPipeline(spark, dir)
     val direct = MultimodalOps.mediaPipelineOf(
-      MultimodalOps.asWavTable(spark, dir).toDF("id", "payload"),
-      MultimodalOps.asBmpTable(spark, dir).toDF("id", "payload"),
-      MultimodalOps.asPngTable(spark, dir).toDF("id", "payload"),
-      operators.JpegOps.asJpegTable(spark, dir).toDF("id", "payload"),
-      operators.VideoOps.asVideoTable(spark, dir).toDF("id", "payload"),
+      MultimodalOps.planted(spark, dir, MultimodalOps.synthWav),
+      MultimodalOps.planted(spark, dir, MultimodalOps.synthBmp),
+      MultimodalOps.planted(spark, dir, MultimodalOps.synthPng),
+      MultimodalOps.planted(spark, dir, operators.JpegOps.synthJpeg),
+      MultimodalOps.planted(spark, dir, operators.VideoOps.synthVideo),
       MultimodalOps.dedupImageClusters(spark, dir),
       MultimodalOps.dedupAudioClusters(spark, dir),
       operators.VideoOps.videoClusterLabels(spark, dir))
@@ -975,8 +975,8 @@ class StreamingMultimodalSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import java.nio.file.Files
     val dir = SparkFixture.Sf0001
-    val vids = operators.VideoOps.asVideoTable(spark, dir)
-      .toDF("id", "payload")
+    val vids = MultimodalOps.planted(spark, dir,
+      operators.VideoOps.synthVideo)
     val isNew = col("id") % operators.VideoOps.VideoIngestMod ===
       operators.VideoOps.VideoIngestRem
     val live = vids.filter(!isNew)
