@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query
   * seconds on SPARK_GRAFT_SF_DIR.
   *
@@ -239,20 +237,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // ERROR, not WARN: reading the nick_nack/WET fixtures through glob
-    // paths makes FileStreamSink's metadata probe log a benign
-    // FileNotFoundException WITH A FULL STACK TRACE at WARN level —
-    // that was the "stray stack trace through Bench.scala:42" in the
-    // round-2 bench tail (rc=0; nothing actually failed).
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(cpus)
 
     def run(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

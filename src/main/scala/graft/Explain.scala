@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries so the
   * scale posture is reviewable (pushdown reaching the scan, broadcast
   * joins on dims, partial aggregation, codegen spans).
@@ -14,14 +12,7 @@ object Explain {
     // dump match the bench session's exact config (r14: the committed
     // plans/r14/ files are dumped at the bench's 32/32)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(cpus)
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q1_agg", "q2_filter_project", "q3_join_agg", "q4_topk",
         "word_freq", "ann_topk")

@@ -17,6 +17,28 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RelationalQueries.q1Agg(spark, "/root/testdata/sf0.001")
 
+  /** The local session the `Verify`, `Bench`, `Explain` and
+    * `StageProfile` mains run on: `local[cpus]` with as many
+    * shuffle partitions, UTC, no UI, and log level ERROR — reading the
+    * nick_nack/WET fixtures through glob paths makes FileStreamSink's
+    * metadata probe log a benign FileNotFoundException WITH A FULL
+    * STACK TRACE at WARN (nothing fails; every output is still
+    * written). `nanosAsLong` is harmless with the current µs testdata
+    * and kept so a LEGACY ns-precision events.parquet (which Spark 4
+    * otherwise rejects) still reads — as nanos longs, the
+    * Tables.epochMicros BIGINT leg. */
+  def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_agg" -> (RelationalQueries.q1Agg _),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // harmless with the current µs testdata; kept so a LEGACY
-      // ns-precision events.parquet (which Spark 4 otherwise rejects)
-      // still reads — as nanos longs, the Tables.epochMicros BIGINT leg
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // ERROR, not WARN: first-build glob reads of the nick_nack/WET
-    // fixtures make FileStreamSink's metadata probe log a benign
-    // FileNotFoundException stack trace at WARN (same rationale as
-    // Bench); every query output is still written and compared.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(cpus)
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (the driver sets no env): comma-separated
     // query names to dump, for fast oracle iteration via tools/check.py.

@@ -595,29 +595,8 @@ object DedupOps {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bh")
   }
 
-  /** 64-bit hash per 3-shingle of a MATERIALIZED token-array column —
-    * `xxhash64(t1, t2, t3)` chains per-field with the running hash as
-    * seed, so token boundaries are preserved without building the
-    * concatenated shingle STRING (the string form paid a concat +
-    * re-hash per shingle; this is three array lookups and one chained
-    * hash). Collision-free at corpus shingle cardinalities
-    * (P ≈ n²/2⁶⁵), so set COUNTS over these hashes equal counts over
-    * the string-shingle sets and a SQL oracle computing string-list
-    * overlap matches exactly. (The 30-bit [[shingleHashesFrom]] space
-    * exists only for the signature path, where (A·x+B) must fit ANSI
-    * long arithmetic.) `ts` must be a materialized attribute, not a
-    * `split(...)` expression — the lambda references it three times
-    * per element (the nested-HOF re-evaluation trap). */
-  def shingleHashes64(ts: Column): Column = {
-    val n = size(ts)
-    when(n < 3, array(xxhash64(array_join(ts, " "))))
-      .otherwise(transform(sequence(lit(1), n - 2),
-        i => xxhash64(element_at(ts, i), element_at(ts, i + 1),
-          element_at(ts, i + 2))))
-  }
-
   /** SORTED distinct 64-bit shingle-hash sets for exact Jaccard
-    * verification ([[shingleHashes64]] hashes).
+    * verification (`windowHashes64(ts, 3)` hashes).
     *
     * Sorted ONCE per doc so every candidate-pair check is a codegen'd
     * two-pointer merge ([[graft.functions.SortedIntersectCount]])
@@ -626,7 +605,7 @@ object DedupOps {
   def shingleSets(d: DataFrame): DataFrame =
     d.select(col("doc_id"), split(col("text"), " ").as("ts"))
       .select(col("doc_id"),
-        sort_array(array_distinct(shingleHashes64(col("ts")))).as("shs"))
+        sort_array(array_distinct(windowHashes64(col("ts"), 3))).as("shs"))
 
   /** LSH band-bucket candidate pairs: split the signature into
     * `bands`, hash each band, join docs colliding on (band, hash).
@@ -1265,20 +1244,26 @@ object DedupOps {
   // ------------- Exact-substring (passage) dedup -------------
 
   /** 64-bit hash per length-`w` token window (stride 1) of a
-    * MATERIALIZED token-array column — the window generalization of
-    * [[shingleHashes64]]: `xxhash64(t_i, …, t_{i+w-1})` chains
+    * MATERIALIZED token-array column — `w = 3` is the word-3-shingle
+    * hash of every shingle row. `xxhash64(t_i, …, t_{i+w-1})` chains
     * per-field with the running hash as seed, so token boundaries are
-    * preserved without building any window STRING. Docs shorter than
-    * `w` tokens contribute their whole text as one window (mirrors
-    * the shingle short-doc convention, so the SQL oracle's `[text]`
-    * branch lines up). Collision-free at corpus window cardinalities
-    * (P ≈ n²/2⁶⁵), so counts over these hashes equal counts over the
-    * string windows. */
+    * preserved without building any window STRING (the string form
+    * paid a concat + re-hash per window). Docs shorter than `w` tokens
+    * contribute their whole text as one window (so the SQL oracle's
+    * `[text]` branch lines up). Collision-free at corpus window
+    * cardinalities (P ≈ n²/2⁶⁵), so counts over these hashes equal
+    * counts over the string windows. (The 30-bit [[shingleHashesFrom]]
+    * space exists only for the signature path, where (A·x+B) must fit
+    * ANSI long arithmetic.) `ts` must be a materialized attribute, not
+    * a `split(...)` expression — the lambda references it `w` times
+    * per element (the nested-HOF re-evaluation trap). */
   def windowHashes64(ts: Column, w: Int): Column = {
     val n = size(ts)
+    // element `i` itself for the first token (not `i + 0`), so w = 3
+    // plans exactly the expression the shingle rows always planned
     when(n < w, array(xxhash64(array_join(ts, " "))))
-      .otherwise(transform(sequence(lit(1), n - (w - 1)),
-        i => xxhash64(Seq.tabulate(w)(k => element_at(ts, i + k)): _*)))
+      .otherwise(transform(sequence(lit(1), n - (w - 1)), i => xxhash64(
+        Seq.tabulate(w)(k => element_at(ts, if (k == 0) i else i + k)): _*)))
   }
 
   /** Exact-substring (PASSAGE) dedup — the window-hash formulation of
@@ -1644,7 +1629,7 @@ object DedupOps {
     // the na agg) — each AQE stage build re-ran the shingle hashing
     // from the scan. Materialize each once.
     val grams = d
-      .select(col("doc_id"), explode(shingleHashes64(col("ts"))).as("sh"))
+      .select(col("doc_id"), explode(windowHashes64(col("ts"), 3)).as("sh"))
       .distinct()
       .localCheckpoint()
     val rareSh = grams.groupBy(col("sh"))
@@ -1677,7 +1662,7 @@ object DedupOps {
     * alternative to [[dedupMinhash]]'s LSH: no banding, no
     * P(miss) ≤ 2⁻³² footnote; the prefix theorem guarantees ZERO
     * misses. Sets are distinct word-3-gram shingle hashes
-    * ([[shingleHashes64]] — ORDER-SENSITIVE; a token-SET basis
+    * (`windowHashes64(ts, 3)` — ORDER-SENSITIVE; a token-SET basis
     * degenerates on vocab-sharing corpora, where every same-source
     * pair looks 0.8-similar and the pair list goes quadratic in
     * source size: measured 30k token-set pairs vs 25 shingle pairs on
@@ -1720,7 +1705,7 @@ object DedupOps {
     val base = docsDf.select(col("doc_id"), split(col("text"), " ").as("ts"))
       .filter(size(col("ts")) >= 3)
       .select(col("doc_id"),
-        array_distinct(shingleHashes64(col("ts"))).as("hs"))
+        array_distinct(windowHashes64(col("ts"), 3)).as("hs"))
       .localCheckpoint()
     val toks = base.select(col("doc_id"), explode(col("hs")).as("h"))
     val dfreq = toks.groupBy(col("h")).agg(count(lit(1)).as("df"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.GlobalRank
 import graft.sources.Tables
 
 /** Event-stream (batch) workload over the `events` table: time-bucket
@@ -390,18 +391,6 @@ object EventQueries {
       |GROUP BY event_type, pct
       |ORDER BY event_type, pct""".stripMargin
 
-  /** EXACT per-group quantiles — registered as THE `events_quantiles`
-    * row since r12 (the GK sketch [[eventsQuantiles]] is its audited
-    * approximate companion): p50/p95/p99
-    * of value cents per event type via the VALUE-HISTOGRAM running
-    * sum (the ppl_filter trick, per group). pX = min{c : 100·cum ≥
-    * X·n} — all-integer rank compare, no interpolation, no float.
-    *
-    * Scale: the window runs over HISTOGRAM rows (distinct cent
-    * values per type — domain-bounded), never the corpus; one
-    * partial+final agg builds the histogram, one tiny window, one
-    * 5-row summary agg. A corpus-sorting percentile would shuffle
-    * 100 TB; this shuffles the value domain. */
   /** Exact leave-one-out KS drift per EVENT TYPE over the value
     * distribution (integer cents) — [[TextAnalysis.ksOfHist]]'s
     * algebra applied to the metrics domain: "did purchase amounts /
@@ -427,22 +416,20 @@ object EventQueries {
       "SELECT event_type AS source, CAST(round(value * 100) AS BIGINT) AS c FROM events",
       "event_type", "n_events")
 
+  /** EXACT per-group quantiles — registered as THE `events_quantiles`
+    * row since r12 (the GK sketch [[eventsQuantiles]] is its audited
+    * approximate companion): p50/p95/p99 of value cents per event
+    * type, the [[GlobalRank.cuts]] kernel grouped by type. One scan:
+    * the histogram feeds both the running count and `n`. A
+    * corpus-sorting percentile would shuffle 100 TB; this shuffles
+    * the value domain. */
   def eventsQuantilesExact(spark: SparkSession, dir: String): DataFrame = {
     val e = events(spark, dir)
       .select(col("event_type"),
         round(col("value") * 100d).cast("long").as("c"))
-    val hist = e.groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("cnt"))
-    val cum = hist.select(col("event_type"), col("c"),
-      sum(col("cnt")).over(Window.partitionBy(col("event_type"))
-        .orderBy(col("c"))).as("cum"))
-    val n = e.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    cum.join(n, Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(max(col("n")).as("n_events"),
-        min(when(col("cum") * 2 >= col("n"), col("c"))).as("p50_cents"),
-        min(when(col("cum") * 20 >= col("n") * 19, col("c"))).as("p95_cents"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("c"))).as("p99_cents"))
+    GlobalRank.cuts(e, Seq("event_type"), "c", desc = false,
+        ("p50_cents", 1, 2), ("p95_cents", 19, 20), ("p99_cents", 99, 100))
+      .withColumnRenamed("n", "n_events")
       .orderBy(col("event_type"))
   }
 
@@ -468,18 +455,14 @@ object EventQueries {
   /** Inter-event gap distribution — the measurement that justifies a
     * sessionization threshold (events_sessionize hard-codes 30 min;
     * this op is how you'd pick it): per-user consecutive-event gaps
-    * in whole seconds, summarized as exact p50/p90/p99/max through
-    * the value-histogram running sum (the events_quantiles_exact
-    * machinery, global).
+    * in whole seconds, summarized as exact p50/p90/p99/max by the
+    * global [[GlobalRank.cuts]] kernel (max is the p100 cut).
     *
-    * Scale: one user shuffle for the lag window, then the histogram
-    * path — the quantile prefix sum runs over distinct gap-seconds
-    * values, never the event stream, and since r13 it is the
-    * DISTRIBUTED rank-offsets running sum
-    * ([[graft.functions.GlobalRank.withRunningSum]]; r12 verdict #3:
-    * gap-seconds is time-span-bounded, not ppm-bounded — a
-    * multi-year 100 TB event log has ~10⁸ distinct second values, too
-    * many for the previous single-task unpartitioned window). */
+    * Scale: one user shuffle for the lag window, then the kernel over
+    * distinct gap-seconds values, never the event stream. Global cuts
+    * run the distributed prefix scan, not a one-task window:
+    * gap-seconds is time-span-bounded, and a multi-year 100 TB event
+    * log has ~10⁸ distinct second values. */
   def eventsGapStats(spark: SparkSession, dir: String): DataFrame = {
     val gaps = events(spark, dir)
       .select(col("user_id"), col("event_id"), tsMicros.as("us"))
@@ -487,21 +470,10 @@ object EventQueries {
         expr("(us - lag(us) OVER (PARTITION BY user_id " +
           "ORDER BY us, event_id)) DIV 1000000"))
       .filter(col("gap_sec").isNotNull)
-      .select(col("gap_sec"))
-    val hist = gaps.groupBy(col("gap_sec")).agg(count(lit(1)).as("cnt"))
-    val cum = graft.functions.GlobalRank.withRunningSum(hist, "cum",
-      col("cnt"), col("gap_sec"))
-    // n = the LAST prefix sum (Σ histogram counts ≡ |gaps| exactly):
-    // read from the materialized running-sum frame — the previous
-    // gaps.count() re-ran the whole per-user lag window a second
-    // time (r14; the pplFilter fix applied to the same idiom)
-    val n = cum.agg(max(col("cum")).as("n"))
-    cum.crossJoin(broadcast(n))
-      .agg(max(col("n")).as("n_gaps"),
-        min(when(col("cum") * 2 >= col("n"), col("gap_sec"))).as("p50_sec"),
-        min(when(col("cum") * 10 >= col("n") * 9, col("gap_sec"))).as("p90_sec"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("gap_sec"))).as("p99_sec"),
-        max(col("gap_sec")).as("max_sec"))
+    GlobalRank.cuts(gaps, Nil, "gap_sec", desc = false,
+        ("p50_sec", 1, 2), ("p90_sec", 9, 10), ("p99_sec", 99, 100),
+        ("max_sec", 1, 1))
+      .withColumnRenamed("n", "n_gaps")
   }
 
   val eventsGapStatsSql: String =
@@ -828,34 +800,22 @@ object EventQueries {
     * clamped to the EXACT [p05, p99] cents bounds, then summed — the
     * outlier-robust metric a feature/reward pipeline reports when a
     * handful of extreme values would otherwise own the mean. Exact
-    * discrete quantile bounds via the value-histogram running sum (the
-    * [[eventsQuantilesExact]] idiom: pX = min{c : 100·cum ≥ X·n},
-    * all-integer, no interpolation), NOT percentile_approx — the clamp
-    * bound is part of the metric's definition, so it must be
-    * deterministic.
+    * discrete quantile bounds from the [[GlobalRank.cuts]] kernel
+    * grouped by type, NOT percentile_approx — the clamp bound is part
+    * of the metric's definition, so it must be deterministic.
     *
-    * Scale shape: the quantile window runs over HISTOGRAM rows
-    * (distinct cent values per type, domain-bounded) — never a
-    * corpus sort; the |types|-row bounds table is broadcast back, so
-    * the event stream takes exactly two linear passes (histogram agg,
-    * clamp+sum agg), both partial+final. All integer math: cents are
+    * Scale shape: the |types|-row bounds table is broadcast back, so
+    * the event stream takes exactly two linear passes (the kernel's
+    * histogram agg, the clamp+sum agg), both partial+final, and never
+    * a corpus sort. All integer math: cents are
     * exact, sums fit BIGINT, the milli average is an integral DIV of
     * positive operands (the eventsMovingAvg sign discipline). */
   def eventsWinsorize(spark: SparkSession, dir: String): DataFrame = {
     val e = events(spark, dir)
       .select(col("event_type"),
         round(col("value") * 100d).cast("long").as("c"))
-    val hist = e.groupBy(col("event_type"), col("c"))
-      .agg(count(lit(1)).as("cnt"))
-    val cum = hist.select(col("event_type"), col("c"),
-      sum(col("cnt")).over(Window.partitionBy(col("event_type"))
-        .orderBy(col("c"))).as("cum"))
-    val n = e.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val bounds = cum.join(n, Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(min(when(col("cum") * 20 >= col("n"), col("c"))).as("p05_cents"),
-        min(when(col("cum") * 100 >= col("n") * 99, col("c")))
-          .as("p99_cents"))
+    val bounds = GlobalRank.cuts(e, Seq("event_type"), "c", desc = false,
+      ("p05_cents", 1, 20), ("p99_cents", 99, 100)).drop("n")
     e.join(broadcast(bounds), Seq("event_type"))
       .withColumn("w", greatest(col("p05_cents"),
         least(col("p99_cents"), col("c"))))

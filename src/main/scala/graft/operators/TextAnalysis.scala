@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.GlobalRank
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline (BASELINE.json
@@ -30,11 +31,11 @@ object TextAnalysis {
   private def hits(toks: Column, markers: Seq[String]): Column =
     size(filter(toks, t => t.isin(markers: _*))).cast("long")
 
-  /** The (n, d, s, c) quality counters shared by [[qualityScore]],
-    * [[corpusClean]] and [[lengthCurriculum]]: token count, distinct
-    * token count, stopword hits, summed token length. ONE definition
-    * (plus the SQL twin below) so the three call sites cannot drift —
-    * the cross-engine-twin rule from [[TextQueries.seededHashCol]]. */
+  /** The (n, d, s, c) quality counters of [[qualityScored]]: token
+    * count, distinct token count, stopword hits, summed token length.
+    * ONE definition (plus the SQL twin below) so the quality rows
+    * cannot drift — the cross-engine-twin rule from
+    * [[TextQueries.seededHashCol]]. */
   private def qualityPartCols(toks: Column): Seq[Column] = Seq(
     size(toks).cast("long").as("n"),
     size(array_distinct(toks)).cast("long").as("d"),
@@ -62,17 +63,20 @@ object TextAnalysis {
   private val QualityPpmSqlExpr: String =
     "(50 * d + 30 * (n - s) + least(2 * c, 20 * n)) * 1000000 // (100 * n)"
 
+  /** `d`'s `keep` columns, the [[qualityPartCols]] counters over its
+    * `text` tokens, and `quality_ppm` ([[QualityPpmExpr]]) — the one
+    * quality-scored frame every quality row starts from. */
+  private def qualityScored(d: DataFrame, keep: Column*): DataFrame =
+    d.select(keep ++ qualityPartCols(split(col("text"), " ")): _*)
+      .withColumn("quality_ppm", expr(QualityPpmExpr))
+
   /** (doc_id, quality_ppm) over any (doc_id, text, …) frame — the
-    * quality formula shared VERBATIM by the batch [[qualityScore]]
-    * row (same [[qualityPartCols]] + [[QualityPpmExpr]]) and the
-    * ingest door ([[IngestDoor.doorFrame]] /
-    * [[graft.streaming.IngestStreaming.ingestDoorStream]]), so the
+    * [[qualityScored]] frame shared VERBATIM by the batch
+    * [[qualityScore]] row and the ingest door ([[IngestDoor.doorFrame]]
+    * / [[graft.streaming.IngestStreaming.ingestDoorStream]]), so the
     * door's quality gate cannot drift from the standalone row. */
-  private[graft] def qualityPpmOf(d: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
-    d.select(col("doc_id") +: qualityPartCols(toks): _*)
-      .select(col("doc_id"), expr(QualityPpmExpr).as("quality_ppm"))
-  }
+  private[graft] def qualityPpmOf(d: DataFrame): DataFrame =
+    qualityScored(d, col("doc_id")).select(col("doc_id"), col("quality_ppm"))
 
   /** Language ID: count marker-word hits per language, pick the argmax
     * with a fixed priority tie-break (en > es > fr > de), 'und' when
@@ -123,10 +127,8 @@ object TextAnalysis {
     * quality = 0.5·ttr + 0.3·(1−stop_ratio) + 0.2·min(avg_len/10, 1)
     * expressed over the common denominator 100·n:
     * (50·d + 30·(n−s) + min(2·c, 20·n)) · 1e6 DIV (100·n). */
-  def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    docs(spark, dir)
-      .select(col("doc_id") +: qualityPartCols(toks): _*)
+  def qualityScore(spark: SparkSession, dir: String): DataFrame =
+    qualityScored(docs(spark, dir), col("doc_id"))
       .select(
         col("doc_id"),
         col("n").as("n_tokens"),
@@ -135,9 +137,8 @@ object TextAnalysis {
         expr("1000000 * d DIV n").as("ttr_ppm"),
         expr("1000000 * s DIV n").as("stop_ppm"),
         expr("1000 * c DIV n").as("avg_len_milli"),
-        expr(QualityPpmExpr).as("quality_ppm"))
+        col("quality_ppm"))
       .orderBy(col("doc_id"))
-  }
 
   val qualityScoreSql: String =
     s"""SELECT doc_id,
@@ -161,11 +162,8 @@ object TextAnalysis {
   def corpusClean(spark: SparkSession, dir: String,
       minQualityPpm: Long = 600000L,
       keepLangs: Seq[String] = Seq("en", "de", "fr", "es")): DataFrame = {
-    val toks = split(col("text"), " ")
-    val scored = docs(spark, dir)
-      .select(Seq(col("doc_id"), col("lang"), col("text")) ++
-        qualityPartCols(toks): _*)
-      .withColumn("quality_ppm", expr(QualityPpmExpr))
+    val scored = qualityScored(docs(spark, dir),
+        col("doc_id"), col("lang"), col("text"))
       .filter(col("quality_ppm") >= minQualityPpm &&
         col("lang").isInCollection(keepLangs))
     val w = Window.partitionBy(col("text")).orderBy(col("doc_id").asc)
@@ -214,15 +212,13 @@ object TextAnalysis {
     * corpus sides share it) — which equals the heaviest constituent
     * stage (decontaminate alone scans twice); PlanSpec pins that scan
     * count. The near-dup labels arrive as a checkpointed relation
-    * (zero additional scans), the top-P thresholds are
-    * histogram-sized, the pack window shuffles once on source. */
+    * (zero additional scans), the top-P thresholds are the
+    * [[qualityTopP]] cut ([[GlobalRank.cuts]], histogram-sized), the
+    * pack window shuffles once on source. */
   def pretrainPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
     // A: quality + language gate, exact-dedup min-id survivor
-    val scored = docs(spark, dir)
-      .select(Seq(col("doc_id"), col("lang"), col("source"),
-        col("text")) ++ qualityPartCols(toks): _*)
-      .withColumn("quality_ppm", expr(QualityPpmExpr))
+    val scored = qualityScored(docs(spark, dir),
+        col("doc_id"), col("lang"), col("source"), col("text"))
       .filter(col("quality_ppm") >= 600000L &&
         col("lang").isInCollection(Seq("en", "de", "fr", "es")))
     val wDedup = Window.partitionBy(col("text")).orderBy(col("doc_id").asc)
@@ -247,22 +243,11 @@ object TextAnalysis {
     // rows bit-identical.
     val Seq(s2, sh) = ConcurrentLegs.materialize(Seq(
       s1.join(losers, Seq("doc_id"), "left_anti"),
-      docs(spark, dir)
-        .select(col("doc_id"), split(col("text"), " ").as("ts"))
-        .select(col("doc_id"),
-          explode(array_distinct(DedupOps.shingleHashes64(col("ts"))))
-            .as("g"))))
+      docShingles(docs(spark, dir))))
     // C: per-source top-P thresholds over the surviving corpus (the
-    // qualityTopP histogram idiom — no doc-level window)
-    val hist = s2.groupBy(col("source"), col("quality_ppm"))
-      .agg(count(lit(1)).as("c"))
-    val cum = hist.select(col("source"), col("quality_ppm"),
-      sum(col("c")).over(Window.partitionBy(col("source"))
-        .orderBy(col("quality_ppm").desc)).as("cum"))
-    val nPer = s2.groupBy(col("source")).agg(count(lit(1)).as("n"))
-    val thr = cum.join(nPer, Seq("source"))
-      .filter(col("cum") * 100 >= col("n") * QualityTopPct)
-      .groupBy(col("source")).agg(max(col("quality_ppm")).as("thr"))
+    // qualityTopP cut — no doc-level window)
+    val thr = GlobalRank.cuts(s2, Seq("source"), "quality_ppm", desc = true,
+      ("thr", QualityTopPct, 100))
     val s3 = s2.join(broadcast(thr), Seq("source"))
       .filter(col("quality_ppm") >= col("thr"))
     // D: decontaminate — one shingle expansion feeds both sides
@@ -377,7 +362,7 @@ object TextAnalysis {
     * trigrams; the boilerplate set joins back UNHINTED (vocab³-bounded
     * — AQE broadcasts only if measured small); the per-doc ratio is an
     * integer-ppm DIV. The trigram KEY is the chained-xxhash64 of the
-    * token triple ([[DedupOps.shingleHashes64]], the decontaminate /
+    * token triple (`DedupOps.windowHashes64(ts, 3)`, the decontaminate /
     * dedup_minhash idiom): the occurrence stream shuffles twice (DF
     * agg + join-back), so an 8-byte long key instead of a rebuilt
     * trigram STRING cuts both shuffles' volume ~3× and drops the
@@ -390,7 +375,7 @@ object TextAnalysis {
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
     val occ = toks.filter(size(col("ts")) >= 3)
       .select(col("doc_id"),
-        explode(DedupOps.shingleHashes64(col("ts"))).as("tri"))
+        explode(DedupOps.windowHashes64(col("ts"), 3)).as("tri"))
     val boiler = occ.select(col("doc_id"), col("tri")).distinct()
       .groupBy(col("tri")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDocs)
@@ -913,7 +898,7 @@ object TextAnalysis {
   private[graft] def docShingles(d: DataFrame): DataFrame =
     d.select(col("doc_id"), split(col("text"), " ").as("ts"))
       .select(col("doc_id"),
-        explode(array_distinct(DedupOps.shingleHashes64(col("ts"))))
+        explode(array_distinct(DedupOps.windowHashes64(col("ts"), 3)))
           .as("g"))
 
   /** The distinct benchmark shingle set (the doc_id%97 eval slice). */
@@ -993,7 +978,7 @@ object TextAnalysis {
     val sh = docs(spark, dir)
       .select(col("source"), split(col("text"), " ").as("ts"))
       .select(col("source"),
-        explode(array_distinct(DedupOps.shingleHashes64(col("ts"))))
+        explode(array_distinct(DedupOps.windowHashes64(col("ts"), 3)))
           .as("g"))
       .distinct()
     val per = sh.groupBy(col("source")).agg(count(lit(1)).as("n"))
@@ -1274,20 +1259,13 @@ object TextAnalysis {
     * semantics (ties at the threshold all kept — deterministic, no
     * per-tie ordering).
     *
-    * The threshold is computed the SCALABLE exact way: a value
-    * HISTOGRAM (groupBy avg_nll_micro — distinct scores ≪ docs), a
-    * DISTRIBUTED running sum over the sorted distinct values
-    * ([[graft.functions.GlobalRank.withRunningSum]] — r12 verdict #3:
-    * the micro-nat score domain is ~min(N, 2·10⁷), so the previous
-    * unpartitioned `sum().over(Window.orderBy)` could funnel ~10⁷
-    * histogram rows through ONE WindowExec task at 100 TB; the
-    * rank-offsets job keeps the same exact prefix sums with no global
-    * funnel), min value whose cumulative count covers 3n/4, then one
-    * broadcast threshold filter over the scores. No global sort of
-    * the corpus ever happens — the 100 TB alternative for looser
-    * tolerance is percentile_approx (see eventsQuantiles), but
-    * p75-on-integers is exactly computable at scale with this
-    * histogram shape. */
+    * The threshold is the global p75 cut of the [[GlobalRank.cuts]]
+    * kernel (its distributed prefix scan, not a one-task window: the
+    * micro-nat score domain is ~min(N, 2·10⁷)), then one broadcast
+    * threshold filter over the scores. No global sort of the corpus
+    * ever happens — the 100 TB alternative for looser tolerance is
+    * percentile_approx (see eventsQuantiles), but p75-on-integers is
+    * exactly computable at scale from the value histogram. */
   def pplFilter(spark: SparkSession, dir: String): DataFrame = {
     // Materialize the per-doc scores ONCE (r14): left as a view, the
     // whole bigram-LM chain (two vocab² aggs + the corpus join) is
@@ -1299,17 +1277,8 @@ object TextAnalysis {
     val ppl = docPerplexity(spark, dir)
       .select(col("doc_id"), col("avg_nll_micro"))
       .localCheckpoint()
-    val hist = ppl.groupBy(col("avg_nll_micro"))
-      .agg(count(lit(1)).as("c"))
-    val cum = graft.functions.GlobalRank.withRunningSum(hist, "cum",
-      col("c"), col("avg_nll_micro"))
-    // n = the LAST prefix sum (Σ histogram counts ≡ |ppl| exactly) —
-    // read from the materialized running-sum frame instead of a third
-    // pass over the scoring chain
-    val n = cum.agg(max(col("cum")).as("n"))
-    val thr = cum.crossJoin(broadcast(n))
-      .filter(col("cum") * 4 >= col("n") * 3)
-      .agg(min(col("avg_nll_micro")).as("thr"))
+    val thr = GlobalRank.cuts(ppl, Nil, "avg_nll_micro", desc = false,
+      ("thr", 3, 4))
     ppl.crossJoin(broadcast(thr))
       .filter(col("avg_nll_micro") <= col("thr"))
       .select(col("doc_id"), col("avg_nll_micro"))
@@ -1359,30 +1328,17 @@ object TextAnalysis {
     * threshold ALL kept (quantile_disc semantics — deterministic, no
     * per-tie ordering).
     *
-    * Scale shape: the [[pplFilter]] histogram idiom applied PER GROUP —
-    * per-(source, ppm) histogram (distinct ppm values ≤ 10⁶ per
-    * source, ≪ docs), a descending running sum over histogram rows
-    * partitioned by source (never over docs), per-source thresholds
-    * (source-cardinality rows, broadcast back), one filter. No
-    * corpus sort, no doc-level window — the naive per-source
-    * `row_number()` would sort every domain's full doc set. */
+    * Scale shape: the [[GlobalRank.cuts]] kernel grouped by source and
+    * cut descending at `pct/100` — per-source thresholds
+    * (source-cardinality rows, broadcast back), one filter. No corpus
+    * sort, no doc-level window — the naive per-source `row_number()`
+    * would sort every domain's full doc set. */
   def qualityTopP(spark: SparkSession, dir: String,
       pct: Int = QualityTopPct): DataFrame = {
-    val toks = split(col("text"), " ")
-    val scored = docs(spark, dir)
-      .select(Seq(col("doc_id"), col("source")) ++
-        qualityPartCols(toks): _*)
-      .select(col("doc_id"), col("source"),
-        expr(QualityPpmExpr).as("quality_ppm"))
-    val hist = scored.groupBy(col("source"), col("quality_ppm"))
-      .agg(count(lit(1)).as("c"))
-    val cum = hist.select(col("source"), col("quality_ppm"),
-      sum(col("c")).over(Window.partitionBy(col("source"))
-        .orderBy(col("quality_ppm").desc)).as("cum"))
-    val n = scored.groupBy(col("source")).agg(count(lit(1)).as("n"))
-    val thr = cum.join(n, Seq("source"))
-      .filter(col("cum") * 100 >= col("n") * pct)
-      .groupBy(col("source")).agg(max(col("quality_ppm")).as("thr"))
+    val scored = qualityScored(docs(spark, dir), col("doc_id"), col("source"))
+      .select(col("doc_id"), col("source"), col("quality_ppm"))
+    val thr = GlobalRank.cuts(scored, Seq("source"), "quality_ppm",
+      desc = true, ("thr", pct, 100))
     scored.join(broadcast(thr), Seq("source"))
       .filter(col("quality_ppm") >= col("thr"))
       .select(col("doc_id"), col("source"), col("quality_ppm"))
@@ -1440,12 +1396,9 @@ object TextAnalysis {
     * the range split regardless of quality_ppm skew; never a
     * one-reducer sort, never an unbounded window group. */
   def lengthCurriculum(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val scored = docs(spark, dir)
-      .select(col("doc_id") +: qualityPartCols(toks): _*)
-      .select(col("doc_id"), col("n"),
-        expr(QualityPpmExpr).as("quality_ppm"))
-    val (withRank, nn) = graft.functions.GlobalRank.withRank0AndCount(
+    val scored = qualityScored(docs(spark, dir), col("doc_id"))
+      .select(col("doc_id"), col("n"), col("quality_ppm"))
+    val (withRank, nn) = GlobalRank.withRank0AndCount(
       scored, "rank0", col("quality_ppm"), col("doc_id"))
     // NTILE(4): the first nn%4 buckets hold nn DIV 4 + 1 rows, the
     // rest nn DIV 4 (max(...,1) guards the nn<4 fixture case, where
@@ -1502,7 +1455,7 @@ object TextAnalysis {
     val occ = docs(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
       .select(col("doc_id"),
-        explode(array_distinct(DedupOps.shingleHashes64(col("ts"))))
+        explode(array_distinct(DedupOps.windowHashes64(col("ts"), 3)))
           .as("sh"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))
     occ.withColumn("first_doc", min(col("doc_id")).over(w))
@@ -1736,32 +1689,17 @@ object TextAnalysis {
     * here as a continuous score: pct_ppm = 10⁶ · |{docs in source with
     * strictly lower quality}| DIV n_source (ties share a percentile).
     *
-    * Scale shape: the pplFilter value-HISTOGRAM idiom, per source —
-    * one partial-agg shuffle builds the (source, quality_ppm) → count
-    * histogram, the running sum windows over HISTOGRAM rows (bounded
-    * by the ppm value domain, never corpus-length — a source is never
-    * sorted), and one equi-join maps scores back to docs. A 100×
-    * corpus grows only the first partial agg. */
+    * Scale shape: the [[GlobalRank.cumHist]] running count per source
+    * (`cum − cnt` docs strictly below, `n` in the source — histogram
+    * rows, never a sorted source), and one equi-join maps scores back
+    * to docs. A 100× corpus grows only the histogram's partial agg. */
   def qualityCalibrate(spark: SparkSession, dir: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    val scored = docs(spark, dir)
-      .select(Seq(col("doc_id"), col("source")) ++
-        qualityPartCols(toks): _*)
-      .select(col("doc_id"), col("source"),
-        expr(QualityPpmExpr).as("quality_ppm"))
-    val hist = scored.groupBy(col("source"), col("quality_ppm"))
-      .agg(count(lit(1)).as("cnt"))
-    val wLess = Window.partitionBy(col("source"))
-      .orderBy(col("quality_ppm"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.partitionBy(col("source"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val ranked = hist
-      .withColumn("n_less", coalesce(sum(col("cnt")).over(wLess), lit(0L)))
-      .withColumn("n_src", sum(col("cnt")).over(wAll))
-    scored.join(ranked, Seq("source", "quality_ppm"))
+    val scored = qualityScored(docs(spark, dir), col("doc_id"), col("source"))
+      .select(col("doc_id"), col("source"), col("quality_ppm"))
+    scored.join(GlobalRank.cumHist(scored, Seq("source"), "quality_ppm",
+        desc = false), Seq("source", "quality_ppm"))
       .select(col("doc_id"), col("source"), col("quality_ppm"),
-        expr("1000000 * n_less DIV n_src").as("pct_ppm"))
+        expr("1000000 * (cum - cnt) DIV n").as("pct_ppm"))
       .orderBy(col("doc_id"))
   }
 

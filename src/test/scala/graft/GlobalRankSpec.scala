@@ -86,4 +86,52 @@ class GlobalRankSpec extends AnyFunSuite {
     assert(out.count() === 0L)
     assert(out.columns.toSeq === Seq("v", "c", "cum"))
   }
+
+  test("cuts and cumHist equal a brute-force sorted-array replay: " +
+    "grouped ascending and descending, global, ties across a cut, a " +
+    "cut landing exactly on num·n/den, a one-row group, empty input") {
+    import spark.implicits._
+    // a: the p50 ties straddle the cut (cum jumps 1 → 4 across
+    // n/2 = 2.5); b: p50 lands exactly on num·n/den (cum = 2 = 4·1/2);
+    // c: one row; d: a spread with repeats; a null key is no group
+    val rows = Seq("a" -> 1L, "a" -> 2L, "a" -> 2L, "a" -> 2L, "a" -> 3L,
+      "b" -> 10L, "b" -> 20L, "b" -> 30L, "b" -> 40L, "c" -> 7L,
+      (null: String) -> 5L) ++
+      (0 until 60).map(i => "d" -> ((i * 37) % 11).toLong)
+    val df = rows.toDF("g", "v").repartition(3)
+    val qs = Seq(("p10", 1, 10), ("p50", 1, 2), ("p75", 3, 4),
+      ("p100", 1, 1))
+    // the value at 1-based position ⌈num·n/den⌉ of the sorted array
+    def replay(xs: Seq[Long]): Seq[Long] = xs.length.toLong +:
+      qs.map { case (_, num, den) => xs((xs.length * num + den - 1) / den - 1) }
+    for (desc <- Seq(false, true)) {
+      def sorted(xs: Seq[Long]) = if (desc) xs.sorted.reverse else xs.sorted
+      val want = rows.filter(_._1 != null).groupBy(_._1)
+        .map { case (g, xs) => g -> replay(sorted(xs.map(_._2))) }
+      val got = GlobalRank.cuts(df, Seq("g"), "v", desc, qs: _*).collect()
+        .map(r => r.getString(0) -> (1 to 5).map(r.getLong)).toMap
+      assert(got === want, s"grouped, desc = $desc")
+      val all = GlobalRank.cuts(df, Nil, "v", desc, qs: _*).collect()
+        .map(r => (0 to 4).map(r.getLong)).toSeq
+      assert(all === Seq(replay(sorted(rows.map(_._2)))),
+        s"global, desc = $desc")
+    }
+    // cumHist: cnt rows at v, cum rows at or before v, n the group size
+    GlobalRank.cumHist(df, Seq("g"), "v", desc = false).collect()
+      .foreach { r =>
+        val v = r.getAs[Long]("v")
+        val xs = rows.filter(_._1 == r.getAs[String]("g")).map(_._2)
+        assert((r.getAs[Long]("cnt"), r.getAs[Long]("cum"),
+          r.getAs[Long]("n")) === (xs.count(_ == v).toLong,
+          xs.count(_ <= v).toLong, xs.length.toLong))
+      }
+    // empty input: no groups, and the global cut is the one all-null
+    // row every SQL aggregate over an empty relation gives
+    val empty = Seq.empty[(String, Long)].toDF("g", "v")
+    assert(GlobalRank.cuts(empty, Seq("g"), "v", desc = false, qs: _*)
+      .count() === 0L)
+    val none = GlobalRank.cuts(empty, Nil, "v", desc = false, qs: _*)
+      .collect()
+    assert(none.length === 1 && (0 until 5).forall(none(0).isNullAt))
+  }
 }

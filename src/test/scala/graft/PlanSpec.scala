@@ -533,6 +533,13 @@ class PlanSpec extends AnyFunSuite {
       s"expected partial+final aggs on both legs:\n$p")
   }
 
+  test("events_quantiles: one events.parquet scan — the exact-quantile " +
+    "kernel sums n from its histogram, not a second aggregate") {
+    val p = plan(SparkEntry.queries("events_quantiles")(spark, dir))
+    val scans = "Scan parquet".r.findAllIn(p).size
+    assert(scans == 1, s"events_quantiles scans events $scans times:\n$p")
+  }
+
   test("ppl_filter / events_gap_stats: no unpartitioned window — the " +
     "quantile prefix sums ride the distributed rank-offsets job") {
     // r12 verdict #3: these two histogram domains are NOT ppm-bounded
